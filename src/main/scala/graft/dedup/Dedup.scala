@@ -32,18 +32,17 @@ object Dedup {
     * representative per duplicate cluster — the minimum id, deterministic
     * at any parallelism — plus every unpaired document. Near-duplication
     * is not transitive, so the selection closes the pairs into connected
-    * components first (the same diameter-independent alternating-star
-    * contraction as the geometry adjacency groups; duplicate clusters are
-    * tiny, so this is 2–3 rounds of plain shuffles).
+    * components first ([[graft.ops.Adjacency.componentStars]], the same
+    * kernel as the geometry adjacency groups): a per-partition union-find
+    * over the canonical pairs, then alternating-star rounds only while the
+    * edge set is not yet a star forest. Duplicate clusters are small, so a
+    * near-dup graph that fits one partition takes zero rounds.
     *
-    * The component vertex set is the PAIR ENDPOINTS only, never the
-    * corpus: a doc outside every pair keeps comp == id and can never
-    * lose, so running the components over all docs would make every
-    * contraction round corpus-sized for an identical answer (the
-    * near-dup graph is typically orders of magnitude smaller than the
-    * corpus). The corpus pays exactly ONE join — a left_anti against the
-    * (tiny) non-representative endpoint set. Output: one (idCol) row per
-    * survivor.
+    * The kernel's converged star edges are exactly the non-representative
+    * pair endpoints (every non-root vertex, with its root), so they are
+    * the loser set as they stand. A doc outside every pair can never lose,
+    * and the corpus pays exactly ONE join — a left_anti against the
+    * (small) loser set. Output: one (idCol) row per survivor.
     *
     * PRECONDITION: every pair endpoint must be an id present in `docs` —
     * true by construction for every pair generator in this engine (they
@@ -60,16 +59,13 @@ object Dedup {
     val ids = docs.select(col(idCol).cast("long").as("bid"))
     val rawP = pairs.select(col("id_a").cast("long").as("a"),
       col("id_b").cast("long").as("b"))
-    val p = graft.CacheBin.persist(
+    val p =
       if (!validatePairs) rawP
       else rawP
         .join(ids.select(col("bid").as("a")), Seq("a"), "left_semi")
         .join(ids.select(col("bid").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b")))
-    val endpoints = p.select(col("a").as("bid"))
-      .union(p.select(col("b").as("bid"))).distinct()
-    val comps = graft.ops.Adjacency.connectedComponents(endpoints, p)
-    val losers = comps.filter(col("bid") =!= col("comp")).select("bid")
+        .select(col("a"), col("b"))
+    val losers = graft.ops.Adjacency.componentStars(p)._1.select("bid")
     ids.join(losers, Seq("bid"), "left_anti")
       .select(col("bid").as(idCol))
   }

@@ -14,9 +14,9 @@ import graft.layers.Building
   *  1. every ring edge is emitted under a canonical (undirected) segment key
   *     — the "shared-vertex shuffle" of SURVEY §2.5;
   *  2. segment keys with ≥2 owners become adjacency edges;
-  *  3. components form by iterative min-label propagation (join + groupBy
-  *     per round; rounds = component diameter, tiny for wall-sharing
-  *     buildings, and each round is a plain shuffle — scales to any count);
+  *  3. components form by a per-partition union-find followed, only where
+  *     that leaves components split across partitions, by alternating-star
+  *     rounds of plain shuffles ([[componentStars]]) — scales to any count;
   *  4. union per component = interior-edge cancellation (adjacent CCW rings
   *     traverse a shared wall in opposite directions → the pair cancels)
   *     followed by per-component boundary chaining.
@@ -57,8 +57,8 @@ object Adjacency {
       .distinct()
   }
 
-  /** Connected components by min-label propagation. Returns (bid, comp)
-    * where comp = min bid of the component. */
+  /** Connected components: (bid, comp) where comp = min bid of the
+    * component. See [[connectedComponentsWithRounds]]. */
   def connectedComponents(vertices: DataFrame, edges: DataFrame, maxIter: Int = 30): DataFrame =
     connectedComponentsWithRounds(vertices, edges, maxIter)._1
 
@@ -74,145 +74,146 @@ object Adjacency {
   private def ckFresh(df: DataFrame): DataFrame =
     org.apache.spark.sql.GraftRddBridge.freshStatsCopy(df.localCheckpoint())
 
-  /** Connected components via the ALTERNATING-STAR algorithm (the
-    * two-phase scheme of Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SoCC'14): each round rewrites the EDGE SET —
-    * large-star re-attaches every node's larger neighbors to the minimum
-    * of its closed neighborhood, small-star re-attaches its smaller
-    * neighbors (and itself) likewise — until the set stops changing, at
-    * which point the edges form stars rooted at each component's minimum
-    * id.
+  /** Connected components as a left join of `vertices` (bid) on the
+    * converged star edges of [[componentStars]]: a vertex with a star edge
+    * takes its root, every other vertex (isolated, or a component root) is
+    * its own label. Labels are min-ids — deterministic at any parallelism.
+    * Returns (labels, star rounds): a graph the per-partition union-find
+    * pass already solves takes zero rounds. */
+  def connectedComponentsWithRounds(
+      vertices: DataFrame, edges: DataFrame, maxIter: Int = 30): (DataFrame, Int) = {
+    val (stars, rounds) = componentStars(edges, maxIter)
+    val labels = vertices.select(col("bid"))
+      .join(stars, Seq("bid"), "left")
+      .select(col("bid"), coalesce(col("root"), col("bid")).as("comp"))
+    (labels, rounds)
+  }
+
+  /** The components kernel. Returns the converged star edges
+    * (bid, root) — one row per NON-ROOT vertex of the graph (a, b), root =
+    * the min id of its component — and the number of alternating-star
+    * rounds it took. Vertices in no edge, and component roots, have no
+    * row: callers that only need "who is not the representative" (dedup
+    * survivor selection, root rewrites) read this directly instead of
+    * labelling every endpoint.
     *
-    * Why not min-label propagation: a label (even with pointer-jump
-    * shortcuts) moves one EDGE HOP per round, so a high-diameter graph —
-    * an ε-proximity percolation snake at DBSCAN bench scale, a long chain
-    * of wall-sharing buildings — needs Θ(diameter) rounds, and a fixed
-    * round cap then SILENTLY returns unconverged labels (observed: the
-    * 100k-point ε-graph still merging clusters past round 40). The star
-    * operations restructure the graph itself, which converges in
-    * O(log² n) rounds REGARDLESS of diameter (single digits in practice:
-    * 7 rounds on that same ε-graph), and the loud `require` below can
-    * therefore always be enforced.
+    *  1. LOCAL-FIRST CONTRACTION. After the canonical (u > v) distinct,
+    *     a union-find inside each partition of that hash-partitioned
+    *     output replaces every local component by a star on its local
+    *     minimum — exact, because a local component is a subset of a
+    *     global one, so connectivity is unchanged. A graph that fits one
+    *     partition (every small near-dup graph, once AQE coalesces the
+    *     distinct's output) is solved by this pass alone.
+    *  2. ALTERNATING STAR (Kiveris et al., "Connected Components in
+    *     MapReduce and Beyond", SoCC'14) on whatever the local pass left:
+    *     each round rewrites the EDGE SET — large-star re-attaches every
+    *     node's larger neighbors to the minimum of its closed
+    *     neighborhood, small-star re-attaches its smaller neighbors (and
+    *     itself) likewise. Both steps preserve connectivity exactly and
+    *     converge in O(log² n) rounds REGARDLESS of diameter (label
+    *     propagation moves one edge hop per round, so a high-diameter
+    *     ε-graph snake would need Θ(diameter) rounds and a fixed cap would
+    *     silently return unconverged labels).
+    *  3. STAR-FOREST STOP. The alternating-star fixpoint is exactly a star
+    *     forest: every u has one v, and no v is also a u. That is tested
+    *     on the CURRENT edge set — one aggregate plus isEmpty, on the
+    *     local pass's output and after each round — so the loop stops in
+    *     the round that reaches the fixpoint. Two shortcuts keep it cheap
+    *     and exact: a one-partition local pass needs no test (it saw the
+    *     whole graph), and a round whose checkpoint job already found a
+    *     violation inside one partition ([[LocalStars.gate]]) skips it.
+    *
+    * The loud `require` enforces convergence within `maxIter` rounds
+    * instead of returning partial stars. Lineage is cut and Catalyst stats
+    * reset per round (ckFresh). */
+  def componentStars(edges: DataFrame, maxIter: Int = 30): (DataFrame, Int) = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    // run AFTER the distinct: on the caller's partitioning (dedup pairs
+    // arrive partitioned by one endpoint) the local pass leaves most
+    // components split across partitions and every star round still runs
+    val canonical = edges
+      .select(greatest(col("a").cast("long"), col("b").cast("long")).as("u"),
+        least(col("a").cast("long"), col("b").cast("long")).as("v"))
+      .where(col("u") =!= col("v")).distinct()
+    var e = ckFresh(canonical.as[(Long, Long)]
+      .mapPartitions(part => LocalStars.stars(part))
+      .toDF("u", "v"))
+    // in one partition the union-find saw every edge: its stars are final
+    val whole = e.queryExecution.toRdd.getNumPartitions <= 1
+    var rounds = 0
+    var stars = whole || isStarForest(e)
+    while (!stars && rounds < maxIter) {
+      rounds += 1
+      val violations = spark.sparkContext.longAccumulator(s"cc_violations_$rounds")
+      e = ckFresh(starRound(e).as[(Long, Long)]
+        .mapPartitions(part => LocalStars.gate(part, violations))
+        .toDF("u", "v"))
+      // a partition-local violation rides the checkpoint job and settles
+      // "not yet" for free; only a clean round pays the exact test
+      stars = violations.value == 0L && isStarForest(e)
+    }
+    require(stars, s"connectedComponents still churning after $maxIter alternating-star rounds")
+    // partitions may emit the same (node, localMin); a round's output is
+    // already distinct
+    if (rounds == 0 && !whole) e = e.distinct()
+    (e.select(col("u").as("bid"), col("v").as("root")), rounds)
+  }
+
+  /** True iff the canonical (u > v) edge set `e` (duplicate rows allowed)
+    * is a star forest: every u has exactly one v and no v is also a u. */
+  private[ops] def isStarForest(e: DataFrame): Boolean =
+    e.select(col("u").as("n"), col("v").as("p"), lit(false).as("isV"))
+      .union(e.select(col("v").as("n"), lit(null).cast("long").as("p"), lit(true).as("isV")))
+      .groupBy("n").agg(min("p").as("lo"), max("p").as("hi"), max("isV").as("isV"))
+      .where(col("lo") =!= col("hi") || (col("lo").isNotNull && col("isV")))
+      .isEmpty
+
+  /** One alternating-star round over the canonical edge set (u > v),
+    * ending in the canonical distinct.
+    *
+    * Each star phase computes its neighborhood minimum as a per-key HASH
+    * AGGREGATE (map-side combined — the exchange moves node-sized
+    * partials, not edges) re-attached by an equi-join that AQE broadcasts
+    * at node scale and skew-splits at corpus scale; the only edge-sized
+    * exchange per round is the canonical distinct. A mid-r06 formulation
+    * computed the same minimum as an unordered WINDOW sharing the phase's
+    * exchange — and OOMed ScaleDbscan's 2M-point giant component:
+    * WindowExec BUFFERS each partition, and once stars form the component
+    * root's partition is component-sized. Aggregates and joins are the two
+    * operators Spark can skew-handle; the big side is never sorted or
+    * buffered here (AltStarPlanSpec pins the plan).
     *
     *   large-star(u): m = min(Γ(u) ∪ {u}); emit (v, m) for v ∈ Γ(u), v > u
     *   small-star(u): over N⁻(u) = smaller neighbors (edges oriented
-    *     hi→lo): m = min(N⁻(u)); emit (v, m) for v ∈ N⁻(u) ∪ {u}, v ≠ m
-    *
-    * Both steps preserve connectivity exactly (every emitted edge joins
-    * two already-connected nodes; every dropped edge is re-implied via m),
-    * and labels are min-ids — deterministic at any parallelism. Each star
-    * phase is a map-side-combined per-key MIN aggregate (its exchange
-    * carries node-sized partials) plus a re-attach equi-join (AQE
-    * broadcast at node scale, skew-splittable at corpus scale); the only
-    * edge-sized exchange per round is the canonical distinct. The
-    * neighborhood min is deliberately NOT a window sharing the phase
-    * exchange: WindowExec buffers whole partitions, and a star root's
-    * partition is component-sized — the formulation OOMed at 2M points
-    * (skew handling exists for joins and aggregates, not windows).
-    * |E| contracts toward one edge per non-root vertex so late rounds are
-    * cheap; lineage is cut and Catalyst stats reset per round (ckFresh).
-    * Convergence = consecutive edge sets equal. The per-round edge count
-    * rides the checkpoint materialization as an accumulator (ONE job per
-    * round, no separate count action); when consecutive counts match, an
-    * exact full-outer set-equality probe decides convergence — the
-    * accumulator is only a gate, so inflated counts from task retries can
-    * cost an extra probe but never a wrong answer. Returns
-    * (labels, rounds). */
-  def connectedComponentsWithRounds(
-      vertices: DataFrame, edges: DataFrame, maxIter: Int = 30): (DataFrame, Int) = {
-    val spark = vertices.sparkSession
-    import spark.implicits._
-    // checkpoint + edge count + an ORDER-INDEPENDENT content hash-sum
-    // riding the SAME materialization job (no separate count action per
-    // round). Task retries can only INFLATE the accumulator, never shrink
-    // it, and a zero count is exact (retried empty tasks add zero) — so
-    // count and hash-sum are the probe GATE only; convergence itself is
-    // always decided by the exact set-equality job below. The hash-sum
-    // gate matters on contraction plateaus (path graphs hold |E| constant
-    // for several rounds while the sets still churn): without it every
-    // plateau round paid the full-outer probe; with it the probe fires
-    // once, at actual convergence, up to a vanishing 2^-64-scale
-    // coincidence that would only cost one extra (exact) probe.
-    // The typed map costs one encode pass over ≤|E| 16-byte rows.
-    def ckCount(df: DataFrame, tag: String): (DataFrame, Long, Long) = {
-      val acc = spark.sparkContext.longAccumulator(s"cc_edges_$tag")
-      val hacc = spark.sparkContext.longAccumulator(s"cc_hash_$tag")
-      val ck = ckFresh(df.as[(Long, Long)]
-        .map { r =>
-          acc.add(1L)
-          var z = r._1 * 0x9E3779B97F4A7C15L + r._2
-          z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-          hacc.add((z ^ (z >>> 27)) * 0x94D049BB133111EBL)
-          r
-        }.toDF("u", "v"))
-      (ck, acc.value, hacc.value)
-    }
-    // exact undirected-set equality: one full-outer join aggregation —
-    // zero rows unmatched on either side ⟺ identical edge sets (both
-    // inputs are distinct sets by construction)
-    def sameEdgeSet(x: DataFrame, y: DataFrame): Boolean = {
-      val mism = x.withColumn("l", lit(1))
-        .join(y.withColumn("r", lit(1)), Seq("u", "v"), "full_outer")
-        .agg(coalesce(sum(when(col("l").isNull || col("r").isNull, 1L)
-          .otherwise(0L)), lit(0L)))
-        .head.getLong(0)
-      mism == 0L
-    }
-    var (e, prevCnt, prevHash) = ckCount(edges
-      .select(greatest(col("a").cast("long"), col("b").cast("long")).as("u"),
-        least(col("a").cast("long"), col("b").cast("long")).as("v"))
-      .where(col("u") =!= col("v")).distinct(), "init")
-    var it = 0
-    var stable = prevCnt == 0L
-    while (!stable && it < maxIter) {
-      it += 1
-      // Each star phase computes its neighborhood minimum as a per-key
-      // HASH AGGREGATE (map-side combined — the exchange moves node-sized
-      // partials, not edges) re-attached by an equi-join that AQE
-      // broadcasts at node scale and skew-splits at corpus scale. A
-      // mid-r06 formulation computed the same minimum as an unordered
-      // WINDOW sharing the phase's exchange (one fewer pipeline) — and
-      // OOMed ScaleDbscan's 2M-point giant component: WindowExec BUFFERS
-      // each partition, and once stars form the component root's
-      // partition is component-sized. Aggregates and joins are the two
-      // operators Spark can skew-handle (guide §2.5 — windows it cannot);
-      // the big side is never sorted or buffered here.
-      val sym = e.select(col("u").as("a"), col("v").as("b"))
-        .union(e.select(col("v").as("a"), col("u").as("b")))
-      // large-star: m = min(closed neighborhood of a); larger neighbors
-      // re-attach to m. Duplicate (u, v) rows (two a's sharing both m and
-      // a larger neighbor) are harmless — the canonical distinct collapses
-      // them before the count.
-      val e1 = sym
-        .join(sym.groupBy("a").agg(min(col("b")).as("nb")), Seq("a"))
-        .withColumn("m", least(col("a"), col("nb")))
-        .where(col("b") > col("a"))
-        .select(col("b").as("u"), col("m").as("v"))
-        .where(col("u") =!= col("v"))
-      // small-star over the hi→lo orientation (every neighbor here < u,
-      // so m = min(N⁻(u)); the smaller neighbors and u itself re-attach)
-      val (e2, cnt, h) = ckCount(e1
-        .join(e1.groupBy("u").agg(min(col("v")).as("m")), Seq("u"))
-        .select(explode(array(
-          struct(col("v").as("n"), col("m").as("m")),
-          struct(col("u").as("n"), col("m").as("m")))).as("s"))
-        .select(col("s.n").as("n"), col("s.m").as("m"))
-        .where(col("n") =!= col("m"))
-        .select(greatest(col("n"), col("m")).as("u"), least(col("n"), col("m")).as("v"))
-        .distinct(), it.toString)
-      stable = cnt == prevCnt && h == prevHash && sameEdgeSet(e2, e)
-      prevCnt = cnt
-      prevHash = h
-      e = e2
-    }
-    require(stable, s"connectedComponents still churning after $maxIter alternating-star rounds")
-    // at the fixpoint every non-root vertex carries exactly one (u, root)
-    // edge; the min() is belt-and-braces for the labels contract
-    val roots = e.groupBy(col("u").as("bid")).agg(min(col("v")).as("root"))
-    val labels = vertices.select(col("bid"))
-      .join(roots, Seq("bid"), "left")
-      .select(col("bid"), coalesce(col("root"), col("bid")).as("comp"))
-    (labels, it)
+    *     hi→lo): m = min(N⁻(u)); emit (v, m) for v ∈ N⁻(u) ∪ {u}, v ≠ m */
+  private[ops] def starRound(e: DataFrame): DataFrame = {
+    val sym = e.select(col("u").as("a"), col("v").as("b"))
+      .union(e.select(col("v").as("a"), col("u").as("b")))
+    // large-star: m = min(closed neighborhood of a); larger neighbors
+    // re-attach to m. Duplicate (u, v) rows (two a's sharing both m and
+    // a larger neighbor) are harmless — the canonical distinct collapses
+    // them.
+    val e1 = sym
+      .join(sym.groupBy("a").agg(min(col("b")).as("nb")), Seq("a"))
+      .withColumn("m", least(col("a"), col("nb")))
+      .where(col("b") > col("a"))
+      .select(col("b").as("u"), col("m").as("v"))
+      .where(col("u") =!= col("v"))
+    // small-star over the hi→lo orientation (every neighbor here < u, so
+    // m = min(N⁻(u)); the smaller neighbors and u itself re-attach). e1 is
+    // read twice (join probe + aggregate input); the large-star phase runs
+    // once per round only because AQE reuses its exchanges — with
+    // spark.sql.exchange.reuse disabled it would run twice (slower, never
+    // wrong; AltStarPlanSpec's three-shuffle-stage count guards this).
+    e1.join(e1.groupBy("u").agg(min(col("v")).as("m")), Seq("u"))
+      .select(explode(array(
+        struct(col("v").as("n"), col("m").as("m")),
+        struct(col("u").as("n"), col("m").as("m")))).as("s"))
+      .select(col("s.n").as("n"), col("s.m").as("m"))
+      .where(col("n") =!= col("m"))
+      .select(greatest(col("n"), col("m")).as("u"), least(col("n"), col("m")).as("v"))
+      .distinct()
   }
 
   /** Incremental component maintenance for edge DELTAS — the crawl-ingest
@@ -220,11 +221,11 @@ object Adjacency {
     * adds edges (and possibly new vertices). The labeled corpus is NEVER
     * re-solved: each delta edge contracts to its endpoints' current
     * component roots (two equi-joins against `labels`), intra-component
-    * edges drop out, and the alternating-star contraction runs on the
-    * CONTRACTED graph only — vertices = roots the delta touches, edges =
-    * cross-component delta edges — so the iterative work is bounded by
-    * the DELTA, not the corpus. Relabeling is one equi-join on comp
-    * against the root-rewrite map (delta-bounded, so AQE broadcasts it).
+    * edges drop out, and the components kernel runs on the CONTRACTED
+    * graph only — edges = cross-component delta edges — so the iterative
+    * work is bounded by the DELTA, not the corpus. Its star edges ARE the
+    * root-rewrite map (old root → new root, delta-bounded, so AQE
+    * broadcasts it); relabeling is one equi-join on comp against it.
     * Endpoints unseen in `labels` enter as their own singleton components
     * first, so deltas may introduce new vertices.
     *
@@ -252,12 +253,8 @@ object Adjacency {
       .join(la.select(col("bid").as("a"), col("comp").as("ca")), Seq("a"))
       .join(la.select(col("bid").as("b"), col("comp").as("cb")), Seq("b"))
       .select(col("ca").as("a"), col("cb").as("b"))
-      .where(col("a") =!= col("b"))
-    val roots = connectedComponentsWithRounds(
-      contracted.select(explode(array(col("a"), col("b"))).as("bid")).distinct(),
-      contracted, maxIter)._1
-    val rewrite = roots.filter(col("bid") =!= col("comp"))
-      .select(col("bid").as("comp"), col("comp").as("newComp"))
+    val rewrite = componentStars(contracted, maxIter)._1
+      .select(col("bid").as("comp"), col("root").as("newComp"))
     la.join(rewrite, Seq("comp"), "left")
       .select(col("bid"), coalesce(col("newComp"), col("comp")).as("comp"))
   }
@@ -350,5 +347,111 @@ object Adjacency {
         }
       }
       .toDF("parcel_id", "zone", "tile")
+  }
+}
+
+/** Partition-local passes of the components kernel. Node ids are interned
+  * into dense indexes by an open-addressing table of primitive arrays, so
+  * a partition of AQE's full advisory size costs ~20 bytes per distinct
+  * node, never a boxed map entry. */
+private[ops] object LocalStars {
+
+  /** long id → dense index, in first-seen order (`ids(i)` is node i). */
+  final class Interner {
+    private var slots = new Array[Int](1 << 10) // dense index + 1, 0 = empty
+    var ids = new Array[Long](1 << 9)
+    var size = 0
+
+    private def slotOf(x: Long, table: Array[Int]): Int = {
+      val mask = table.length - 1
+      val z = x * 0x9E3779B97F4A7C15L
+      var s = (z ^ (z >>> 32)).toInt & mask
+      while (table(s) != 0 && ids(table(s) - 1) != x) s = (s + 1) & mask
+      s
+    }
+
+    /** Index of `x`, interning it (as index `size - 1`) if new. */
+    def index(x: Long): Int = {
+      val s = slotOf(x, slots)
+      if (slots(s) != 0) slots(s) - 1
+      else {
+        if (size == ids.length) ids = java.util.Arrays.copyOf(ids, size * 2)
+        ids(size) = x; size += 1
+        slots(s) = size
+        if (size * 2 > slots.length) { // keep the load factor ≤ 1/2
+          val grown = new Array[Int](slots.length * 2)
+          var i = 0
+          while (i < size) { grown(slotOf(ids(i), grown)) = i + 1; i += 1 }
+          slots = grown
+        }
+        size - 1
+      }
+    }
+  }
+
+  /** Union-find over one partition's edges: consumes `edges` and yields
+    * (node, localMin) for every node that is not its local component's
+    * minimum. A union points the larger root at the smaller, so a root is
+    * always the minimum of its local component. */
+  def stars(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val nodes = new Interner
+    var parent = new Array[Int](1 << 9)
+    def find(i: Int): Int = { // path halving
+      var r = i
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def node(x: Long): Int = {
+      val n = nodes.size
+      val i = nodes.index(x)
+      if (nodes.size > n) {
+        if (i == parent.length) parent = java.util.Arrays.copyOf(parent, i * 2)
+        parent(i) = i
+      }
+      find(i)
+    }
+    edges.foreach { case (u, v) =>
+      val a = node(u); val b = node(v)
+      if (a != b) { if (nodes.ids(a) < nodes.ids(b)) parent(b) = a else parent(a) = b }
+    }
+    Iterator.range(0, nodes.size).flatMap { i =>
+      val r = find(i)
+      if (r == i) None else Some((nodes.ids(i), nodes.ids(r)))
+    }
+  }
+
+  /** Passes one partition of a canonical (u > v) edge set through
+    * unchanged and adds 1 to `violations` if the partition ALONE shows the
+    * set is not a star forest: a u with two different v's, or a node that
+    * is both a u and a v. Such a violation is global too, so a non-zero
+    * count (task retries only inflate it) is exact proof the loop must go
+    * on; tracking stops at the first one, so an unconverged round pays
+    * little. Zero proves nothing — violations can span partitions. */
+  def gate(edges: Iterator[(Long, Long)],
+           violations: org.apache.spark.util.LongAccumulator): Iterator[(Long, Long)] = {
+    val nodes = new Interner
+    var parentOf = new Array[Long](1 << 9) // for a u: its v
+    var isU = new Array[Boolean](1 << 9)   // false: node seen only as a v
+    var found = false
+    def seen(x: Long): (Int, Boolean) = {
+      val n = nodes.size
+      val i = nodes.index(x)
+      if (i == isU.length) {
+        parentOf = java.util.Arrays.copyOf(parentOf, i * 2)
+        isU = java.util.Arrays.copyOf(isU, i * 2)
+      }
+      (i, nodes.size > n)
+    }
+    edges.map { case e @ (u, v) =>
+      if (!found) {
+        val (iu, newU) = seen(u)
+        if (newU) { isU(iu) = true; parentOf(iu) = v }
+        else found = !isU(iu) || parentOf(iu) != v
+        val (iv, newV) = seen(v)
+        if (!found && !newV) found = isU(iv)
+        if (found) violations.add(1L)
+      }
+      e
+    }
   }
 }

@@ -586,8 +586,8 @@ object WebGraph {
     // so every iteration starts from the conservative default estimate.
     def ck(df: DataFrame): DataFrame =
       org.apache.spark.sql.GraftRddBridge.freshStatsCopy(df.localCheckpoint())
-    // checkpoint + row count riding the SAME materialization (the
-    // alternating-star ckCount idiom): retries only inflate the count,
+    // checkpoint + row count riding the SAME materialization (an
+    // accumulator on the checkpoint job): retries only inflate the count,
     // zero is exact — so emptiness decisions cost no extra action
     val ctr = new java.util.concurrent.atomic.AtomicLong
     def ck2Count(df: DataFrame, tag: String): (DataFrame, Long) = {

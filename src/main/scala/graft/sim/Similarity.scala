@@ -459,8 +459,9 @@ object Similarity {
     * step is an equi-join on `list` (AQE skew-split absorbs dense
     * clusters), verification is one pre-normed [[dot]] per pair — the
     * identical kernel as [[embedNearDups]], so thresholds behave the
-    * same — and survivor selection is the alternating-star component
-    * contraction. Driver state is the centroid matrix only. */
+    * same — and the removed docs are the star edges of the components
+    * kernel over the pairs ([[graft.ops.Adjacency.componentStars]]).
+    * Driver state is the centroid matrix only. */
   def semDeDup(emb: DataFrame, idCol: String, vecCol: String,
                threshold: Double, nlist: Int = 16, iters: Int = 0,
                seedHash: Long => Long = mixSeedHash): DataFrame = {
@@ -468,30 +469,23 @@ object Similarity {
     import spark.implicits._
     val centroids = kmeansCentroids(emb, idCol, vecCol, nlist, iters, seedHash)
     val bC = spark.sparkContext.broadcast(centroids)
-    // read 3× (both pair sides + the component seed), so persist once
+    // read 3× (both pair sides + the losers' list lookup), so persist once
     val assigned = graft.CacheBin.persist(
       emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
         .as[(Long, Array[Float])]
         .map { case (id, v) => (nearestCentroid(v, bC.value)._1, id, v) }
         .toDF("list", "id", "v")
         .withColumn("nv", norm(col("v"))))
-    // pairs feed both the component vertex set and the edge set; persist so
-    // the n²/nlist cluster join runs once
-    val pairs = graft.CacheBin.persist(assigned
+    val pairs = assigned
       .select(col("list"), col("id").as("id_a"), col("v").as("va"), col("nv").as("na"))
       .join(assigned.select(col("list"), col("id").as("id_b"),
         col("v").as("vb"), col("nv").as("nb")), Seq("list"))
       .filter(col("id_a") < col("id_b"))
       .filter(dot(col("va"), col("vb")) / (col("na") * col("nb")) >= threshold)
-      .select("id_a", "id_b"))
-    // vertices = pair endpoints only: docs outside any pair keep comp ==
-    // id and can never be removed, so running the components over the full
-    // corpus would make every contraction round corpus-sized for an
-    // identical result — the component graph is the (tiny) near-dup graph
-    val comps = graft.ops.Adjacency.connectedComponents(
-      pairs.select(explode(array(col("id_a"), col("id_b"))).as("bid")).distinct(),
-      pairs.select(col("id_a").as("a"), col("id_b").as("b")))
-    comps.filter(col("bid") =!= col("comp"))
+      .select(col("id_a").as("a"), col("id_b").as("b"))
+    // the component graph is the (tiny) near-dup graph, never the corpus:
+    // its star edges are exactly the non-representative pair endpoints
+    graft.ops.Adjacency.componentStars(pairs)._1
       .join(assigned.select(col("id").as("bid"), col("list")), "bid")
       .select(col("bid").as(idCol), col("list"))
   }

@@ -179,8 +179,8 @@ object Dbscan {
     // oracle-pinned plans by the work each would do — runtime stats, no
     // tuned constants). The dispatch compares the candidate-pair volume
     // (join-condition evaluations before the rectangle prune) each plan
-    // generates, computed EXACTLY from cell occupancy with decimal sums
-    // (order-independent, overflow-safe at any scale):
+    // generates, computed EXACTLY from cell occupancy with decimal
+    // products and totals (order-independent; see pairVolumeEstimates):
     //  * dense plan: sparse points probe the full Chebyshev-2 s-grid
     //    window (Σ_{a sparse} m_a·Σ_{b∈25win(a)} m_b) plus the
     //    dense↔dense forward-half witness stream
@@ -311,8 +311,10 @@ object Dbscan {
     * per-target source sums next to the target's own mass (the δ=0
     * emission doubles as the self marker), and one scalar aggregate
     * multiplies and totals — one exchange chain, one action, no joins.
-    * Decimal arithmetic end to end: order-independent (a deterministic
-    * plan choice at any parallelism) and overflow-safe at 10^12 points.
+    * The per-target source sums are plain long sums (exact unless a
+    * window's mass nears 2^62 points); the products and totals are
+    * decimal(38,0) — order-independent (a deterministic plan choice at
+    * any parallelism) and overflow-safe at 10^12 points.
     * Volumes counted exactly as the plans generate candidates:
     *  - dense plan: sparse sources emit into all 25 Chebyshev-2 targets
     *    (the spairs stream probes every build cell), dense sources emit

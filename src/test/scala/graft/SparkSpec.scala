@@ -18,6 +18,25 @@ object TestSpark {
   }
   val sf001 = "/root/testdata/sf0.001"
 
+  /** Run `f` with the given SQL confs set on the shared session, restoring
+    * the previous values (or unsetting) afterwards. */
+  def withConf[T](kv: (String, String)*)(f: => T): T = {
+    val conf = spark.conf
+    val prev = kv.map { case (k, _) => k -> conf.getOption(k) }
+    kv.foreach { case (k, v) => conf.set(k, v) }
+    try f
+    finally prev.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
+  /** Eight shuffle partitions that AQE may not coalesce back together, so
+    * a small graph's edges really span partitions. */
+  val eightPartitions: Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+
   /** Independent JVM replica of TextFns.splitBucket (first 48 md5 bits of
     * the decimal id, as unsigned, mod 100) — one shared copy so the
     * parity/sampling/packing specs can't drift apart. */

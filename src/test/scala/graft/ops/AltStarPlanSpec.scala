@@ -15,25 +15,8 @@ class AltStarPlanSpec extends AnyFunSuite {
   lazy val spark = graft.TestSpark.spark
   test("one alternating-star round: three shuffle stages, no Window operator") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val e = (0L until 99L).map(i => (i + 1, i)).toDF("u", "v").localCheckpoint()
-    val sym = e.select(col("u").as("a"), col("v").as("b"))
-      .union(e.select(col("v").as("a"), col("u").as("b")))
-    val e1 = sym
-      .join(sym.groupBy("a").agg(min(col("b")).as("nb")), Seq("a"))
-      .withColumn("m", least(col("a"), col("nb")))
-      .where(col("b") > col("a"))
-      .select(col("b").as("u"), col("m").as("v"))
-      .where(col("u") =!= col("v"))
-    val e2 = e1
-      .join(e1.groupBy("u").agg(min(col("v")).as("m")), Seq("u"))
-      .select(explode(array(
-        struct(col("v").as("n"), col("m").as("m")),
-        struct(col("u").as("n"), col("m").as("m")))).as("s"))
-      .select(col("s.n").as("n"), col("s.m").as("m"))
-      .where(col("n") =!= col("m"))
-      .select(greatest(col("n"), col("m")).as("u"), least(col("n"), col("m")).as("v"))
-      .distinct()
+    val e2 = Adjacency.starRound(e)
     e2.collect()
     val plan = e2.queryExecution.executedPlan.toString
     // AQE prints initial AND final plans: count executed shuffle stages

@@ -11,23 +11,8 @@ class AlternatingStarCcSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def unionFind(n: Long, edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val parent = scala.collection.mutable.Map((0L until n).map(i => i -> i): _*)
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-      r
-    }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    // min-id labels: the root chain always ends at the component min
-    // because union always points the larger root at the smaller
-    (0L until n).map(i => i -> find(i)).toMap
-  }
+  private def unionFind(n: Long, edges: Seq[(Long, Long)]): Map[Long, Long] =
+    UnionFindRef.labels(0L until n, edges)
 
   private def run(n: Long, edges: Seq[(Long, Long)], maxIter: Int = 30): (Map[Long, Long], Int) = {
     val (labels, rounds) = Adjacency.connectedComponentsWithRounds(
@@ -92,15 +77,7 @@ class AlternatingStarCcSpec extends AnyFunSuite {
     val got = Adjacency.incrementalComponents(labels0, delta.toDF("a", "b"))
       .as[(Long, Long)].collect().toMap
     val fullVerts = (0L until n) ++ (300L until 310L) :+ 399L
-    val want = {
-      val parent = scala.collection.mutable.Map(fullVerts.map(i => i -> i): _*)
-      def find(x: Long): Long = { var r = x; while (parent(r) != r) r = parent(r); r }
-      (base ++ delta).foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      fullVerts.map(i => i -> find(i)).toMap
-    }
+    val want = UnionFindRef.labels(fullVerts, base ++ delta)
     assert(got == want)
     assert(got(399L) == 399L)
   }
@@ -115,11 +92,15 @@ class AlternatingStarCcSpec extends AnyFunSuite {
   }
 
   test("round guard fails loudly instead of returning partial labels") {
+    // the path must span partitions: in one partition the local union-find
+    // pass solves it in zero rounds and the guard is never reached
     val n = 400L
     val edges = (0L until n - 1).map(i => (i, i + 1))
-    intercept[IllegalArgumentException] {
-      Adjacency.connectedComponentsWithRounds(
-        (0L until n).toDF("bid"), edges.toDF("a", "b"), maxIter = 1)
+    TestSpark.withConf(TestSpark.eightPartitions: _*) {
+      intercept[IllegalArgumentException] {
+        Adjacency.connectedComponentsWithRounds(
+          (0L until n).toDF("bid"), edges.toDF("a", "b"), maxIter = 1)
+      }
     }
   }
 }

@@ -43,12 +43,17 @@ class AdjacencySpec extends AnyFunSuite {
     import spark.implicits._
     // path 0-1-...-63 (diameter 63): label propagation needs 63 rounds;
     // each alternating-star round roughly halves the path (large-star
-    // rewires every node past its predecessor) — assert <= ceil(log2(63))+2
+    // rewires every node past its predecessor) — assert <= ceil(log2(63))+2.
+    // Eight uncoalesced partitions keep the path split across partitions,
+    // so the bound measures star rounds, not the local union-find pass
     val n = 64
     val vertices = (0L until n.toLong).toDF("bid")
     val edges = (0L until n.toLong - 1).map(i => (i, i + 1)).toDF("a", "b")
-    val (labels, rounds) = Adjacency.connectedComponentsWithRounds(vertices, edges)
-    val comps = labels.as[(Long, Long)].collect().toMap
+    val (labels, rounds) = TestSpark.withConf(TestSpark.eightPartitions: _*) {
+      val (l, r) = Adjacency.connectedComponentsWithRounds(vertices, edges)
+      (l.as[(Long, Long)].collect(), r)
+    }
+    val comps = labels.toMap
     assert(comps.size === n)
     assert(comps.values.forall(_ == 0L))
     val bound = math.ceil(math.log(n - 1.0) / math.log(2)).toInt + 2
