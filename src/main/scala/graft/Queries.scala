@@ -3110,9 +3110,10 @@ object Queries {
       (s, d) => {
         val toks = split(col("text"), " ")
         val docs = tSp(s, d, "documents")
-        // persisted: four consumers read the filter cascade (pair prefix,
-        // pair verify sets, closure vertices, token-count join) — without
-        // the cache each would re-run the langId scoring scan
+        // persisted: three consumers read the filter cascade (the pair
+        // join's one shingle table, the closure's vertex ids, the
+        // token-count join) — without the cache each would re-scan the
+        // documents and re-run the length, langId and repetition filters
         val filtered = graft.CacheBin.persist(docs
           .filter(TextFns.charLen(col("text")) >= 100)
           .filter(TextFns.langId(col("text")) === "en")

@@ -405,36 +405,28 @@ object Dedup {
 
   /** EXACT n-gram Jaccard pair join with PPJoin-style prefix filtering
     * (Vernica et al., VLDB'10): shingles are globally ordered rarest-first
-    * (document frequency asc, shingle asc — a total order), and a record of
-    * size sz only emits its first `sz - ceil(t*sz) + 1` shingles into the
-    * candidate join. Any pair with Jaccard >= t must share a prefix shingle
-    * under that order, so recall is 1.0 — while a boilerplate shingle shared
-    * by k documents sits at the END of the order and stays out of the
-    * prefixes, killing the k² hot-bucket blowup of the naive inverted-index
-    * self-join. Exact Jaccard is then verified per candidate pair. */
+    * (document frequency asc, shingle hash asc — a total order), and a
+    * record of size sz only emits its first `sz - ceil(t*sz) + 1` shingles
+    * into the candidate join. Any pair with Jaccard >= t must share a
+    * prefix shingle under that order, so recall is 1.0 — while a
+    * boilerplate shingle shared by k documents sits at the END of the order
+    * and stays out of the prefixes, killing the k² hot-bucket blowup of the
+    * naive inverted-index self-join. Exact Jaccard is then verified per
+    * candidate pair.
+    *
+    * Every intermediate is computed once ([[shinglePrefixes]]): ONE
+    * persisted shingle-hash table feeds the df aggregate, the prefix and
+    * both verify joins, and both sides of the candidate self-join read the
+    * same prefix. Requires threshold <= 1 (a Jaccard never exceeds 1). */
   def jaccardPairsExact(
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, threshold: Double = 0.6): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = split(col(textCol), " ")
-    // candidate generation shuffles 8-byte shingle HASHES, not strings —
-    // same prefix-filter theorem (any consistent global total order works;
-    // (df, hash) is one), a fraction of the shuffle bytes. A 64-bit hash
-    // collision could only add a candidate pair; exactness comes from the
-    // verify stage either way. The exploded table is persisted (CacheBin —
-    // caller drains) so the document-frequency pass and the ranking pass
-    // read ONE shingle generation instead of two.
-    val sh = graft.CacheBin.persist(docs.select(
-      col(idCol).as("id"),
-      explode(graft.functions.ShingleHash64Expr.shingleHash64(toks, shingleN)).as("sh")))
-    val dfreq = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-    val ranked = sh.join(dfreq, "sh")
-    val byDoc = Window.partitionBy("id")
-    val prefix = ranked
-      .withColumn("pos", row_number().over(byDoc.orderBy(col("df"), col("sh"))))
-      .withColumn("sz", count(lit(1)).over(byDoc))
-      .filter(col("pos") <= col("sz") - ceil(lit(threshold) * col("sz")) + 1)
-      .select("id", "sh", "sz")
+    val (sets, ranked) = shinglePrefixes(docs, idCol, textCol, shingleN, threshold,
+      sz => sz - ceil(lit(threshold) * sz) + 1)
+    // persisted: both sides of the self-join read it, and Spark does not
+    // reuse the second copy of its plan (it plans two ranking shuffles),
+    // so without the cache the ranking would run twice
+    val prefix = graft.CacheBin.persist(ranked)
     // length filter (PPJoin's size bound): J(A,B) >= t forces
     // |A| >= t·|B| and |B| >= t·|A| — incompatible sizes prune in the
     // candidate join itself, before the dedup/verify stages see the pair.
@@ -450,16 +442,7 @@ object Dedup {
           col("b.sz") >= lit(threshold) * col("a.sz") - lit(1e-9))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    // verify over HASHED shingle sets (same 64-bit stream as `sh` above):
-    // |A∩B| / |A∪B| over long arrays equals the string-set Jaccard except
-    // under a 64-bit collision, and shuffles ~3× fewer bytes
-    val sets = docs.select(
-      col(idCol).as("id"),
-      graft.functions.ShingleHash64Expr.shingleHash64(toks, shingleN).as("shs"))
-    cand
-      .join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("shs", "shs_a"), "id_a")
-      .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("shs", "shs_b"), "id_b")
-      .withColumn("inter", size(array_intersect(col("shs_a"), col("shs_b"))).cast("double"))
+    withOverlap(cand, sets)
       .withColumn("jaccard",
         round(col("inter") /
           (size(col("shs_a")) + size(col("shs_b")) - col("inter")), 6))
@@ -488,34 +471,25 @@ object Dedup {
     * join it otherwise mirrors); the df-ascending order keeps the prefix
     * shingles rare so candidate fan-out stays near the true pair count.
     *
-    * Plan at 10^12 docs: ONE codegen'd shingle-hash generation persisted
-    * (CacheBin — caller drains), df aggregate is map-side combined on the
-    * 8-byte hash, the candidate equi-join shuffles constant-width rows,
-    * pairs dedup on ids ALONE, and the exact verify re-attaches the two
-    * hashed shingle sets by id (array_intersect per pair, no corpus-wide
-    * state). Boilerplate hot shingles are the skew risk → AQE skew-split
-    * on the candidate exchange; the fp-epsilon on the size bound only
-    * ADMITS candidates (verify discards), recall stays 1.0. */
+    * Plan at 10^12 docs: the same front half as [[jaccardPairsExact]]
+    * ([[shinglePrefixes]] — ONE persisted shingle-hash table, a map-side
+    * combined df aggregate on the 8-byte hash, one ranking groupBy), the
+    * full side exploded straight from that table, the candidate equi-join
+    * on constant-width rows, pairs dedup on ids ALONE, and the exact
+    * verify re-attaches the two hashed shingle sets by id (array_intersect
+    * per pair, no corpus-wide state). Boilerplate hot shingles are the
+    * skew risk → AQE skew-split on the candidate exchange; the fp-epsilon
+    * on the prefix bound only ADMITS candidates (verify discards), recall
+    * stays 1.0. Requires threshold <= 1. */
   def containmentPairs(
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, threshold: Double = 0.8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = split(col(textCol), " ")
-    val sh = graft.CacheBin.persist(docs.select(
-      col(idCol).as("id"),
-      explode(graft.functions.ShingleHash64Expr.shingleHash64(toks, shingleN)).as("sh")))
-    val dfreq = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-    val ranked = sh.join(dfreq, "sh")
-    val byDoc = Window.partitionBy("id")
-    val withSz = ranked.withColumn("sz", count(lit(1)).over(byDoc))
     // prefix of the prospective MIN side: first |S| - ceil(t·|S|) + 1
     // shingles in (df, hash) order (ceil via the epsilon-guarded fp bound,
     // as in jaccardPairsExact — admits, never drops)
-    val prefix = withSz
-      .withColumn("pos", row_number().over(byDoc.orderBy(col("df"), col("sh"))))
-      .filter(col("pos") <= col("sz") - ceil(lit(threshold) * col("sz") - lit(1e-9)) + 1)
-      .select("id", "sh", "sz")
-    val full = withSz.select("id", "sh", "sz")
+    val (sets, prefix) = shinglePrefixes(docs, idCol, textCol, shingleN, threshold,
+      sz => sz - ceil(lit(threshold) * sz - lit(1e-9)) + 1)
+    val full = sets.select(col("id"), explode(col("shs")).as("sh"), size(col("shs")).as("sz"))
     // a = the smaller set (strictly, sz_a <= sz_b; ties broken by id so
     // each unordered pair is generated exactly once from one direction)
     val cand = prefix.as("a").join(full.as("b"),
@@ -525,18 +499,54 @@ object Dedup {
       .select(least(col("a.id"), col("b.id")).as("id_a"),
         greatest(col("a.id"), col("b.id")).as("id_b"))
       .distinct()
-    val sets = docs.select(
-      col(idCol).as("id"),
-      graft.functions.ShingleHash64Expr.shingleHash64(toks, shingleN).as("shs"))
-    cand
-      .join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("shs", "shs_a"), "id_a")
-      .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("shs", "shs_b"), "id_b")
-      .withColumn("inter", size(array_intersect(col("shs_a"), col("shs_b"))).cast("double"))
+    withOverlap(cand, sets)
       .withColumn("containment",
         round(col("inter") / least(size(col("shs_a")), size(col("shs_b"))), 6))
       .filter(col("containment") >= threshold)
       .select("id_a", "id_b", "containment")
   }
+
+  /** Front half of the exact prefix-filter pair joins. Returns
+    *  - `sets` (id, shs): each document's DISTINCT shingle hashes, from ONE
+    *    codegen'd generation, persisted (CacheBin — caller drains) because
+    *    the df aggregate, the prefix and both verify joins read it;
+    *  - `prefix` (id, sh, sz): the first `prefixLen(sz)` shingles of each
+    *    document in the global (df asc, hash asc) order, sz = |shs|.
+    * Candidate generation shuffles 8-byte shingle HASHES, not strings —
+    * the prefix-filter theorem holds for any consistent global total order
+    * and (df, hash) is one. A 64-bit collision could only add a candidate
+    * pair; exactness comes from the verify stage either way. The ranking
+    * is one groupBy(id) over (df, sh) structs, sorted and sliced in the
+    * row — no window, no second sort. */
+  private def shinglePrefixes(
+      docs: DataFrame, idCol: String, textCol: String, shingleN: Int,
+      threshold: Double, prefixLen: Column => Column): (DataFrame, DataFrame) = {
+    require(threshold <= 1.0, s"pair threshold must be at most 1, got $threshold")
+    val sets = graft.CacheBin.persist(docs.select(
+      col(idCol).as("id"),
+      graft.functions.ShingleHash64Expr.shingleHash64(split(col(textCol), " "), shingleN)
+        .as("shs")))
+    val sh = sets.select(col("id"), explode(col("shs")).as("sh"))
+    val dfreq = sh.groupBy("sh").agg(count(lit(1)).as("df"))
+    val prefix = sh.join(dfreq, "sh")
+      .groupBy("id")
+      .agg(array_sort(collect_list(struct(col("df"), col("sh")))).as("ranked"))
+      .select(col("id"), size(col("ranked")).as("sz"), col("ranked"))
+      .select(col("id"), col("sz"),
+        explode(slice(col("ranked"), lit(1), prefixLen(col("sz")).cast("int"))).as("p"))
+      .select(col("id"), col("p.sh").as("sh"), col("sz"))
+    (sets, prefix)
+  }
+
+  /** Verify side of the pair joins: attach both documents' hashed shingle
+    * sets to the (id_a, id_b) candidates by id and count the overlap
+    * (`inter`). Over 64-bit hashes |A∩B| equals the string-set overlap
+    * except under a collision, and shuffles ~3× fewer bytes. */
+  private def withOverlap(cand: DataFrame, sets: DataFrame): DataFrame =
+    cand
+      .join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("shs", "shs_a"), "id_a")
+      .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("shs", "shs_b"), "id_b")
+      .withColumn("inter", size(array_intersect(col("shs_a"), col("shs_b"))).cast("double"))
 
   /** splitmix64 of FNV-1a — deterministic 64-bit string hash, pure Scala. */
   def hash64(s: String): Long = {

@@ -152,8 +152,8 @@ object TextFns {
 
   def replaceLit(c: Column, find: String, repl: String): Column = replaceAll(c, find, repl)
 
-  /** Stopword-based language id: argmax of per-language stopword hit counts.
-    * n-gram-heuristic class of classifier (deterministic, data-independent). */
+  /** Stopword lexicon of [[langId]] — the single source: the q_lang_id and
+    * q_corpus_clean oracle SQL is generated from it too. */
   val langLexicon: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "and", "of", "to", "a", "in", "is"),
     "es" -> Seq("el", "la", "de", "que", "y", "en", "es"),
@@ -161,19 +161,15 @@ object TextFns {
     "de" -> Seq("der", "die", "und", "das", "ist", "ein", "zu"),
     "zh" -> Seq("的", "是", "了", "在", "我", "有", "和"))
 
-  def langId(text: Column): Column = {
-    val toks = array_distinct(split(lower(text), "[^\\p{L}]+"))
-    val scored = langLexicon.toSeq.sortBy(_._1).map { case (lang, words) =>
-      struct(
-        size(array_intersect(toks, array(words.map(lit): _*))).as("score"),
-        lit(lang).as("lang"))
-    }
-    // argmax by (score, lang desc) -> deterministic
-    val best = scored.reduce { (a, b) =>
-      when(b("score") > a("score"), b).otherwise(a)
-    }
-    when(best("score") > 0, best("lang")).otherwise(lit("und"))
-  }
+  /** Stopword-based language id (n-gram-heuristic class of classifier,
+    * deterministic, data-independent): the language whose stopwords occur
+    * most among the distinct letter-run tokens of `lower(text)`. One native
+    * pass ([[graft.functions.LangIdExpr]]) walks the code points once and
+    * scores all languages together, instead of one split/distinct/intersect
+    * subtree per language. Ties go to the first language in code order
+    * (de, en, es, fr, zh); no stopword at all, or null text, gives "und". */
+  def langId(text: Column): Column =
+    graft.functions.LangIdExpr.langId(lower(text), langLexicon.toSeq.sortBy(_._1))
 
   /** Punctuation ratio, rounded for fp-stable comparison. */
   def punctRatio(text: Column): Column =

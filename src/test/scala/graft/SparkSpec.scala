@@ -17,6 +17,7 @@ object TestSpark {
     s
   }
   val sf001 = "/root/testdata/sf0.001"
+  val sf01: String = java.nio.file.Paths.get(sf001).resolveSibling("sf0.01").toString
 
   /** Run `f` with the given SQL confs set on the shared session, restoring
     * the previous values (or unsetting) afterwards. */
@@ -29,6 +30,25 @@ object TestSpark {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None) => conf.unset(k)
     }
+  }
+
+  /** `f`'s result and the number of Spark jobs started while it runs
+    * (including eager checkpoints). The listener bus is drained on both
+    * sides, so the count is complete. */
+  def jobsOf[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftTestBridge.drainListeners(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = f
+      org.apache.spark.GraftTestBridge.drainListeners(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(l)
   }
 
   /** Eight shuffle partitions that AQE may not coalesce back together, so

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.TestSpark
 import graft.geom.Pt
 import graft.sources.InspireGml
+import graft.RefFixtures
 
 /** Replays AddressLayer golden tests on the reference's own fixtures:
   * test_conflate (14→10, idempotent; test_address.py:115-125) and
@@ -12,10 +13,9 @@ import graft.sources.InspireGml
   * test_address.py:127-149, over address/highway/place.geojson). */
 class AddressNamesGoldenSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  val fx = "/root/reference/test/fixtures"
 
   test("reference golden: address conflate 14 -> 10, idempotent") {
-    val ads = InspireGml.resolvedAddresses(spark, s"$fx/address.gml")
+    val ads = InspireGml.resolvedAddresses(spark, RefFixtures.fixture("address.gml"))
       .select("localId", "TN_text", "designator").collect()
       .map(r => (r.getString(0), Option(r.getString(1)).getOrElse(""), r.getString(2)))
       .toSeq
@@ -27,7 +27,7 @@ class AddressNamesGoldenSpec extends AnyFunSuite {
   }
 
   test("reference golden: get_names translation table") {
-    val addresses = spark.read.option("multiLine", true).json(s"$fx/address.geojson")
+    val addresses = spark.read.option("multiLine", true).json(RefFixtures.fixture("address.geojson"))
       .select(explode(col("features")).as("f"))
       .select(col("f.properties.TN_text").as("tn"),
         col("f.geometry.coordinates").as("c"))
@@ -35,8 +35,8 @@ class AddressNamesGoldenSpec extends AnyFunSuite {
       .map(r => (r.getAs[String]("tn"),
         Pt(r.getSeq[Double](1).head, r.getSeq[Double](1)(1))))
       .toSeq
-    val highways = AddressNames.loadNamed(spark, s"$fx/highway.geojson")
-    val places = AddressNames.loadNamed(spark, s"$fx/place.geojson")
+    val highways = AddressNames.loadNamed(spark, RefFixtures.fixture("highway.geojson"))
+    val places = AddressNames.loadNamed(spark, RefFixtures.fixture("place.geojson"))
     // the Dataset path IS the only get_names flavor; the golden rides it
     val got = {
       import spark.implicits._
@@ -63,7 +63,7 @@ class AddressNamesGoldenSpec extends AnyFunSuite {
 
   test("get_names is partitioning-invariant") {
     import spark.implicits._
-    val addresses = spark.read.option("multiLine", true).json(s"$fx/address.geojson")
+    val addresses = spark.read.option("multiLine", true).json(RefFixtures.fixture("address.geojson"))
       .select(explode(col("features")).as("f"))
       .select(col("f.properties.TN_text").as("tn"),
         col("f.geometry.coordinates").as("c"))
@@ -71,8 +71,8 @@ class AddressNamesGoldenSpec extends AnyFunSuite {
       .map(r => (r.getAs[String]("tn"),
         Pt(r.getSeq[Double](1).head, r.getSeq[Double](1)(1))))
       .toSeq
-    val highways = AddressNames.loadNamed(spark, s"$fx/highway.geojson")
-    val places = AddressNames.loadNamed(spark, s"$fx/place.geojson")
+    val highways = AddressNames.loadNamed(spark, RefFixtures.fixture("highway.geojson"))
+    val places = AddressNames.loadNamed(spark, RefFixtures.fixture("place.geojson"))
     val addrDs = spark.createDataset(addresses.map(a => (a._1, a._2.x, a._2.y)))
     val namedDs = AddressNames.namedRows(spark, highways, places)
     val got = AddressNames.getNamesD(addrDs, namedDs)

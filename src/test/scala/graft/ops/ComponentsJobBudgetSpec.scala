@@ -1,9 +1,8 @@
 package graft.ops
 
-import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.TestSpark
+import graft.TestSpark.jobsOf
 
 /** Job budgets for the components kernel. Spark job counts are
   * deterministic for a fixed input and session configuration (unlike wall
@@ -13,22 +12,6 @@ import graft.TestSpark
 class ComponentsJobBudgetSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  /** Jobs started while `f` runs (including its eager checkpoints). */
-  private def jobsOf[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftTestBridge.drainListeners(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = f
-      org.apache.spark.GraftTestBridge.drainListeners(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   test("keepRepresentatives on a clustered corpus: job budget") {
     // 300 docs; clusters of 2–8 docs joined by non-transitive chains plus

@@ -6,6 +6,7 @@ import graft.geom.{Geom, Pt, Utm}
 import graft.sources.Shapefile
 import graft.spatial.CellGrid
 import Conflate.OsmPoly
+import graft.RefFixtures
 
 /** Replays the start of the reference's test_conflate
   * (test_cons.py:509-548): the real cons.shp block reprojected from UTM 28N
@@ -24,7 +25,7 @@ class ConflateGoldenSpec extends AnyFunSuite {
 
   test("reference golden: conflate marks exactly the documented OSM way") {
     import spark.implicits._
-    val cons = Shapefile.read("/root/reference/test/fixtures/cons.shp")
+    val cons = Shapefile.read(RefFixtures.fixture("cons.shp"))
       .map(f => Utm.reproject(f.geometry, 28))
     def way(id: Long, ref: String, pts: Seq[(Double, Double)]) =
       OsmPoly(id, Map("building" -> "yes", "ref" -> ref),
@@ -51,7 +52,7 @@ class ConflateGoldenSpec extends AnyFunSuite {
   test("reference golden: conflate(delete=True) tail with relations (14->12 ways, 2 rels)") {
     import spark.implicits._
     import Conflate.{OsmRelG, OsmWayG}
-    val cons = Shapefile.read("/root/reference/test/fixtures/cons.shp")
+    val cons = Shapefile.read(RefFixtures.fixture("cons.shp"))
       .map(f => Utm.reproject(f.geometry, 28))
     def w(id: Long, ref: Option[String], pts: (Double, Double)*) =
       OsmWayG(id, ref.map(r => Map("building" -> "yes", "ref" -> r)).getOrElse(Map.empty),

@@ -3,13 +3,14 @@ package graft.ops
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Shapefile
 import BuildingParts.ConsRow
+import graft.RefFixtures
 
 /** Replays test_get_parts (test_cons.py:208-226): the level-grouping laws
   * for ref 8840501CS5284S on the real exploded cons.shp block. */
 class GetPartsGoldenSpec extends AnyFunSuite {
 
   def consRows: Seq[ConsRow] =
-    Shapefile.read("/root/reference/test/fixtures/cons.shp").flatMap { f =>
+    Shapefile.read(RefFixtures.fixture("cons.shp")).flatMap { f =>
       val lid = f.attrs("localId")
       val kind =
         if (lid.contains("_part")) "part"

@@ -6,6 +6,7 @@ import graft.TestSpark
 import graft.geom.{Geom, Pt}
 import graft.sources.{InspireGml, Shapefile}
 import MoveAddress.{Addr, ConsFeature}
+import graft.RefFixtures
 
 /** Replays the reference's test_move_address golden
   * (test/geo/layer/test_cons.py:511-475): its own 14-address GML fixture
@@ -16,7 +17,7 @@ class MoveAddressGoldenSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   def consFeatures: Seq[ConsFeature] =
-    Shapefile.read("/root/reference/test/fixtures/cons.shp").map { f =>
+    Shapefile.read(RefFixtures.fixture("cons.shp")).map { f =>
       val lid = f.attrs("localId")
       ConsFeature(lid, lid.split("_")(0).split("\\.").last,
         graft.ops.ParcelOps.kindOf(lid), f.geometry)
@@ -24,7 +25,7 @@ class MoveAddressGoldenSpec extends AnyFunSuite {
 
   test("reference golden: move_address survivors and classifications") {
     import spark.implicits._
-    val ads = InspireGml.addresses(spark, "/root/reference/test/fixtures/address.gml")
+    val ads = InspireGml.addresses(spark, RefFixtures.fixture("address.gml"))
       .select(col("localId"),
         element_at(split(col("localId"), "\\."), -1).as("ref"),
         col("spec"), col("x"), col("y"))
@@ -70,13 +71,13 @@ class MoveAddressSecondPassSpec extends AnyFunSuite {
     // the reference explodes multiparts first (test_cons.py:522):
     // a multipart building becomes several rows -> building_count > 1
     val cons = spark.createDataset(
-      Shapefile.read("/root/reference/test/fixtures/cons.shp").flatMap { f =>
+      Shapefile.read(RefFixtures.fixture("cons.shp")).flatMap { f =>
         val lid = f.attrs("localId")
         f.geometry.toSeq.map(poly =>
           ConsFeature(lid, lid.split("_")(0).split("\\.").last,
             graft.ops.ParcelOps.kindOf(lid), Array(poly)))
       })
-    val ads = InspireGml.addresses(spark, "/root/reference/test/fixtures/address.gml")
+    val ads = InspireGml.addresses(spark, RefFixtures.fixture("address.gml"))
       .select(org.apache.spark.sql.functions.col("localId"),
         org.apache.spark.sql.functions.element_at(
           org.apache.spark.sql.functions.split(

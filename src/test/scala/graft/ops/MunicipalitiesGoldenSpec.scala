@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.RefFixtures
 
 /** Replays the reference's SHIPPED municipalities.csv (all 7611 rows) from
   * its own input tables (municipalities-cat-ad.csv × municipalities-ign-au
@@ -13,7 +14,6 @@ import graft.TestSpark
   * slice (VERDICT r2 item 9). */
 class MunicipalitiesGoldenSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  val base = "/root/reference/catatom2osm"
 
   private def rows(path: String, cs: java.nio.charset.Charset): Seq[Array[String]] =
     Files.readAllLines(Paths.get(path), cs).asScala.toSeq
@@ -22,13 +22,13 @@ class MunicipalitiesGoldenSpec extends AnyFunSuite {
   test("full municipalities.csv golden through the Dataset cogroup") {
     import spark.implicits._
     // generate_mun_csv reads every table with the platform default (UTF-8)
-    val catAd = rows(s"$base/municipalities-cat-ad.csv", StandardCharsets.UTF_8)
+    val catAd = rows(RefFixtures.pkg("municipalities-cat-ad.csv"), StandardCharsets.UTF_8)
       .map(r => (r(0), r(1), r(2)))
-    val ignAu = rows(s"$base/municipalities-ign-au.csv", StandardCharsets.UTF_8)
+    val ignAu = rows(RefFixtures.pkg("municipalities-ign-au.csv"), StandardCharsets.UTF_8)
       .map(r => (r(0), r(1), r(2)))
-    val old = rows(s"$base/municipalities-old.csv", StandardCharsets.UTF_8)
+    val old = rows(RefFixtures.pkg("municipalities-old.csv"), StandardCharsets.UTF_8)
       .map(r => (r(0), r(1)))
-    val expected = rows(s"$base/municipalities.csv", StandardCharsets.UTF_8)
+    val expected = rows(RefFixtures.pkg("municipalities.csv"), StandardCharsets.UTF_8)
       .map(r => (r(0), r(1), r(2))).toSet
     assert(expected.size === 7611)
 

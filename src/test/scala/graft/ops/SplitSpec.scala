@@ -3,15 +3,15 @@ package graft.ops
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.geom.{Geom, Pt}
+import graft.RefFixtures
 
 /** The -s split boundary filter over the reference's own split fixtures
   * (test/fixtures/split{1,2,3}.geojson) + triangulation/clip laws. */
 class SplitSpec extends AnyFunSuite {
-  val fx = "/root/reference/test/fixtures"
 
   test("split1 (2 Polygons) and split2 (1 MultiPolygon) are the same shape") {
-    val s1 = Split.read(s"$fx/split1.geojson")
-    val s2 = Split.read(s"$fx/split2.geojson")
+    val s1 = Split.read(RefFixtures.fixture("split1.geojson"))
+    val s2 = Split.read(RefFixtures.fixture("split2.geojson"))
     assert(s1.length === 2 && s2.length === 2) // multipolygon explodes to 2
     def areas(ps: Seq[Split.SplitPoly]) =
       ps.map(p => Geom.ringArea(p.outer)).sorted
@@ -20,7 +20,7 @@ class SplitSpec extends AnyFunSuite {
   }
 
   test("signed-fan clip is exact on the concave split rings (self-identity)") {
-    for (p <- Split.read(s"$fx/split1.geojson")) {
+    for (p <- Split.read(RefFixtures.fixture("split1.geojson"))) {
       val area = Geom.ringArea(p.outer)
       assert(math.abs(Geom.clipAreaSimple(p.outer, p.outer) - area) < 1e-6 * area)
       // against a bbox superset: full area; against a disjoint box: zero
@@ -46,7 +46,7 @@ class SplitSpec extends AnyFunSuite {
   }
 
   test("keep: >=50% rule against the real split1 boundary") {
-    val polys = Split.read(s"$fx/split1.geojson")
+    val polys = Split.read(RefFixtures.fixture("split1.geojson"))
     val b = polys.head.outer
     val cx = b.map(_.x).sum / b.length
     val cy = b.map(_.y).sum / b.length
@@ -127,7 +127,7 @@ class SplitSpec extends AnyFunSuite {
   test("filterD runs the rule distributed") {
     val spark = graft.TestSpark.spark
     import spark.implicits._
-    val polys = Split.read(s"$fx/split1.geojson")
+    val polys = Split.read(RefFixtures.fixture("split1.geojson"))
     val b = polys.head.outer
     val cx = b.map(_.x).sum / b.length
     val cy = b.map(_.y).sum / b.length

@@ -5,6 +5,7 @@ import graft.TestSpark
 import graft.geom.Geom
 import graft.sources.Shapefile
 import BuildingParts.ConsRow
+import graft.RefFixtures
 
 /** Replays the reference's test_validate golden (test_cons.py:478-493):
   * after merge_building_parts on the real cons.shp block, the per-building
@@ -13,7 +14,7 @@ class ValidateGoldenSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   def consRows: Seq[ConsRow] =
-    Shapefile.read("/root/reference/test/fixtures/cons.shp").map { f =>
+    Shapefile.read(RefFixtures.fixture("cons.shp")).map { f =>
       val lid = f.attrs("localId")
       val kind =
         if (lid.contains("_part")) "part"

@@ -6,6 +6,7 @@ import graft.TestSpark
 import graft.ops.{MoveAddress, ParcelOps}
 import graft.ops.ParcelOps.{ConsF, Parcel}
 import graft.sources.{InspireGml, OsmOut, Wkb}
+import graft.RefFixtures
 
 /** The end-to-end system test (VERDICT round-1 item 5): one AppRun.run()
   * over the reference's own municipality-38012 fixtures chains every
@@ -31,7 +32,7 @@ class AppRunSpec extends AnyFunSuite {
 
   lazy val result: AppRun.Result = {
     import spark.implicits._
-    val ads = InspireGml.addresses(spark, "/root/reference/test/fixtures/address.gml")
+    val ads = InspireGml.addresses(spark, RefFixtures.fixture("address.gml"))
       .select(col("localId"),
         element_at(split(col("localId"), "\\."), -1).as("ref"),
         col("spec"), col("x"), col("y"))
@@ -104,7 +105,7 @@ class AppRunSpec extends AnyFunSuite {
 
   test("the single Dataset orchestration path is deterministic across runs") {
     import spark.implicits._
-    val ads = InspireGml.addresses(spark, "/root/reference/test/fixtures/address.gml")
+    val ads = InspireGml.addresses(spark, RefFixtures.fixture("address.gml"))
       .select(col("localId"),
         element_at(split(col("localId"), "\\."), -1).as("ref"),
         col("spec"), col("x"), col("y"))
@@ -123,7 +124,7 @@ class AppRunSpec extends AnyFunSuite {
   test("translate.address_tags output flows into the task documents") {
     import spark.implicits._
     val resolved = InspireGml
-      .resolvedAddresses(spark, "/root/reference/test/fixtures/address.gml")
+      .resolvedAddresses(spark, RefFixtures.fixture("address.gml"))
       .select(col("localId"), col("TN_text"), col("designator"),
         col("postCode").cast("string"), col("spec"), col("x"), col("y"))
       .as[(String, String, String, String, String, Double, Double)].collect()

@@ -7,6 +7,7 @@ import graft.TestSpark
 import graft.ops.{MoveAddress, ParcelOps}
 import graft.ops.ParcelOps.{ConsF, Parcel}
 import graft.sources.{InspireGml, Wkb}
+import graft.RefFixtures
 
 /** The reference's stop/resume lifecycle (app.py:581-624) on the REAL
   * 38012 fixtures, generalized to content-addressed stages: every runMulti
@@ -30,7 +31,7 @@ class CheckpointResumeSpec extends AnyFunSuite {
       ConsF(lid, ParcelOps.refOf(lid), ParcelOps.kindOf(lid),
         i("numberOfFloorsAboveGround"), i("numberOfFloorsBelowGround"), g)
     }
-    val ads = InspireGml.addresses(spark, "/root/reference/test/fixtures/address.gml")
+    val ads = InspireGml.addresses(spark, RefFixtures.fixture("address.gml"))
       .select(col("localId"),
         element_at(split(col("localId"), "\\."), -1).as("ref"),
         col("spec"), col("x"), col("y"))

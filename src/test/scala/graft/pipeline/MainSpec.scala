@@ -3,6 +3,7 @@ package graft.pipeline
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.RefFixtures
 
 /** End-to-end CLI run: `graft.pipeline.Main 38023 -b` over the reference's
   * own 38023 Cadastre GML fixtures — files in, task .osm.gz files and
@@ -13,9 +14,8 @@ class MainSpec extends AnyFunSuite {
   private def stage(): String = {
     val dir = Files.createTempDirectory("graft_cli").resolve("38023")
     Files.createDirectories(dir)
-    val fx = "/root/reference/test/fixtures"
     Seq("38023.building.gml", "38023.buildingpart.gml").foreach { f =>
-      Files.copy(Paths.get(s"$fx/$f"), dir.resolve(f),
+      Files.copy(Paths.get(RefFixtures.fixture(f)), dir.resolve(f),
         StandardCopyOption.REPLACE_EXISTING)
     }
     dir.toString
@@ -25,10 +25,9 @@ class MainSpec extends AnyFunSuite {
     // stage a zero-egress "ATOM mirror": reference 38023 fixtures under
     // their canonical served names
     val mirror = Files.createTempDirectory("graft_atom")
-    val fx = "/root/reference/test/fixtures"
-    Files.copy(Paths.get(s"$fx/38023.building.gml"),
+    Files.copy(Paths.get(RefFixtures.fixture("38023.building.gml")),
       mirror.resolve("A.ES.SDGC.BU.38023.building.gml"))
-    Files.copy(Paths.get(s"$fx/38023.buildingpart.gml"),
+    Files.copy(Paths.get(RefFixtures.fixture("38023.buildingpart.gml")),
       mirror.resolve("A.ES.SDGC.BU.38023.buildingpart.gml"))
     val dir = Files.createTempDirectory("graft_dl").resolve("38023")
     Files.createDirectories(dir)
@@ -63,7 +62,6 @@ class MainSpec extends AnyFunSuite {
     // a dir holding only A.ES.SDGC.BU.<code>.zip must process end to end
     val dir = Files.createTempDirectory("graft_zip").resolve("38023")
     Files.createDirectories(dir)
-    val fx = "/root/reference/test/fixtures"
     val zip = new java.util.zip.ZipOutputStream(
       Files.newOutputStream(dir.resolve("A.ES.SDGC.BU.38023.zip")))
     try {
@@ -71,7 +69,7 @@ class MainSpec extends AnyFunSuite {
           "38023.building.gml" -> "A.ES.SDGC.BU.38023.building.gml",
           "38023.buildingpart.gml" -> "A.ES.SDGC.BU.38023.buildingpart.gml")) {
         zip.putNextEntry(new java.util.zip.ZipEntry(entry))
-        zip.write(Files.readAllBytes(Paths.get(s"$fx/$src")))
+        zip.write(Files.readAllBytes(Paths.get(RefFixtures.fixture(src))))
         zip.closeEntry()
       }
     } finally zip.close()
@@ -86,7 +84,7 @@ class MainSpec extends AnyFunSuite {
   test("an empty building layer raises the reference's CatIOError message") {
     val dir = Files.createTempDirectory("graft_empty").resolve("38023")
     Files.createDirectories(dir)
-    Files.copy(Paths.get("/root/reference/test/fixtures/empty.gml"),
+    Files.copy(Paths.get(RefFixtures.fixture("empty.gml")),
       dir.resolve("38023.building.gml"))
     val errs = scala.collection.mutable.ArrayBuffer[String]()
     assert(Main.run(Seq(dir.toString, "-b"),
@@ -122,10 +120,9 @@ class MainSpec extends AnyFunSuite {
   test("full -bd run with the 38012 fixtures: addresses flow through the DAG") {
     val dir = java.nio.file.Files.createTempDirectory("graft_bd").resolve("38012")
     java.nio.file.Files.createDirectories(dir)
-    val fx = "/root/reference/test/fixtures"
     Seq("building.gml", "buildingpart.gml", "othercons.gml", "address.gml")
       .foreach { f =>
-        java.nio.file.Files.copy(java.nio.file.Paths.get(s"$fx/$f"), dir.resolve(f))
+        java.nio.file.Files.copy(java.nio.file.Paths.get(RefFixtures.fixture(f)), dir.resolve(f))
       }
     val out = scala.collection.mutable.ArrayBuffer[String]()
     val io = Main.Io(out = out += _, err = out += _)
@@ -237,7 +234,7 @@ class MainSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_z").resolve("38900")
     java.nio.file.Files.createDirectories(dir)
     java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/reference/test/fixtures/zoning.gml"),
+      java.nio.file.Paths.get(RefFixtures.fixture("zoning.gml")),
       dir.resolve("zoning.gml"))
     val out = scala.collection.mutable.ArrayBuffer[String]()
     val io = Main.Io(out = out += _, err = out += _)
@@ -366,7 +363,7 @@ class MainSpec extends AnyFunSuite {
       java.nio.file.Files.createDirectories(d)
       Seq("building.gml", "buildingpart.gml").foreach { f =>
         java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"/root/reference/test/fixtures/$f"), d.resolve(f))
+          java.nio.file.Paths.get(RefFixtures.fixture(f)), d.resolve(f))
       }
       d.toString
     }
@@ -449,10 +446,9 @@ class MainSpec extends AnyFunSuite {
 
   test("generate_municipalities writes the fuzzy-joined CSV") {
     val dir = Files.createTempDirectory("graft_munis")
-    val fx = "/root/reference/catatom2osm"
     // head-sliced inputs: one province's worth keeps the spec fast
     def slice(name: String, prov: String, provCol: Int): Unit = {
-      val lines = Files.readAllLines(Paths.get(s"$fx/$name")).stream
+      val lines = Files.readAllLines(Paths.get(RefFixtures.pkg(name))).stream
         .filter(l => l.nonEmpty &&
           (provCol < 0 || l.split("\t")(provCol).startsWith(prov)))
         .toArray.map(_.toString)

@@ -1,15 +1,15 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.RefFixtures
 
 /** Replays the reference's ConsLayer.append source-mapping goldens
   * (test_cons.py:96-150) on its own building/buildingpart/othercons GML
   * fixtures, through the engine's from-scratch OGR-GML reader. */
 class CadastreGmlSpec extends AnyFunSuite {
-  val fx = "/root/reference/test/fixtures"
 
   test("test_append_building: condition mapping + localId (test_cons.py:96-110)") {
-    val feats = CadastreGml.read(s"$fx/building.gml")
+    val feats = CadastreGml.read(RefFixtures.fixture("building.gml"))
     assert(feats.nonEmpty)
     val first = feats.head
     val mapped = CadastreGml.toConsAttrs(first)
@@ -21,7 +21,7 @@ class CadastreGmlSpec extends AnyFunSuite {
   }
 
   test("test_append_buildingpart: lev_above mapping (test_cons.py:112-124)") {
-    val feats = CadastreGml.read(s"$fx/buildingpart.gml")
+    val feats = CadastreGml.read(RefFixtures.fixture("buildingpart.gml"))
     assert(feats.nonEmpty)
     val first = feats.head
     val mapped = CadastreGml.toConsAttrs(first)
@@ -31,7 +31,7 @@ class CadastreGmlSpec extends AnyFunSuite {
   }
 
   test("test_append_othercons: nature mapping (test_cons.py:126-138)") {
-    val feats = CadastreGml.read(s"$fx/othercons.gml")
+    val feats = CadastreGml.read(RefFixtures.fixture("othercons.gml"))
     assert(feats.nonEmpty)
     val first = feats.head
     val mapped = CadastreGml.toConsAttrs(first)
@@ -46,7 +46,7 @@ class CadastreGmlSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     // the reference appends 38023.buildingpart.gml TWICE (as building and
     // as buildingpart layers) then runs the full chain
-    val feats = CadastreGml.read(s"$fx/38023.buildingpart.gml")
+    val feats = CadastreGml.read(RefFixtures.fixture("38023.buildingpart.gml"))
     assert(feats.length === 24)
     def consOf(fs: Seq[CadastreGml.CadFeature], asPart: Boolean): Seq[ConsF] =
       fs.map { f =>
@@ -69,9 +69,9 @@ class CadastreGmlSpec extends AnyFunSuite {
   }
 
   test("test_append_cons: openAirPool features survive the combined append") {
-    val all = CadastreGml.read(s"$fx/building.gml") ++
-      CadastreGml.read(s"$fx/buildingpart.gml") ++
-      CadastreGml.read(s"$fx/othercons.gml")
+    val all = CadastreGml.read(RefFixtures.fixture("building.gml")) ++
+      CadastreGml.read(RefFixtures.fixture("buildingpart.gml")) ++
+      CadastreGml.read(RefFixtures.fixture("othercons.gml"))
     val pools = all.filter(f =>
       CadastreGml.toConsAttrs(f)("nature") == "openAirPool")
     assert(pools.nonEmpty, "othercons carries openAirPool features")

@@ -3,12 +3,13 @@ package graft.sources
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
+import graft.RefFixtures
 
 /** Replays the reference's own AddressLayer golden tests
   * (test/geo/layer/test_address.py:48-75) on its own address.gml fixture. */
 class InspireGmlSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  val path = "/root/reference/test/fixtures/address.gml"
+  def path: String = RefFixtures.fixture("address.gml")
 
   test("reference golden: xlink resolve yields the documented ids (test_append)") {
     val first = InspireGml.resolvedAddresses(spark, path)

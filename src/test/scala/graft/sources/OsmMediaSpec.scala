@@ -2,6 +2,7 @@ package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.RefFixtures
 
 class OsmOutSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -142,7 +143,7 @@ class OsmOutSpec extends AnyFunSuite {
   }
 
   test("reference law: to_osm way/relation counts on cons.shp (test_cons.py:495-509)") {
-    val cons = Shapefile.read("/root/reference/test/fixtures/cons.shp")
+    val cons = Shapefile.read(RefFixtures.fixture("cons.shp"))
     val polys = cons.zipWithIndex.map { case (f, i) =>
       (s"${f.attrs("localId")}#$i", f.geometry, Map("building" -> "yes"))
     }
@@ -159,7 +160,7 @@ class OsmOutSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val ads = graft.sources.InspireGml
-      .resolvedAddresses(spark, "/root/reference/test/fixtures/address.gml")
+      .resolvedAddresses(spark, RefFixtures.fixture("address.gml"))
       .select(col("localId"), col("TN_text"), col("designator"), col("x"), col("y"))
       .as[(String, String, String, Double, Double)].collect()
     val nodes = ads.map { case (lid, tn, des, x, y) =>
@@ -277,7 +278,7 @@ class CurrentOsmSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("current.osm parses: 58 nodes, 8 ways, 1 relation; refs resolve via joins") {
     import spark.implicits._
     val xml = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/root/reference/test/fixtures/current.osm"))
+      java.nio.file.Paths.get(RefFixtures.fixture("current.osm")))
     val (nodes, ways, rels) = OsmOut.parseOsm(xml)
     assert(nodes.length === 58)
     assert(ways.length === 8)
@@ -300,7 +301,7 @@ class CurrentOsmSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("JOSM element attrs (action/visible/version/...) round-trip serialize") {
     val xml = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/root/reference/test/fixtures/current.osm"))
+      java.nio.file.Paths.get(RefFixtures.fixture("current.osm")))
     val (nodes, ways, rels) = OsmOut.parseOsm(xml)
     // the JOSM fixture: new (negative-id) elements carry action/visible,
     // already-uploaded ones carry version/timestamp/changeset/uid/user

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.clean.{Feature, Simplify, Topology}
 import graft.geom.{Geom, Pt}
+import graft.RefFixtures
 
 /** Replays golden values of the REFERENCE'S OWN test suite on its own
   * fixture data (test/fixtures/cons.shp — a real cadastre block, 1196
@@ -13,7 +14,7 @@ import graft.geom.{Geom, Pt}
   */
 class ReferenceFixturesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  lazy val features = Shapefile.read("/root/reference/test/fixtures/cons.shp")
+  lazy val features = Shapefile.read(RefFixtures.fixture("cons.shp"))
 
   test("shapefile loads the full cons fixture with attributes") {
     assert(features.length === 1196)
@@ -82,7 +83,7 @@ class ReferenceSimplifySpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("reference golden: simplify vertex removals on cons.shp") {
     import spark.implicits._
-    val features = Shapefile.read("/root/reference/test/fixtures/cons.shp")
+    val features = Shapefile.read(RefFixtures.fixture("cons.shp"))
     // explode_multi_parts: every polygon part becomes one feature; rings
     // (outer + holes) become Feature rows sharing the part id space
     val parts = features.flatMap { f =>
@@ -117,8 +118,8 @@ class ReferenceExplodeSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("reference golden: address-protected explode keeps exactly the addressed multiparts") {
     import org.apache.spark.sql.functions._
-    val features = Shapefile.read("/root/reference/test/fixtures/cons.shp")
-    val refs = InspireGml.addresses(spark, "/root/reference/test/fixtures/address.gml")
+    val features = Shapefile.read(RefFixtures.fixture("cons.shp"))
+    val refs = InspireGml.addresses(spark, RefFixtures.fixture("address.gml"))
       .select(element_at(split(col("localId"), "\\."), -1))
       .collect().map(_.getString(0)).toSet
     val mp0 = features.count(_.geometry.length > 1)

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.geom.{Geom, Pt}
 import graft.ops.{BuildingParts, ParcelOps}
+import graft.RefFixtures
 
 /** Replays the reference's ZoningLayer tests (test/geo/layer/test_zoning.py)
   * on its own zoning.gml fixture, read by the engine's from-scratch INSPIRE
@@ -12,7 +13,7 @@ import graft.ops.{BuildingParts, ParcelOps}
   * all-groups-are-real law. */
 class ZoningGoldenSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  val path = "/root/reference/test/fixtures/zoning.gml"
+  def path: String = RefFixtures.fixture("zoning.gml")
 
   lazy val zones = InspireGml.cadastralZonings(path)
   lazy val urban = zones.filter(_._3 == "M")

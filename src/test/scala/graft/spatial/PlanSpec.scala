@@ -1,6 +1,9 @@
 package graft.spatial
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import graft.TestSpark
 
 /** Plan-shape guards: the flagship join must stay broadcast + codegen. */
@@ -47,6 +50,31 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastNestedLoop") && !plan.contains("Cartesian"),
       s"prefix join must stay an equi-join:\n$plan")
     assert(plan.contains("HashAggregate"), s"expected partial aggregation:\n$plan")
+    // ONE shingle-hash generation feeds the df aggregate, the prefix and
+    // both verify joins (a reused exchange or a re-read cache is not a
+    // second evaluation)
+    val sites = evaluationSites(q.queryExecution.executedPlan, "shingle_hash64")
+    assert(sites.size == 1, s"shingle_hash64 evaluated at ${sites.size} plan nodes:\n" +
+      sites.map(_.simpleString(400)).mkString("\n"))
+    graft.CacheBin.drain()
+  }
+
+  /** Physical nodes whose own expressions call the function `name` —
+    * looking into adaptive query stages and, once per cache, into the plan
+    * an in-memory scan was materialized from. Reused exchanges are leaves,
+    * so a reused subtree is counted where it ran. */
+  private def evaluationSites(plan: SparkPlan, name: String): Seq[SparkPlan] = {
+    val caches = scala.collection.mutable.Set.empty[AnyRef]
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case m: InMemoryTableScanExec =>
+        if (caches.add(m.relation.cacheBuilder)) walk(m.relation.cachedPlan) else Nil
+      case node =>
+        val here = node.expressions.exists(_.exists(_.prettyName == name))
+        (if (here) Seq(node) else Nil) ++ node.children.flatMap(walk)
+    }
+    walk(plan)
   }
 
   test("parquet scan prunes columns for the PIP query") {
