@@ -28,7 +28,7 @@ object CacheBin {
 
   /** Unpersist every registered handle. Non-blocking by default; pass
     * blocking = true when the caller is about to MEASURE memory (e.g.
-    * ScalePipeline's driver-heap probe) so async block-manager cleanup
+    * the pipeline sweep's driver-heap probe) so async block-manager cleanup
     * can't pollute the reading. Handles whose SparkContext has already
     * stopped are simply dropped. */
   def drain(blocking: Boolean = false): Unit = synchronized {

@@ -28,7 +28,8 @@ object Determinism {
   }
 
   def runLevel(cores: Int, sf: String): Map[String, String] = {
-    val spark = Scale.makeSession(cores)
+    val spark = Bench.makeSession(cores.toString)
+    spark.sparkContext.setLogLevel("WARN")
     val out = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, q) =>
       val h =
         try contentHash(q(spark, sf))

@@ -29,14 +29,6 @@ object Queries {
     }.mkString(",")
   final case class Q(fn: (SparkSession, String) => DataFrame, oracle: Option[String])
 
-  /** Admin regions exploded per covering spherical cell (the broadcast dim
-    * side of the geo joins): driver-computed over the 10-row region table. */
-  private def geoRegionSide(s: SparkSession, level: Int): DataFrame =
-    s.createDataFrame(
-      SynthGeo.geoRegionParams.flatMap { case (k, clat, clon, r) =>
-        S2Grid.coverDiamond(clat, clon, r, level).map(c => (c, k, clat, clon, r))
-      }).toDF("cell", "region_id", "clat", "clon", "rr")
-
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
@@ -295,7 +287,7 @@ object Queries {
     "q_geo_join" -> Q(
       (s, d) => SynthGeo.geoTags(s, d)
         .withColumn("cell", S2Grid.cellCol(col("lat"), col("lon"), 6))
-        .join(broadcast(geoRegionSide(s, 6)), "cell")
+        .join(broadcast(S2Grid.regionSide(s, 6)), "cell")
         .where(abs(col("lat") - col("clat")) + abs(col("lon") - col("clon")) < col("rr"))
         .select(col("id"), col("region_id"))
         .orderBy("id", "region_id"),
@@ -325,7 +317,7 @@ object Queries {
           .filter(!graft.ops.UrlOps.hostOfRaw(col("url"))
             .isin(graft.ops.UrlOps.BlockedHosts: _*))
           .withColumn("cell", S2Grid.cellCol(col("lat"), col("lon"), 6))
-          .join(broadcast(geoRegionSide(s, 6)), "cell")
+          .join(broadcast(S2Grid.regionSide(s, 6)), "cell")
           .where(abs(col("lat") - col("clat")) + abs(col("lon") - col("clon")) < col("rr"))
           .groupBy("region_id", "lang")
           .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("tot_chars"))
@@ -448,21 +440,7 @@ object Queries {
     // expansion is a 7-row generator over per-cell COUNTS (not raw rows):
     // corpus pays one partial-agg shuffle, the ring pays a counts-sized one.
     "q_hex_ring" -> Q(
-      (s, d) => {
-        // persist the counts-sized aggregate: it feeds BOTH the ring
-        // explode and the final join — without it the corpus scans twice
-        val cnts = graft.CacheBin.persist(SynthGeo.points(s, d).toDF()
-          .select(HexGrid.cellCol(col("x"), col("y"), 2.5).as("cell"))
-          .groupBy("cell").agg(count(lit(1)).as("n")))
-        val offs = typedLit(0L +: HexGrid.neighborOffsets)
-        val ring = cnts
-          .select(col("cell"), col("n"), explode(offs).as("off"))
-          .select((col("cell") + col("off")).as("tgt"), col("n"))
-          .groupBy("tgt").agg(sum("n").as("ring_n"))
-        cnts.join(ring, cnts("cell") === ring("tgt"))
-          .select(col("cell"), col("n"), col("ring_n"))
-          .orderBy("cell")
-      },
+      (s, d) => HexGrid.ringSmooth(SynthGeo.points(s, d).toDF(), 2.5).orderBy("cell"),
       Some(s"""WITH src AS (${SynthGeo.pointsSql}),
               ${HexGrid.cellSqlCtes(2.5)},
               cnts AS (SELECT cell, count(*) AS n FROM hexcell GROUP BY 1),
@@ -480,18 +458,12 @@ object Queries {
     // join — the cover only shapes the candidate set, so parity never
     // depends on the cover at all.
     "q_hex_join" -> Q(
-      (s, d) => {
-        val zoneSide = s.createDataFrame(
-          SynthGeo.zoneParams.flatMap { case (k, cx, cy, r) =>
-            HexGrid.coverDiamond(cx, cy, r, 7.5).map(c => (c, k, cx, cy, r))
-          }).toDF("cell", "zone_id", "zcx", "zcy", "zr")
-        SynthGeo.points(s, d).toDF()
-          .withColumn("cell", HexGrid.cellCol(col("x"), col("y"), 7.5))
-          .join(broadcast(zoneSide), "cell")
-          .where(abs(col("x") - col("zcx")) + abs(col("y") - col("zcy")) < col("zr"))
-          .select(col("id"), col("zone_id"))
-          .orderBy("id", "zone_id")
-      },
+      (s, d) => SynthGeo.points(s, d).toDF()
+        .withColumn("cell", HexGrid.cellCol(col("x"), col("y"), 7.5))
+        .join(broadcast(HexGrid.zoneSide(s, 7.5)), "cell")
+        .where(abs(col("x") - col("zcx")) + abs(col("y") - col("zcy")) < col("zr"))
+        .select(col("id"), col("zone_id"))
+        .orderBy("id", "zone_id"),
       Some(s"""WITH pts AS (${SynthGeo.pointsSql})
               SELECT p.id, z.zone_id FROM pts p JOIN ${SynthGeo.zonesSql}
               ON abs(p.x - z.cx) + abs(p.y - z.cy) < z.r

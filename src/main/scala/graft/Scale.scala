@@ -4,23 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.spatial.{CellGrid, SpatialJoin, SynthGeo}
 
-/** Scaling-efficiency evidence for the north rule's N→4N criterion.
+/** The flagship job and the shared shuffle counter, used by `graft.Bench`
+  * and by the `flagship` family of [[Sweep]]: deterministic point
+  * synthesis → broadcast cell-join + codegen PIP → per-zone count.
   *
-  * No multi-node cluster exists in this sandbox, so the same flagship job
-  * (deterministic point synthesis → broadcast cell-join + codegen PIP →
-  * per-zone count) runs at several local parallelism levels on the same
-  * input, with partition count scaled with cores. Reports docs/sec at each
-  * and the N→4N efficiencies ( = (thr_4N / thr_N) / 4 ) for 2→8, 4→16, 8→32.
-  * ScaleCalib provides the machine ceiling (embarrassingly parallel codegen
-  * sum) to separate engine scaling from host throttling.
-  *
-  * The point set is the sf0.1 events table replicated REPL× with
+  * The point set is the events table replicated `repl`× with
   * deterministically perturbed coordinates (pure column math, no RNG state).
   */
 object Scale {
-  val Repl = 1500 // 100k events × 1500 = 150M points
 
-  /** Shared shuffle-WRITE-bytes counter (Bench / ScaleDedup / ScaleSimhash):
+  /** Shared shuffle-WRITE-bytes counter (Bench / BenchExtra / Sweep):
     * registers a stage-completion listener and returns the running total —
     * exchange volume is the contention-immune measure of a shuffle diet. */
   def shuffleCounter(spark: SparkSession): java.util.concurrent.atomic.AtomicLong = {
@@ -33,20 +26,6 @@ object Scale {
             sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
       })
     bytes
-  }
-
-  def makeSession(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scale-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 
   /** Deterministic replicated point set, fully inside Catalyst.
@@ -73,37 +52,5 @@ object Scale {
       .groupBy("zone_id").agg(count(lit(1)).as("n"))
       .agg(sum("n")).first()
     repl.toLong * spark.read.parquet(s"$sfDir/events.parquet").count()
-  }
-
-  def timed(cores: Int, sfDir: String, repl: Int): (Double, Long) = {
-    val spark = makeSession(cores)
-    val t0 = System.nanoTime()
-    val rows = flagship(spark, sfDir, repl, cores)
-    val sec = (System.nanoTime() - t0) / 1e9
-    spark.stop()
-    (sec, rows)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    timed(32, sfDir, Repl / 20) // JIT warmup
-    val cores = Seq(2, 4, 8, 16, 32)
-    val runs = cores.map { c =>
-      // constant per-core work (~60M rows/core) so fixed overheads don't
-      // dominate at high core counts; min of 2 runs damps host jitter
-      val repl = 600 * c
-      // min of 3: the sandbox host shows ±30% CPU-contention jitter; the
-      // fastest run is the least-interfered measurement of the engine itself
-      val (sec, rows) = Seq.fill(3)(timed(c, sfDir, repl)).minBy(_._1)
-      (c, sec, rows, rows / sec)
-    }
-    val thr = runs.map(r => r._1 -> r._4).toMap
-    val effs = Seq(2 -> 8, 4 -> 16, 8 -> 32).map { case (n, n4) =>
-      f""""eff_${n}_to_$n4":${(thr(n4) / thr(n)) / 4.0}%.3f"""
-    }.mkString(",")
-    val pts = runs.map { case (c, sec, rows, t) =>
-      f""""local$c":{"sec":$sec%.2f,"rows":$rows,"docs_per_sec":${t.round}}"""
-    }.mkString("{", ",", "}")
-    println(s"""{"job":"flagship_pip_zone_count","points":$pts,$effs}""")
   }
 }

@@ -3,40 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Machine calibration for the scaling benchmark: an embarrassingly parallel
-  * pure-codegen job (range → arithmetic → agg, no shuffle beyond final agg).
-  * Its 8→32-core efficiency is the ceiling this VM can deliver; Scale's
-  * flagship efficiency should be read against it. */
+/** Machine calibration: an embarrassingly parallel pure-codegen job
+  * (range → arithmetic → agg, no shuffle beyond the final agg). Its
+  * efficiency across core counts (the `calib` family of [[Sweep]]) is the
+  * ceiling this host can deliver; other families' efficiencies are read
+  * against it. */
 object ScaleCalib {
 
   /** The shared canary kernel: range → multiply/mod → one agg. Bench's
-    * in-line calib_brow_s and this sweep MUST measure the same kernel. */
+    * in-line calib_brow_s and the calib sweep MUST measure the same kernel. */
   def kernel(s: SparkSession, n: Long, parts: Int): Unit =
     s.range(0, n, 1, parts)
       .select((col("id") * 2654435761L % 1000003L).as("h"))
       .agg(sum("h")).first()
-
-  def run(cores: Int, n: Long): Double = {
-    val s = SparkSession.builder().master(s"local[$cores]")
-      .appName(s"calib-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    val t0 = System.nanoTime()
-    kernel(s, n, cores * 2)
-    val sec = (System.nanoTime() - t0) / 1e9
-    s.stop(); sec
-  }
-
-  def main(a: Array[String]): Unit = {
-    run(32, 100000000L) // warmup
-    val n = 60000000000L
-    val times = Seq(1, 2, 4, 8, 16, 32).map(c => c -> run(c, if (c <= 4) n / 4 else n))
-    val norm = times.map { case (c, t) =>
-      val rate = (if (c <= 4) n / 4 else n) / t / 1e9
-      f""""local$c":{"sec":$t%.2f,"brow_per_sec":$rate%.2f}"""
-    }.mkString("{", ",", "}")
-    println(s"""{"job":"calib_codegen_sum","points":$norm}""")
-  }
 }

@@ -323,7 +323,7 @@ object Dedup {
     * per-ingest SHUFFLE is sized by the BATCH; the corpus side costs one
     * sequential, exchange-free scan per ingest (the unavoidable floor of
     * a join-based probe — what the index eliminates is re-shuffling and
-    * re-sorting the corpus every batch, measured in ScaleIncremental).
+    * re-sorting the corpus every batch, measured by the incremental sweep).
     * The batch self-probe applies the same maxBucket skew cap as the
     * one-shot path; the corpus side was capped at index-write time. */
   def incrementalNearDups(batch: DataFrame, idCol: String, textCol: String,

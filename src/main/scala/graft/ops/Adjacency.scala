@@ -178,7 +178,7 @@ object Adjacency {
     * at node scale and skew-splits at corpus scale; the only edge-sized
     * exchange per round is the canonical distinct. A mid-r06 formulation
     * computed the same minimum as an unordered WINDOW sharing the phase's
-    * exchange — and OOMed ScaleDbscan's 2M-point giant component:
+    * exchange — and OOMed the dbscan sweep's 2M-point giant component:
     * WindowExec BUFFERS each partition, and once stars form the component
     * root's partition is component-sized. Aggregates and joins are the two
     * operators Spark can skew-handle; the big side is never sorted or

@@ -1,6 +1,6 @@
 package graft.spatial
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Planar hexagonal cell index — the H3-res-9 analog of the north star's
@@ -259,5 +259,33 @@ object HexGrid {
       dx += step
     }
     cells.toSeq.sorted
+  }
+
+  /** The broadcast dim side of the hex-keyed zone join: SynthGeo's zones
+    * exploded per covering cell of circumradius `size` (driver-side over
+    * the 12-row dim only). */
+  def zoneSide(s: SparkSession, size: Double): DataFrame =
+    s.createDataFrame(
+      SynthGeo.zoneParams.flatMap { case (k, cx, cy, r) =>
+        coverDiamond(cx, cy, r, size).map(c => (c, k, cx, cy, r))
+      }).toDF("cell", "zone_id", "zcx", "zcy", "zr")
+
+  /** 6-neighbor ring smoothing of (x, y) points: (cell, n, ring_n), where
+    * ring_n counts the points in the cell and its 6 neighbors. The ring is
+    * a 7-row explode over per-cell COUNTS (neighbor ids are id offsets),
+    * so the corpus pays one partial-agg exchange and the ring a
+    * counts-sized one. The counts aggregate is persisted: it feeds both
+    * the ring explode and the final join — one corpus scan, not two. */
+  def ringSmooth(pts: DataFrame, size: Double): DataFrame = {
+    val cnts = graft.CacheBin.persist(pts
+      .select(cellCol(col("x"), col("y"), size).as("cell"))
+      .groupBy("cell").agg(count(lit(1)).as("n")))
+    val offs = typedLit(0L +: neighborOffsets)
+    val ring = cnts
+      .select(col("cell"), col("n"), explode(offs).as("off"))
+      .select((col("cell") + col("off")).as("tgt"), col("n"))
+      .groupBy("tgt").agg(sum("n").as("ring_n"))
+    cnts.join(ring, cnts("cell") === ring("tgt"))
+      .select(col("cell"), col("n"), col("ring_n"))
   }
 }

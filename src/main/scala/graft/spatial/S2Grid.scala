@@ -1,6 +1,6 @@
 package graft.spatial
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Spherical quad-cell index — the S2-level-13 / H3-res-9 shape the north
@@ -171,4 +171,13 @@ object S2Grid {
     }
     cells.toSeq.sorted
   }
+
+  /** The broadcast dim side of the spherical region join: SynthGeo's admin
+    * regions exploded per covering cell at `level` (driver-side over the
+    * 10-row region table). */
+  def regionSide(s: SparkSession, level: Int): DataFrame =
+    s.createDataFrame(
+      SynthGeo.geoRegionParams.flatMap { case (k, clat, clon, r) =>
+        coverDiamond(clat, clon, r, level).map(c => (c, k, clat, clon, r))
+      }).toDF("cell", "region_id", "clat", "clon", "rr")
 }

@@ -42,11 +42,11 @@ object TestSpark {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    org.apache.spark.GraftTestBridge.drainListeners(sc)
+    org.apache.spark.GraftListenerBus.drain(sc)
     sc.addSparkListener(l)
     try {
       val r = f
-      org.apache.spark.GraftTestBridge.drainListeners(sc)
+      org.apache.spark.GraftListenerBus.drain(sc)
       (r, jobs.get)
     } finally sc.removeSparkListener(l)
   }

@@ -9,7 +9,7 @@ import graft.sources.Bucketed
   * only at cache-build time (hidden inside the InMemoryRelation), so the
   * EXECUTED plan of a k-iteration run must contain exactly one exchange
   * per rank update — the partially-aggregated per-dst mass — and nothing
-  * edge-sized. This is the property that made ScaleGraph's 8→32
+  * edge-sized. This is the property that made the graph sweep's 8→32
   * efficiency go from 0.23 (edges re-sorted every round) to the machine
   * ceiling; the spec pins it against regressions. */
 class WebGraphPlanSpec extends AnyFunSuite {
