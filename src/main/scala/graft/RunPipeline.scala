@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Operational entry point — the spark-submit shape of the north rule:
   *
   *   spark-submit --class graft.RunPipeline <jar> <sfDir> <outDir>
@@ -22,14 +20,7 @@ object RunPipeline {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_pipeline"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.makeSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     val t0 = System.nanoTime()

@@ -212,29 +212,6 @@ object Dedup {
       sequence(lit(0), greatest(size(toks) - lit(n), lit(0))),
       i => concat_ws(" ", slice(toks, i + lit(1), lit(n))))
 
-  /** 64-permutation MinHash signature of a shingle array column — native
-    * codegen expression (graft.functions.MinHashSigExpr): one primitive
-    * pass computes all permutation minima. */
-  def minhashSignature(sh: Column, nPerm: Int = 64): Column =
-    graft.functions.MinHashSigExpr.minhashSig(sh, nPerm)
-
-  /** Interpreted HOF formulation, kept for reference/benchmark contrast:
-    * nPerm aggregates over xxhash64-transformed shingles (CodegenFallback,
-    * evaluated per element per permutation). */
-  def minhashSignatureHof(sh: Column, nPerm: Int = 64): Column = {
-    val p = lit(2305843009213693951L) // 2^61 - 1
-    val hashes = transform(sh, s => xxhash64(s))
-    val perms = (0 until nPerm).map { j =>
-      val a = lit(2L * j + 1)
-      val b = lit(0x9E3779B97F4A7C15L + j * 0x6C62272E07BB0142L)
-      aggregate(
-        hashes,
-        lit(Long.MaxValue),
-        (acc, h) => least(acc, pmod(a * h + b, p)))
-    }
-    array(perms: _*)
-  }
-
   /** LSH banding: explode signature into (band_id, band_hash) rows. */
   def lshBands(sig: Column, bands: Int, rows: Int): Column =
     transform(
@@ -347,17 +324,16 @@ object Dedup {
     val batchCand = bOk.as("l")
       .join(bOk.as("r"), col("l.bk") === col("r.bk") && col("l.id") < col("r.id"))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b")).distinct()
-    val bSets = bHashed
-    val cSets = spark.table(s"${prefix}_sets")
-    def verified(cand: DataFrame, aSets: DataFrame): DataFrame = cand
-      .join(aSets.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(bSets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
-      .withColumn("uni", size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-      .withColumn("jaccard", round(col("inter") / col("uni"), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-    verified(crossCand, cSets).unionByName(verified(batchCand, bSets))
+    val bSets = bHashed.withColumnRenamed("sh", "shs")
+    // cross pairs read the two sides from different tables (the bucketed
+    // corpus index and the batch), so they cannot go through withOverlap,
+    // which reads both from one; a union would shuffle the corpus index
+    val crossOverlap = crossCand
+      .join(spark.table(s"${prefix}_sets").select(col("id").as("id_a"), col("sh").as("shs_a")), "id_a")
+      .join(bSets.select(col("id").as("id_b"), col("shs").as("shs_b")), "id_b")
+      .withColumn("inter", size(array_intersect(col("shs_a"), col("shs_b"))).cast("double"))
+    jaccardAtLeast(crossOverlap, threshold)
+      .unionByName(jaccardAtLeast(withOverlap(batchCand, bSets), threshold))
   }
 
   /** Full MinHash-LSH near-dup pipeline: doc (id, text) -> candidate pairs
@@ -392,15 +368,8 @@ object Dedup {
           col("l.id") < col("r.id"))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
       .distinct()
-    val sets = hashed // verify over the cached hashed-shingle sets
-    cand
-      .join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-      .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
-      .withColumn("uni", size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-      .withColumn("jaccard", round(col("inter") / col("uni"), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    // verify over the cached hashed-shingle sets
+    jaccardAtLeast(withOverlap(cand, hashed.withColumnRenamed("sh", "shs")), threshold)
   }
 
   /** EXACT n-gram Jaccard pair join with PPJoin-style prefix filtering
@@ -547,6 +516,15 @@ object Dedup {
       .join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("shs", "shs_a"), "id_a")
       .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("shs", "shs_b"), "id_b")
       .withColumn("inter", size(array_intersect(col("shs_a"), col("shs_b"))).cast("double"))
+
+  /** Exact Jaccard of [[withOverlap]]'s rows, kept at >= threshold. The
+    * sets are distinct hash sets, so |A∪B| = |A| + |B| − |A∩B|. */
+  private def jaccardAtLeast(overlap: DataFrame, threshold: Double): DataFrame =
+    overlap
+      .withColumn("jaccard",
+        round(col("inter") / (size(col("shs_a")) + size(col("shs_b")) - col("inter")), 6))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
 
   /** splitmix64 of FNV-1a — deterministic 64-bit string hash, pure Scala. */
   def hash64(s: String): Long = {

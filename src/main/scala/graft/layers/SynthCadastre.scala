@@ -44,13 +44,6 @@ object SynthCadastre {
       }
   }
 
-  /** bid universe as SQL (same filter as buildings, no geometry):
-    * range over k*5 ids, keep j < k%4+2. */
-  def buildingsSql(sfDir: String): String =
-    s"""SELECT id AS bid, id//5 AS cluster, id%5 AS j
-       |FROM range(0, (SELECT count(*)//100 FROM events) * 5) r(id)
-       |WHERE id%5 < (id//5)%4 + 2""".stripMargin
-
   /** Parcels for tiling: one per building, parts=1, zone = cluster div 10.
     * parts=1 makes the sequential greedy pack (cap 20) coincide with the
     * closed form (rank-1) div 20, which the oracle can express. */

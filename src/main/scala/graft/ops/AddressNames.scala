@@ -129,12 +129,6 @@ object AddressNames {
     }
   }
 
-  def namedHighways(doc: graft.sources.OsmOut.OsmDoc): Seq[Named] =
-    highwaysFromOsm(doc).collect { case (n, pts) if pts.nonEmpty =>
-      Named(n, Geom.BBox(pts.map(_.x).min, pts.map(_.y).min,
-        pts.map(_.x).max, pts.map(_.y).max))
-    }
-
   /** PlaceLayer.read_from_osm (geo/layer/place.py:29-56): every element
     * tagged place+name becomes a POINT — the node itself, the
     * length-weighted centroid of a way polyline (QGIS line centroid), or
@@ -171,9 +165,6 @@ object AddressNames {
     }.flatten
     fromNodes ++ fromWays ++ fromRels
   }
-
-  def namedPlaces(doc: graft.sources.OsmOut.OsmDoc): Seq[Named] =
-    placesFromOsm(doc).map { case (n, p) => Named(n, Geom.BBox(p.x, p.y, p.x, p.y)) }
 
   /** Load a JOSM GeoJSON FeatureCollection's named features with bboxes
     * (Point or LineString), via Spark's JSON reader. */

@@ -3,6 +3,7 @@ package graft.ops
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.GraftJoinHints.noBroadcast
 import graft.geom.{Geom, Pt}
 import graft.layers.Building
 
@@ -184,6 +185,12 @@ object Adjacency {
     * operators Spark can skew-handle; the big side is never sorted or
     * buffered here (AltStarPlanSpec pins the plan).
     *
+    * The edge side of each re-attach join is marked never-broadcast. At
+    * node scale both sides of a join are small, and AQE would otherwise
+    * broadcast whichever of its two leaf stages finishes first: when the
+    * edge side won, the round planned one more stage, so the kernel's job
+    * count followed stage finish order (ComponentsJobBudgetSpec).
+    *
     *   large-star(u): m = min(Γ(u) ∪ {u}); emit (v, m) for v ∈ Γ(u), v > u
     *   small-star(u): over N⁻(u) = smaller neighbors (edges oriented
     *     hi→lo): m = min(N⁻(u)); emit (v, m) for v ∈ N⁻(u) ∪ {u}, v ≠ m */
@@ -194,7 +201,7 @@ object Adjacency {
     // re-attach to m. Duplicate (u, v) rows (two a's sharing both m and
     // a larger neighbor) are harmless — the canonical distinct collapses
     // them.
-    val e1 = sym
+    val e1 = noBroadcast(sym)
       .join(sym.groupBy("a").agg(min(col("b")).as("nb")), Seq("a"))
       .withColumn("m", least(col("a"), col("nb")))
       .where(col("b") > col("a"))
@@ -206,7 +213,7 @@ object Adjacency {
     // once per round only because AQE reuses its exchanges — with
     // spark.sql.exchange.reuse disabled it would run twice (slower, never
     // wrong; AltStarPlanSpec's three-shuffle-stage count guards this).
-    e1.join(e1.groupBy("u").agg(min(col("v")).as("m")), Seq("u"))
+    noBroadcast(e1).join(e1.groupBy("u").agg(min(col("v")).as("m")), Seq("u"))
       .select(explode(array(
         struct(col("v").as("n"), col("m").as("m")),
         struct(col("u").as("n"), col("m").as("m")))).as("s"))

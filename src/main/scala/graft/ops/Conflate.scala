@@ -45,16 +45,6 @@ object Conflate {
     }
   }
 
-  /** Drop non-conflicting OSM polygons (delete=true flavor). */
-  def deleteNonConflicting(
-      osm: Dataset[OsmPoly], cons: Seq[MultiPolygon], grid: CellGrid): Dataset[OsmPoly] = {
-    val spark = osm.sparkSession
-    import spark.implicits._
-    markConflicts(osm, cons, grid)
-      .filter((p: OsmPoly) => !isCandidate(p) || p.tags.contains("conflict"))
-      .map((p: OsmPoly) => p.copy(tags = p.tags - "conflict"))
-  }
-
   // ------------------------------------------------------------------
   // Full-document conflate: ways AND multipolygon relations, the complete
   // semantics of cons.py:524-578 incl. the delete=True flavor and

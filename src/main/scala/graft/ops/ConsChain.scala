@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.clean.{DeleteInvalid, Feature, Simplify, Topology}
-import graft.sources.OsmOut
 import graft.geom.{Geom, Pt}
 import ParcelOps.ConsF
 
@@ -134,27 +133,6 @@ object ConsChain {
   // ------------------------------------------------------------------
 
   final case class FidCons(fid: Long, f: ConsF)
-
-  private def sortKey(f: ConsF): String = {
-    val c = Geom.centroid(f.geometry)
-    f"${f.localId}|${c.x}%.6f|${c.y}%.6f"
-  }
-
-  /** prepare(), distributed, from an unordered Dataset: row identity comes
-    * from a global rank over the canonical sort key (duplicate building
-    * rows then resolve to the max-key row). When the layer's file order
-    * matters — it does for the reference's goldens — use the
-    * `prepareDistributedOrdered` entry with caller-assigned sequence ids. */
-  def prepareDistributed(cons: Dataset[ConsF]): Dataset[ConsF] = {
-    val spark = cons.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val ranked = OsmOut.withGlobalRank(
-      cons.map(f => (sortKey(f), f)).toDF("k", "f"), "k", "fid")
-      .select(col("fid"), col("f")).as[(Long, ConsF)]
-      .map { case (fid, f) => FidCons(fid, f) }
-    prepareDistributedOrdered(ranked)
-  }
 
   // ---- composable distributed stages (AppRun counts between them) ----
 

@@ -88,11 +88,7 @@ object GeoPipeline {
 
     // 5. admin-boundary join: broadcast cover probe + exact refinement
     val regions = cp.stage("regions", s"$fp:regions") {
-      val regionSide = spark.createDataFrame(
-        SynthGeo.geoRegionParams.flatMap { case (k, clat, clon, r) =>
-          S2Grid.coverDiamond(clat, clon, r, 6).map(c => (c, k, clat, clon, r))
-        }).toDF("cell6", "region_id", "clat", "clon", "rr")
-      geotag.join(broadcast(regionSide), "cell6")
+      geotag.join(broadcast(S2Grid.regionSide(spark, 6)), col("cell6") === col("cell"))
         .where(abs(col("lat") - col("clat")) + abs(col("lon") - col("clon")) < col("rr"))
         .select(col("doc_id"), col("region_id"), col("lang"), col("n_chars"))
     }
@@ -136,13 +132,6 @@ object GeoPipeline {
   // full-recompute SQL over base ∪ batch.
   // ------------------------------------------------------------------
 
-  /** Admin-boundary join side: one row per (covering cell, region). */
-  def regionSide(spark: SparkSession, level: Int): DataFrame =
-    spark.createDataFrame(
-      SynthGeo.geoRegionParams.flatMap { case (k, clat, clon, r) =>
-        S2Grid.coverDiamond(clat, clon, r, level).map(c => (c, k, clat, clon, r))
-      }).toDF("cell", "region_id", "clat", "clon", "rr")
-
   /** Mergeable per-url canonical aggregate over any page subset
     * (doc_id, lang, n_chars, url_norm — blocklist already applied). */
   def canonPartial(pages: DataFrame): DataFrame =
@@ -169,7 +158,7 @@ object GeoPipeline {
       .withColumn("lat", SynthGeo.latColOf(col("doc_id")))
       .withColumn("lon", SynthGeo.lonColOf(col("doc_id")))
       .withColumn("cell", S2Grid.cellCol(col("lat"), col("lon"), level))
-      .join(broadcast(regionSide(canon.sparkSession, level)), "cell")
+      .join(broadcast(S2Grid.regionSide(canon.sparkSession, level)), "cell")
       .where(abs(col("lat") - col("clat")) + abs(col("lon") - col("clon")) < col("rr"))
       .select(col("region_id"), col("lang"), col("n_chars"))
 
@@ -303,14 +292,7 @@ object GeoPipeline {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_geo_pipeline"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.makeSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     val cp = new CheckpointedPipeline(spark, outDir)

@@ -42,13 +42,7 @@ object Main {
   def main(args: Array[String]): Unit = {
     val code = run(args.toSeq, Io(), () => {
       val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.ansi.enabled", "false")
-        .getOrCreate()
+      val spark = graft.Bench.makeSession(cpus)
       spark.sparkContext.setLogLevel("WARN")
       spark
     })

@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (Array[Float]).
@@ -21,59 +21,30 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     graft.functions.DotF32Expr.dotF32(a, b)
 
-  /** The HOF formulation, kept for cross-checking the native expression. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Per-vector top-k by (cos DESC, nbr_id ASC) as a typed Aggregator —
-    * the scalable replacement for a row_number window over all candidate
-    * pairs: the window sorts AND fully shuffles every pair; this keeps a
-    * k-bounded buffer per key with map-side partial aggregation, so only
-    * ≤k rows per (vector, partition) reach the exchange. Output order is
-    * identical to the window (total order on (cos, nbr_id)).
-    * TWIN: text/Sampling.scala's BottomKByPrio carries the same buffer
-    * discipline with the comparator reversed — a fix to the fill/compare/
-    * trim hot path here almost certainly applies there too. */
-  private class TopKByCos(k: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[
-        (Long, Long, Double), Seq[(Double, Long)], Seq[(Double, Long)]] {
-    private def trim(b: Seq[(Double, Long)]): Seq[(Double, Long)] =
-      b.sortBy { case (c, n) => (-c, n) }.take(k)
-    private def beats(a: (Double, Long), worst: (Double, Long)): Boolean =
-      a._1 > worst._1 || (a._1 == worst._1 && a._2 < worst._2)
-    def zero: Seq[(Double, Long)] = Seq.empty
-    def reduce(b: Seq[(Double, Long)], a: (Long, Long, Double)): Seq[(Double, Long)] = {
-      // hot path: a full buffer only re-sorts when the candidate actually
-      // beats the current kth element — most pairs exit on one compare
-      val cand = (a._3, a._2)
-      if (b.length < k) trim(b :+ cand)
-      else if (beats(cand, b.last)) trim(b.init :+ cand)
-      else b
-    }
-    def merge(b1: Seq[(Double, Long)], b2: Seq[(Double, Long)]): Seq[(Double, Long)] =
-      trim(b1 ++ b2)
-    def finish(r: Seq[(Double, Long)]): Seq[(Double, Long)] = trim(r)
-    def bufferEncoder: org.apache.spark.sql.Encoder[Seq[(Double, Long)]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-    def outputEncoder: org.apache.spark.sql.Encoder[Seq[(Double, Long)]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
+  /** Per-vector top-k by (cos DESC, nbr_id ASC) over (vec_id, nbr_id, cos)
+    * pairs: [[graft.ops.BottomK]] on priority −cos, so only ≤k rows per
+    * (vector, partition) reach the exchange. Elements are (−cos, nbr_id,
+    * cos) in rank order — the order a row_number window would give. */
+  private def topKByCos(pairs: DataFrame, k: Int): Dataset[(Long, Seq[(Double, Long, Double)])] = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    pairs.select(col("vec_id"), col("nbr_id"), -col("cos"), col("cos"))
+      .as[(Long, Long, Double, Double)]
+      .groupByKey(_._1)
+      .agg(new graft.ops.BottomK[Long](k).toColumn)
   }
 
   /** (vec_id, nbr_id, cos) candidate pairs → (vec_id, rank, nbr_id). */
   private[sim] def topKPerVec(pairs: DataFrame, k: Int): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    pairs.select(col("vec_id"), col("nbr_id"), col("cos"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .agg(new TopKByCos(k).toColumn)
+    topKByCos(pairs, k)
       .flatMap { case (vid, top) =>
-        top.zipWithIndex.map { case ((_, nbr), i) => (vid, i + 1, nbr) }
+        top.zipWithIndex.map { case ((_, nbr, _), i) => (vid, i + 1, nbr) }
       }
       .toDF("vec_id", "rank", "nbr_id")
   }
@@ -182,13 +153,12 @@ object Similarity {
       .filter(col("vec_id") =!= col("nbr_id"))
       .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
       .select(col("vec_id"), col("nbr_id"), col("cos"))
-    val top1 = graft.CacheBin.persist(pairs1.as[(Long, Long, Double)]
-      .groupByKey(_._1).agg(new TopKByCos(k).toColumn))
+    val top1 = graft.CacheBin.persist(topKByCos(pairs1, k))
     val bounds = top1.map { case (id, s) =>
-      (id, if (s.length < k) Double.MaxValue else 2.0 - 2.0 * s.last._1)
+      (id, if (s.length < k) Double.MaxValue else 2.0 - 2.0 * s.last._3)
     }.toDF("vec_id", "dk2")
     val pairs1Top = top1.flatMap { case (id, s) =>
-      s.map { case (c, n) => (id, n, c) }
+      s.map { case (_, n, c) => (id, n, c) }
     }.toDF("vec_id", "nbr_id", "cos")
     // pass 2: unprobed lists that can still beat the kth candidate
     val qinfo = vecs.toDF("vec_id", "va").join(bounds, Seq("vec_id"), "left")

@@ -43,42 +43,8 @@ object OsmOut {
         col(yCol).as("y"), col("tags"))
   }
 
-  /** Serialize one task's nodes to OSM XML (osmxml.serialize semantics,
-    * osmxml.py:16-41): deterministic element order by osm_id desc. */
-  def nodesToXml(nodes: Seq[(Long, Double, Double, Map[String, String])]): String = {
-    val sb = new StringBuilder
-    sb ++= "<?xml version='1.0' encoding='UTF-8'?>\n"
-    sb ++= "<osm version='0.6' generator='graft'>\n"
-    nodes.sortBy(-_._1).foreach { case (id, x, y, tags) =>
-      sb ++= s"  <node id='$id' lon='$x' lat='$y'"
-      if (tags.isEmpty) sb ++= " />\n"
-      else {
-        sb ++= ">\n"
-        tags.toSeq.sortBy(_._1).foreach { case (k, v) =>
-          sb ++= s"    <tag k='${escape(k)}' v='${escape(v)}' />\n"
-        }
-        sb ++= "  </node>\n"
-      }
-    }
-    sb ++= "</osm>\n"
-    sb.toString
-  }
-
   private def escape(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;").replace("'", "&apos;")
-
-  /** Minimal deserialize for round-trip checks (osmxml.deserialize analog,
-    * osmxml.py:44-126): parse node elements back. */
-  def xmlToNodes(xml: String): Seq[(Long, Double, Double, Map[String, String])] = {
-    val nodeRe = "(?s)<node id='(-?\\d+)' lon='([^']+)' lat='([^']+)'( />|>(.*?)</node>)".r
-    val tagRe = "<tag k='([^']*)' v='([^']*)' />".r
-    nodeRe.findAllMatchIn(xml).map { m =>
-      val tags = Option(m.group(5)).map { body =>
-        tagRe.findAllMatchIn(body).map(t => (unescape(t.group(1)), unescape(t.group(2)))).toMap
-      }.getOrElse(Map.empty[String, String])
-      (m.group(1).toLong, m.group(2).toDouble, m.group(3).toDouble, tags)
-    }.toSeq
-  }
 
   private def unescape(s: String): String =
     s.replace("&apos;", "'").replace("&gt;", ">").replace("&lt;", "<").replace("&amp;", "&")
@@ -547,33 +513,15 @@ object OsmOut {
       refused, containerTags)
   }
 
-  final case class TaskFeature(task: Long, localId: String,
+  final case class TaskFeatureS(task: String, localId: String,
       geometry: Array[Array[Array[graft.geom.Pt]]], tags: Map[String, String])
 
   /** One FULL .osm document per task — buildings as ways/relations plus the
     * task's address nodes (process_tasks, app.py:310-389): groupByKey(task)
-    * -> build + serialize per group, one file per tile, fully distributed. */
-  def perTaskOsmXml(
-      features: Dataset[TaskFeature],
-      addrNodes: Dataset[(Long, Double, Double, Map[String, String])]): Dataset[(Long, String)] = {
-    val spark = features.sparkSession
-    import spark.implicits._
-    features.groupByKey(_.task)
-      .cogroup(addrNodes.groupByKey(_._1)) { (task, fIt, aIt) =>
-        val polys = fIt.toSeq.sortBy(_.localId).map(f => (f.localId, f.geometry, f.tags))
-        val pts = aIt.toSeq.sortBy(t => (t._2, t._3)).map(t => (t._2, t._3, t._4))
-        if (polys.isEmpty && pts.isEmpty) Iterator.empty
-        else Iterator((task, osmToXml(featuresToOsm(polys, pts))))
-      }
-  }
-
-  final case class TaskFeatureS(task: String, localId: String,
-      geometry: Array[Array[Array[graft.geom.Pt]]], tags: Map[String, String])
-
-  /** perTaskOsmXml keyed by the task LABEL string (the parcel refcat) —
-    * the multi-municipality AppRun path, where labels come straight from
-    * the Dataset task-map join and never round-trip through a driver-side
-    * label→Long index. */
+    * -> build + serialize per group, one file per tile, fully distributed.
+    * Keyed by the task LABEL string (the parcel refcat): labels come
+    * straight from the Dataset task-map join and never round-trip through a
+    * driver-side label→Long index. */
   def perTaskOsmXmlS(
       features: Dataset[TaskFeatureS],
       addrNodes: Dataset[(String, Double, Double, Map[String, String])]): Dataset[(String, String)] = {
@@ -642,19 +590,5 @@ object OsmOut {
       writeTextFile(s"$dir/$label.osm.gz", xml)
       label
     }.count()
-  }
-
-  /** One .osm XML document per task (process_tasks, app.py:310-389):
-    * groupByKey(task) -> serialize per group — one file per tile. */
-  def perTaskXml(nodes: DataFrame, taskCol: String): Dataset[(Long, String)] = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    nodes
-      .select(col(taskCol).cast("long"), col("osm_id"), col("x"), col("y"), col("tags"))
-      .as[(Long, Long, Double, Double, Map[String, String])]
-      .groupByKey(_._1)
-      .mapGroups { (task, it) =>
-        (task, nodesToXml(it.map(t => (t._2, t._3, t._4, t._5)).toSeq))
-      }
   }
 }

@@ -1,6 +1,6 @@
 package graft.spatial
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.geom.{Geom, Pt}
 
@@ -22,15 +22,16 @@ final case class IdPoint(id: Long, x: Double, y: Double)
   * (ParcelLayer.set_zones, catatom2osm/geo/layer/parcel.py:91-114): here the
   * candidate stage is a cell equi-join (CellGrid) that Catalyst plans as a
   * hash join with the small side broadcast, and the refinement is exact
-  * ray-casting PIP in a mapPartitions island.
+  * ray-casting PIP in the native PointInPolygonExpr.
   *
   * Two physical modes, chosen by the zone side's size (the analog of
   * Catalyst's broadcast-vs-shuffle choice):
-  *  - broadcast: zones collected + indexed per cell on the driver, broadcast,
-  *    probed per partition — zero shuffle of the big point side.
-  *  - partitioned: both sides keyed by covering cell and equi-joined — used
-  *    when zones don't fit in one executor; the point side is salted on hot
-  *    cells upstream if skewed.
+  *  - broadcast ([[pipProbe]]): zones exploded per covering cell on the
+  *    driver, broadcast, probed in one codegen stage — zero shuffle of the
+  *    big point side.
+  *  - partitioned ([[pipJoinPartitioned]]): both sides keyed by covering
+  *    cell and equi-joined — used when zones don't fit in one executor; the
+  *    point side is salted against hot cells.
   */
 object SpatialJoin {
 
@@ -41,57 +42,17 @@ object SpatialJoin {
       .groupBy(_._1)
       .map { case (c, zs) => (c, zs.map(_._2).sortBy(_.zone_id).toArray) }
 
-  /** Broadcast PIP join: (id, x, y) points -> (id, zone_id) pairs, one row per
-    * containing zone (overlapping zones produce multiple rows). */
-  def pipJoinBroadcast(
-      points: Dataset[IdPoint], zones: Seq[Zone], grid: CellGrid): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val index = spark.sparkContext.broadcast(buildZoneIndex(zones, grid))
-    points
-      .mapPartitions { it =>
-        val idx = index.value
-        it.flatMap { p =>
-          idx.getOrElse(grid.cellOf(p.x, p.y), Array.empty[Zone]).iterator
-            .filter(z => Geom.pointInMultiPolygon(Pt(p.x, p.y), z.geometry))
-            .map(z => (p.id, z.zone_id))
-        }
-      }
-      .toDF("id", "zone_id")
-  }
-
-  /** Partitioned PIP join: both sides exploded/keyed on covering cell and
-    * equi-joined, then refined. Scales to zone sides too large to broadcast;
-    * candidate pairs never exceed points × zones-overlapping-their-cell. */
+  /** Partitioned PIP join — for zone sides too large to broadcast: both
+    * sides keyed on covering cell and equi-joined, refined by the native
+    * PointInPolygonExpr. The big point side gets salt = pmod(hash(id),
+    * nSalt) appended to its cell key and the zone side is exploded ×nSalt,
+    * so a hot cell's candidate pairs spread over nSalt reducers instead of
+    * one (north rule: "salted repartitioning for hot-cell skew"); nSalt = 1
+    * is the unsalted cell equi-join. Same pairs as [[pipJoinCodegen]]. */
   def pipJoinPartitioned(
-      points: Dataset[IdPoint], zones: Dataset[Zone], grid: CellGrid): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val zoneCells = zones
-      .flatMap(z => grid.coverPolygon(z.geometry).map(c => (c, z)))
-      .toDF("cell", "zone")
-    val ptCells = points
-      .map(p => (grid.cellOf(p.x, p.y), p))
-      .toDF("cell", "pt")
-    ptCells
-      .join(zoneCells, "cell")
-      .select($"pt".as[IdPoint], $"zone".as[Zone])
-      .filter { t: (IdPoint, Zone) =>
-        Geom.pointInMultiPolygon(Pt(t._1.x, t._1.y), t._2.geometry)
-      }
-      .map(t => (t._1.id, t._2.zone_id))
-      .toDF("id", "zone_id")
-  }
-
-  /** Salted partitioned PIP join — the skew lever for hot cells when the
-    * zone side is too large to broadcast (north rule: "salted repartitioning
-    * for hot-cell skew"). The big point side gets salt = pmod(hash(id),
-    * nSalt) appended to its cell key; the zone side is exploded ×nSalt — so
-    * a hot cell's candidate pairs spread over nSalt reducers instead of one.
-    * Semantically identical to pipJoinPartitioned (set-equality tested). */
-  def pipJoinPartitionedSalted(
       points: DataFrame, idCol: String, xCol: String, yCol: String,
       zones: Dataset[Zone], grid: CellGrid, nSalt: Int = 8): DataFrame = {
+    require(nSalt >= 1, s"nSalt must be at least 1, got $nSalt")
     val spark = points.sparkSession
     import spark.implicits._
     val zoneSide = zones
@@ -128,6 +89,27 @@ object SpatialJoin {
     out.toArray
   }
 
+  /** Probe body of the broadcast PIP joins: the zones exploded per covering
+    * cell on the driver (`cover`) with pre-flattened edges, broadcast; the
+    * point side computes its cell with the UDF-free `cell` column, probes,
+    * and the native PointInPolygonExpr refines inside the join condition.
+    * Keeps every point column plus `cell`, `zone_id` and `edges`; callers
+    * pick their own output. */
+  private[graft] def pipProbe(
+      points: DataFrame, xCol: String, yCol: String, cell: Column,
+      zones: Seq[Zone], cover: Zone => Seq[Long]): DataFrame = {
+    val spark = points.sparkSession
+    import spark.implicits._
+    val zoneSide = spark.createDataset(
+      zones.flatMap(z => cover(z).map(c => ZoneCellEdges(c, z.zone_id, zoneEdges(z)))))
+      .toDF("cell", "zone_id", "edges")
+    points
+      .withColumn("cell", cell)
+      .join(broadcast(zoneSide), "cell")
+      .where(graft.functions.PointInPolygonExpr.pointInPolygon(
+        col(xCol), col(yCol), col("edges")))
+  }
+
   /** Fully-codegen broadcast PIP join: the point side never leaves Catalyst.
     * Candidate prune = broadcast hash join on the UDF-free cell column;
     * refinement = the native PointInPolygonExpr (doGenCode) — the whole
@@ -135,20 +117,10 @@ object SpatialJoin {
     * object Encoders on the 10^12-row side. Preferred physical mode. */
   def pipJoinCodegen(
       points: DataFrame, idCol: String, xCol: String, yCol: String,
-      zones: Seq[Zone], grid: CellGrid): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val zoneSide = spark.createDataset(
-      zones.flatMap(z => grid.coverPolygon(z.geometry)
-        .map(c => ZoneCellEdges(c, z.zone_id, zoneEdges(z)))))
-      .toDF("cell", "zone_id", "edges")
-    points
-      .withColumn("cell", grid.cellCol(col(xCol), col(yCol)))
-      .join(broadcast(zoneSide), "cell")
-      .where(graft.functions.PointInPolygonExpr.pointInPolygon(
-        col(xCol), col(yCol), col("edges")))
+      zones: Seq[Zone], grid: CellGrid): DataFrame =
+    pipProbe(points, xCol, yCol, grid.cellCol(col(xCol), col(yCol)),
+      zones, z => grid.coverPolygon(z.geometry))
       .select(col(idCol).as("id"), col("zone_id"))
-  }
 
   /** The flagship join keyed on HEX covering cells — the north star's
     * literal "broadcast-or-partitioned spatial hash join keyed on H3
@@ -160,20 +132,10 @@ object SpatialJoin {
     * plan contract as [[pipJoinCodegen]], hex key instead of Morton. */
   def pipJoinHex(
       points: DataFrame, idCol: String, xCol: String, yCol: String,
-      zones: Seq[Zone], size: Double): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val zoneSide = spark.createDataset(
-      zones.flatMap(z => HexGrid.coverPolygon(z.geometry, size)
-        .map(c => ZoneCellEdges(c, z.zone_id, zoneEdges(z)))))
-      .toDF("cell", "zone_id", "edges")
-    points
-      .withColumn("cell", HexGrid.cellCol(col(xCol), col(yCol), size))
-      .join(broadcast(zoneSide), "cell")
-      .where(graft.functions.PointInPolygonExpr.pointInPolygon(
-        col(xCol), col(yCol), col("edges")))
+      zones: Seq[Zone], size: Double): DataFrame =
+    pipProbe(points, xCol, yCol, HexGrid.cellCol(col(xCol), col(yCol), size),
+      zones, z => HexGrid.coverPolygon(z.geometry, size))
       .select(col(idCol).as("id"), col("zone_id"))
-  }
 
   /** Polygon→zone assignment by the ≥50%-area rule (ParcelLayer.set_zones +
     * is_inside_area, parcel.py:91-114 / geo/tools.py:11-19): a feature
@@ -207,7 +169,10 @@ object SpatialJoin {
     * cons.py:428-490 move_address nearest building edge; cdau.py:241-243
     * 5 m radius probe). Exact global nearest via ring-expanding cell search:
     * a site in a ring at Chebyshev distance k is at least (k-1)*cellSize away,
-    * so the scan stops as soon as best <= (k-1)*cellSize. */
+    * so the scan stops as soon as best <= (k-1)*cellSize. Each point's scan
+    * is also bounded by the Chebyshev distance from its cell to the farthest
+    * corner of the site cells' bounding box: by then every site has been
+    * seen, wherever the point lies. */
   def nearestSiteJoin(
       points: Dataset[IdPoint], sites: Seq[Site], grid: CellGrid): DataFrame = {
     val spark = points.sparkSession
@@ -216,16 +181,16 @@ object SpatialJoin {
     val byCell: Map[(Long, Long), Array[Site]] = sites
       .groupBy(s => (grid.cellX(s.x), grid.cellY(s.y)))
       .map { case (c, ss) => (c, ss.sortBy(_.site_id).toArray) }
-    val maxRing: Long = { // upper bound on rings ever needed
-      val xs = sites.map(s => grid.cellX(s.x)); val ys = sites.map(s => grid.cellY(s.y))
-      math.max(xs.max - xs.min, ys.max - ys.min) + 2
-    }
+    val xs = sites.map(s => grid.cellX(s.x)); val ys = sites.map(s => grid.cellY(s.y))
+    val (x0, x1, y0, y1) = (xs.min, xs.max, ys.min, ys.max)
     val bc = spark.sparkContext.broadcast(byCell)
     points
       .mapPartitions { it =>
         val idx = bc.value
         it.map { p =>
           val cx = grid.cellX(p.x); val cy = grid.cellY(p.y)
+          val lastRing = math.max(math.max(math.abs(cx - x0), math.abs(cx - x1)),
+            math.max(math.abs(cy - y0), math.abs(cy - y1)))
           var bestD2 = Double.MaxValue
           var bestId = Long.MaxValue
           var k = 0L
@@ -233,7 +198,7 @@ object SpatialJoin {
           while (!done) {
             val bound = (k - 1).toDouble * grid.cellSize
             if (k > 0 && bound > 0 && bestD2 <= bound * bound) done = true
-            else if (k > maxRing + 1) done = true
+            else if (k > lastRing) done = true
             else {
               for ((rcx, rcy) <- grid.ringCells(cx, cy, k);
                    ss <- idx.get((rcx, rcy)); s <- ss) {

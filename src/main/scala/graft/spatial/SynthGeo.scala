@@ -18,8 +18,6 @@ import graft.geom.Pt
   * decimals, zone params 3), so PIP classification is fp-robust.
   */
 object SynthGeo {
-  val FieldMax = 100.0 // points live in [0, 100) x [0, 100)
-
   /** Points from events: x = ((event_id*7919) % 10000)/100. */
   def points(spark: SparkSession, sfDir: String): Dataset[IdPoint] = {
     import spark.implicits._

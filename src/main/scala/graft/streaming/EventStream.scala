@@ -227,23 +227,14 @@ object EventStream {
       events: DataFrame,
       zones: Seq[graft.spatial.Zone],
       grid: graft.spatial.CellGrid): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val zoneSide = spark.createDataset(
-      zones.flatMap(z => grid.coverPolygon(z.geometry)
-        .map(c => graft.spatial.SpatialJoin.ZoneCellEdges(
-          c, z.zone_id, graft.spatial.SpatialJoin.zoneEdges(z)))))
-      .toDF("cell", "zone_id", "edges")
-    events
-      .select(
-        col("event_id").as("id"),
-        (col("event_id") * lit(7919L) % lit(10000L) / lit(100.0)).as("x"),
-        (col("event_id") * lit(104729L) % lit(10000L) / lit(100.0)).as("y"),
-        col("ts").cast("timestamp").as("ets"))
-      .withColumn("cell", grid.cellCol(col("x"), col("y")))
-      .join(broadcast(zoneSide), "cell")
-      .where(graft.functions.PointInPolygonExpr.pointInPolygon(
-        col("x"), col("y"), col("edges")))
+    val located = events.select(
+      col("event_id").as("id"),
+      (col("event_id") * lit(7919L) % lit(10000L) / lit(100.0)).as("x"),
+      (col("event_id") * lit(104729L) % lit(10000L) / lit(100.0)).as("y"),
+      col("ts").cast("timestamp").as("ets"))
+    graft.spatial.SpatialJoin
+      .pipProbe(located, "x", "y", grid.cellCol(col("x"), col("y")),
+        zones, z => grid.coverPolygon(z.geometry))
       .groupBy(window(col("ets"), "5 minutes"), col("zone_id"))
       .agg(count(lit(1)).as("n"))
       .select(

@@ -183,37 +183,6 @@ object Sampling {
         (col("offset") + row_number().over(wb) - 1).as("idx"))
   }
 
-  /** Per-stratum bottom-k by (priority, id) as a typed Aggregator — the
-    * k-bounded-buffer discipline of Similarity's TopKByCos, keyed by
-    * stratum: map-side partials mean only ≤k rows per (stratum, partition)
-    * reach the exchange, and the result is EXACT under any weight
-    * distribution (a hash-threshold sliver would need a margin assumption
-    * that a single mega-weight spam doc breaks). */
-  private class BottomKByPrio(k: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[
-        (String, Long, Double, Double),
-        Seq[(Double, Long, Double)], Seq[(Double, Long, Double)]] {
-    private def trim(b: Seq[(Double, Long, Double)]) =
-      b.sortBy(t => (t._1, t._2)).take(k)
-    def zero: Seq[(Double, Long, Double)] = Seq.empty
-    def reduce(b: Seq[(Double, Long, Double)],
-               a: (String, Long, Double, Double)): Seq[(Double, Long, Double)] = {
-      val cand = (a._3, a._2, a._4)
-      if (b.length < k) trim(b :+ cand)
-      else if (cand._1 < b.last._1 ||
-        (cand._1 == b.last._1 && cand._2 < b.last._2)) trim(b.init :+ cand)
-      else b
-    }
-    def merge(b1: Seq[(Double, Long, Double)],
-              b2: Seq[(Double, Long, Double)]): Seq[(Double, Long, Double)] =
-      trim(b1 ++ b2)
-    def finish(r: Seq[(Double, Long, Double)]): Seq[(Double, Long, Double)] = trim(r)
-    def bufferEncoder: org.apache.spark.sql.Encoder[Seq[(Double, Long, Double)]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-    def outputEncoder: org.apache.spark.sql.Encoder[Seq[(Double, Long, Double)]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-  }
-
   /** Deterministic WEIGHTED sampling (sequential Poisson, Ohlsson 1998):
     * per stratum, keep the k docs with the smallest priority h/w, where
     * h is the salted 48-bit hash (a fixed uniform draw) and w > 0 the
@@ -226,11 +195,11 @@ object Sampling {
     * across libms and can flip a rank at the boundary.
     *
     * Scale shape: NO window, NO global sort, NO sliver margin — the
-    * bottom-k aggregator keeps a k-bounded buffer per stratum with
-    * map-side partial aggregation (exchange ≤ k rows per stratum per
-    * partition), so a stratum of 10^10 docs and a stratum of 10² cost the
-    * same wire, and weight skew (one 10^12-weight doc) cannot break a
-    * threshold that no longer exists. Returns (idCol, stratumCol, w, pos),
+    * bottom-k aggregator ([[graft.ops.BottomK]]) keeps a k-bounded buffer
+    * per stratum with map-side partial aggregation (exchange ≤ k rows per
+    * stratum per partition), so a stratum of 10^10 docs and a stratum of
+    * 10² cost the same wire, and weight skew (one 10^12-weight doc) cannot
+    * break a threshold that no longer exists. Returns (idCol, stratumCol, w, pos),
     * pos = 1-based rank by (h/w, id). */
   def weightedSample(docs: DataFrame, idCol: String, stratumCol: String,
                      weight: Column, k: Int): DataFrame = {
@@ -243,7 +212,7 @@ object Sampling {
         weight.cast("double"))
       .as[(String, Long, Double, Double)]
       .groupByKey(_._1)
-      .agg(new BottomKByPrio(k).toColumn)
+      .agg(new graft.ops.BottomK[String](k).toColumn)
       .flatMap { case (st, top) =>
         top.zipWithIndex.map { case ((_, id, w), i) =>
           (id, st, w, (i + 1).toLong)

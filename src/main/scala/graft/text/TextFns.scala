@@ -17,10 +17,6 @@ object TextFns {
   def tokenCount(text: Column): Column =
     (length(text) - length(regexp_replace(text, " ", "")) + lit(1)).cast("long")
 
-  /** BPE-ish subword count: split on word boundaries + digits, drop empties. */
-  def subwordCount(text: Column): Column =
-    size(filter(split(text, "[^A-Za-z0-9]+"), t => length(t) > lit(0))).cast("long")
-
   /** GPT-2-style pre-tokenizer alternation (ASCII form, so Java regex and
     * DuckDB's RE2 tokenize identically — both leftmost-first): contractions,
     * space-prefixed words / numbers / punctuation runs, residual spaces. */
@@ -138,13 +134,6 @@ object TextFns {
   def typeTokenRatio(toks: Column): Column =
     round(size(array_distinct(toks)).cast("double") / size(toks).cast("double"), 6)
 
-  def stopwordCount(text: Column, stops: Seq[String]): Column =
-    stops.map { w =>
-      val t = s" $w "
-      val padded = concat(lit(" "), text, lit(" "))
-      ((length(padded) - length(replaceAll(padded, t, " "))) / lit(t.length - 1)).cast("long")
-    }.reduce(_ + _)
-
   /** Non-regex replace (maps to DuckDB replace()). Spark's `replace` SQL
     * function is string translate; use regexp_replace with quoted pattern. */
   private def replaceAll(c: Column, find: String, repl: String): Column =
@@ -170,13 +159,6 @@ object TextFns {
     * (de, en, es, fr, zh); no stopword at all, or null text, gives "und". */
   def langId(text: Column): Column =
     graft.functions.LangIdExpr.langId(lower(text), langLexicon.toSeq.sortBy(_._1))
-
-  /** Punctuation ratio, rounded for fp-stable comparison. */
-  def punctRatio(text: Column): Column =
-    round(
-      (length(text) - length(regexp_replace(text, "[\\p{Punct}]", ""))).cast("double") /
-        length(text),
-      4)
 
   /** 64-bit FNV-1a rolling document fingerprint — pure Scala scalar, used
     * inside typed map for fingerprint dedup. Deterministic across JVMs. */
@@ -270,20 +252,6 @@ object TextFns {
       }
     }
     total
-  }
-
-  /** Longest-common-subsequence length (the M of difflib's ratio). */
-  def lcsLen(a: String, b: String): Int = {
-    val dp = new Array[Int](b.length + 1)
-    for (i <- 1 to a.length) {
-      var prev = 0
-      for (j <- 1 to b.length) {
-        val cur = dp(j)
-        dp(j) = if (a(i - 1) == b(j - 1)) prev + 1 else math.max(dp(j), dp(j - 1))
-        prev = cur
-      }
-    }
-    dp(b.length)
   }
 
   /** Street-name normalization — the exact semantics of the reference's

@@ -131,4 +131,15 @@ class TranslateSpec extends AnyFunSuite {
     assert(got(1) === "building:levels=2|building=ruins") // levels survive ruin
     assert(got(2) === "building:part=roof")
   }
+
+  test("allTags: keys sorted, every field cast to string, a null field stays null") {
+    import spark.implicits._
+    val df = Seq((7L, 2.5, "Calle Mayor"), (8L, 0.25, null)).toDF("n", "d", "s")
+    val got = df.select(Translate.allTags(
+        Map("s" -> col("s"), "n" -> col("n"), "d" -> col("d"))).as("t"))
+      .select(map_keys(col("t")), map_values(col("t")))
+      .as[(Seq[String], Seq[String])].collect()
+    assert(got(0) === ((Seq("d", "n", "s"), Seq("2.5", "7", "Calle Mayor"))))
+    assert(got(1) === ((Seq("d", "n", "s"), Seq("0.25", "8", null))))
+  }
 }

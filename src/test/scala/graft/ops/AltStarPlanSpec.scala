@@ -27,4 +27,17 @@ class AltStarPlanSpec extends AnyFunSuite {
     assert("BroadcastHashJoin".r.findAllIn(plan).size >= 2,
       s"the re-attach joins should be AQE-broadcast at node scale:\n$plan")
   }
+
+  test("re-attach joins: only the aggregate side may be broadcast") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, NO_BROADCAST_HASH}
+    val e = (0L until 99L).map(i => (i + 1, i)).toDF("u", "v")
+    // the small-star join reads e1 twice, so the large-star join shows twice
+    val joins = Adjacency.starRound(e).queryExecution.optimizedPlan.collect { case j: Join => j }
+    assert(joins.size == 3, joins.mkString("\n"))
+    joins.foreach { j =>
+      assert(j.hint.leftHint.flatMap(_.strategy).contains(NO_BROADCAST_HASH), j.hint)
+      assert(j.hint.rightHint.isEmpty, j.hint)
+    }
+  }
 }

@@ -20,10 +20,11 @@ class OsmOutSpec extends AnyFunSuite {
 
   test("XML serialize/deserialize round-trips nodes with tags") {
     val nodes = Seq(
-      (-1L, 1.5, 2.5, Map("addr:street" -> "Calle O'Hara & <Co>", "ref" -> "7")),
-      (-2L, 3.25, 4.75, Map.empty[String, String]))
-    val xml = OsmOut.nodesToXml(nodes)
-    assert(OsmOut.xmlToNodes(xml).toSet === nodes.toSet)
+      OsmOut.RawNode(-1L, 1.5, 2.5, Map("addr:street" -> "Calle O'Hara & <Co>", "ref" -> "7")),
+      OsmOut.RawNode(-2L, 3.25, 4.75, Map.empty[String, String]))
+    val xml = OsmOut.osmToXml(OsmOut.OsmDoc(nodes, Seq.empty, Seq.empty))
+    assert(OsmOut.parseOsm(xml)._1.map(n => (n.id, n.lon, n.lat, n.tags)).toSet ===
+      nodes.map(n => (n.id, n.lon, n.lat, n.tags)).toSet)
   }
 
   test("reference test_osmxml.test_serialize: pool way + multipolygon relation") {
@@ -117,28 +118,28 @@ class OsmOutSpec extends AnyFunSuite {
       t == "way" && ref == taggedWay.id && role == "inner" })
   }
 
-  test("perTaskOsmXml: one full document per tile, ways+relations intact") {
+  test("perTaskOsmXmlS: one full document per tile, ways+relations intact") {
     import spark.implicits._
     import graft.geom.Pt
     def sq(x: Double, y: Double) =
       Array(Array(Array(Pt(x, y), Pt(x + 1, y), Pt(x + 1, y + 1), Pt(x, y + 1))))
     val feats = spark.createDataset(Seq(
-      OsmOut.TaskFeature(1L, "f1", sq(0, 0), Map("building" -> "yes")),
-      OsmOut.TaskFeature(1L, "f2", Array(
+      OsmOut.TaskFeatureS("1", "f1", sq(0, 0), Map("building" -> "yes")),
+      OsmOut.TaskFeatureS("1", "f2", Array(
         Array(Array(Pt(5, 5), Pt(9, 5), Pt(9, 9), Pt(5, 9)),
           Array(Pt(6, 6), Pt(7, 6), Pt(7, 7), Pt(6, 7)))), Map("building" -> "house")),
-      OsmOut.TaskFeature(2L, "f3", sq(20, 20), Map("building" -> "yes"))))
+      OsmOut.TaskFeatureS("2", "f3", sq(20, 20), Map("building" -> "yes"))))
     val addrs = spark.createDataset(Seq(
-      (1L, 0.5, 0.0, Map("addr:housenumber" -> "3")),
-      (3L, 99.0, 99.0, Map("addr:housenumber" -> "9")))) // task with only nodes
-    val docs = OsmOut.perTaskOsmXml(feats, addrs).collect().toMap
-    assert(docs.keySet === Set(1L, 2L, 3L))
-    val (n1, w1, r1) = OsmOut.parseOsm(docs(1L))
+      ("1", 0.5, 0.0, Map("addr:housenumber" -> "3")),
+      ("3", 99.0, 99.0, Map("addr:housenumber" -> "9")))) // task with only nodes
+    val docs = OsmOut.perTaskOsmXmlS(feats, addrs).collect().toMap
+    assert(docs.keySet === Set("1", "2", "3"))
+    val (n1, w1, r1) = OsmOut.parseOsm(docs("1"))
     assert(w1.length === 3 && r1.length === 1) // f1 way + f2 outer/inner + rel
     assert(n1.exists(_.tags.get("addr:housenumber").contains("3")))
-    val (_, w2, r2) = OsmOut.parseOsm(docs(2L))
+    val (_, w2, r2) = OsmOut.parseOsm(docs("2"))
     assert(w2.length === 1 && r2.isEmpty)
-    val (n3, w3, _) = OsmOut.parseOsm(docs(3L))
+    val (n3, w3, _) = OsmOut.parseOsm(docs("3"))
     assert(n3.length === 1 && w3.isEmpty)
   }
 
@@ -228,15 +229,17 @@ class OsmOutSpec extends AnyFunSuite {
     assert(out.ways.head.ndRefs.contains(n3.id))
   }
 
-  test("perTaskXml emits one document per task with that task's nodes") {
+  test("perTaskOsmXmlS emits one document per task with that task's address nodes") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val addr = graft.layers.SynthCadastre.addresses(spark, TestSpark.sf001)
     val nodes = OsmOut.addressNodes(addr, "bid", "px", "py", Map("ref" -> "bid"))
-      .withColumn("task", pmod(col("key"), lit(3)))
-    val perTask = OsmOut.perTaskXml(nodes, "task").collect().toMap
+      .select(pmod(col("key"), lit(3)).cast("string"), col("x"), col("y"), col("tags"))
+      .as[(String, Double, Double, Map[String, String])]
+    val perTask = OsmOut.perTaskOsmXmlS(spark.emptyDataset[OsmOut.TaskFeatureS], nodes)
+      .collect().toMap
     assert(perTask.size === 3)
-    val total = perTask.values.map(x => OsmOut.xmlToNodes(x).size).sum
+    val total = perTask.values.map(x => OsmOut.parseOsm(x)._1.size).sum
     assert(total === addr.count())
   }
 }

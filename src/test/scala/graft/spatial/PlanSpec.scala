@@ -35,7 +35,7 @@ class PlanSpec extends AnyFunSuite {
     assert(!rPlan.contains("BroadcastNestedLoop") && !rPlan.contains("Cartesian"),
       s"radius join must stay an equi-join:\n$rPlan")
     val zonesDs = spark.createDataset(SynthGeo.zones)
-    val pip = SpatialJoin.pipJoinPartitioned(pts, zonesDs, grid)
+    val pip = SpatialJoin.pipJoinPartitioned(pts.toDF(), "id", "x", "y", zonesDs, grid)
     pip.collect()
     val pPlan = pip.queryExecution.executedPlan.toString
     assert(!pPlan.contains("BroadcastNestedLoop") && !pPlan.contains("Cartesian"),

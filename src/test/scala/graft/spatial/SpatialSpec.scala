@@ -38,22 +38,22 @@ class SpatialJoinSpec extends AnyFunSuite {
 
   test("broadcast and partitioned PIP joins agree") {
     import spark.implicits._
-    val pts = SynthGeo.points(spark, TestSpark.sf001)
+    val pts = SynthGeo.points(spark, TestSpark.sf001).toDF()
     val zonesDs = spark.createDataset(SynthGeo.zones)
-    val a = SpatialJoin.pipJoinBroadcast(pts, SynthGeo.zones, pipGrid)
+    val a = SpatialJoin.pipJoinCodegen(pts, "id", "x", "y", SynthGeo.zones, pipGrid)
       .as[(Long, Long)].collect().toSet
-    val b = SpatialJoin.pipJoinPartitioned(pts, zonesDs, pipGrid)
+    val b = SpatialJoin.pipJoinPartitioned(pts, "id", "x", "y", zonesDs, pipGrid, nSalt = 1)
       .as[(Long, Long)].collect().toSet
     assert(a === b)
     assert(a.nonEmpty)
   }
 
-  test("codegen PIP join agrees with the typed broadcast join") {
+  test("codegen PIP join agrees with the hex-keyed PIP join") {
     import spark.implicits._
-    val pts = SynthGeo.points(spark, TestSpark.sf001)
-    val a = SpatialJoin.pipJoinBroadcast(pts, SynthGeo.zones, pipGrid)
+    val pts = SynthGeo.points(spark, TestSpark.sf001).toDF()
+    val a = SpatialJoin.pipJoinHex(pts, "id", "x", "y", SynthGeo.zones, 2.5)
       .as[(Long, Long)].collect().toSet
-    val c = SpatialJoin.pipJoinCodegen(pts.toDF(), "id", "x", "y", SynthGeo.zones, pipGrid)
+    val c = SpatialJoin.pipJoinCodegen(pts, "id", "x", "y", SynthGeo.zones, pipGrid)
       .as[(Long, Long)].collect().toSet
     assert(c === a)
     assert(c.nonEmpty)
@@ -68,7 +68,8 @@ class SpatialJoinSpec extends AnyFunSuite {
       if Geom.pointInMultiPolygon(Pt(p.x, p.y), z.geometry)
     } yield (p.id, z.zone_id)).toSet
     val got = SpatialJoin
-      .pipJoinBroadcast(SynthGeo.points(spark, TestSpark.sf001), SynthGeo.zones, pipGrid)
+      .pipJoinCodegen(SynthGeo.points(spark, TestSpark.sf001).toDF(), "id", "x", "y",
+        SynthGeo.zones, pipGrid)
       .as[(Long, Long)].collect().toSet
     assert(got === expected)
   }
@@ -76,15 +77,20 @@ class SpatialJoinSpec extends AnyFunSuite {
   test("nearestSiteJoin matches brute-force argmin") {
     import spark.implicits._
     val grid = CellGrid(12.0, origin = 0.0, rowWidth = 1L << 20)
-    val pts = SynthGeo.points(spark, TestSpark.sf001).collect()
-    val expected = pts.map { p =>
-      val best = SynthGeo.sites.minBy(s => ((p.x - s.x) * (p.x - s.x) + (p.y - s.y) * (p.y - s.y), s.site_id))
-      (p.id, best.site_id)
-    }.toMap
-    val got = SpatialJoin
-      .nearestSiteJoin(SynthGeo.points(spark, TestSpark.sf001), SynthGeo.sites, grid)
-      .as[(Long, Long)].collect().toMap
-    assert(got === expected)
+    // the synthetic points, and points whose cells lie further from every
+    // site than the site cells' own extent (on each side of it)
+    val far = Seq(IdPoint(1L, 1000.0, 1000.0), IdPoint(2L, -500.0, 40.0),
+      IdPoint(3L, 60.0, 5000.0), IdPoint(4L, -800.0, -900.0))
+    for (pts <- Seq(SynthGeo.points(spark, TestSpark.sf001).collect().toSeq, far)) {
+      val expected = pts.map { p =>
+        val best = SynthGeo.sites.minBy(s => ((p.x - s.x) * (p.x - s.x) + (p.y - s.y) * (p.y - s.y), s.site_id))
+        (p.id, best.site_id)
+      }.toMap
+      val got = SpatialJoin
+        .nearestSiteJoin(spark.createDataset(pts), SynthGeo.sites, grid)
+        .as[(Long, Long)].collect().toMap
+      assert(got === expected)
+    }
   }
 
   test("radiusJoin matches brute-force disc probe") {
@@ -207,9 +213,9 @@ class SaltedJoinSpec extends AnyFunSuite {
   test("salted partitioned PIP join equals the broadcast join") {
     import spark.implicits._
     val pts = SynthGeo.points(spark, TestSpark.sf001)
-    val expected = SpatialJoin.pipJoinBroadcast(pts, SynthGeo.zones, grid)
+    val expected = SpatialJoin.pipJoinCodegen(pts.toDF(), "id", "x", "y", SynthGeo.zones, grid)
       .as[(Long, Long)].collect().toSet
-    val salted = SpatialJoin.pipJoinPartitionedSalted(
+    val salted = SpatialJoin.pipJoinPartitioned(
       pts.toDF(), "id", "x", "y", spark.createDataset(SynthGeo.zones), grid, nSalt = 4)
       .as[(Long, Long)].collect().toSet
     assert(salted === expected)
@@ -227,7 +233,7 @@ class MinHashExprSpec extends AnyFunSuite {
       (2L, Seq("a b c", "b c d", "c d e")),
       (3L, Seq("x y z"))).toDF("id", "sh")
     val sigs = df.select(col("id"),
-        graft.dedup.Dedup.minhashSignature(col("sh"), 16).as("sig"))
+        graft.functions.MinHashSigExpr.minhashSig(col("sh"), 16).as("sig"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(sigs(1L).length === 16)
     assert(sigs(1L) === sigs(2L))       // identical shingles -> identical sig

@@ -602,6 +602,12 @@ class SimilaritySpec extends AnyFunSuite {
 class DotExprSpec extends org.scalatest.funsuite.AnyFunSuite {
   lazy val spark = graft.TestSpark.spark
 
+  /** The interpreted HOF formulation the native expression replaces:
+    * products accumulated left-to-right in double. */
+  private def dotHof(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+
   test("native dot_f32 is bit-identical to the HOF formulation") {
     import org.apache.spark.sql.functions._
     val emb = spark.read.parquet(s"${graft.TestSpark.sf001}/embeddings.parquet")
@@ -610,7 +616,7 @@ class DotExprSpec extends org.scalatest.funsuite.AnyFunSuite {
     val pairs = l.join(r, col("a") < col("b")).limit(20000)
     val diffs = pairs
       .select(Similarity.dot(col("va"), col("vb")).as("x"),
-        Similarity.dotHof(col("va"), col("vb")).as("y"))
+        dotHof(col("va"), col("vb")).as("y"))
       .filter(col("x") =!= col("y"))
       .count()
     assert(diffs === 0)
