@@ -194,15 +194,4 @@ final case class CellGrid(cellSize: Double, origin: Double = -1e7, rowWidth: Lon
     val cx = cellX(x); val cy = cellY(y)
     for (dy <- -1L to 1L; dx <- -1L to 1L) yield pack(cx + dx, cy + dy)
   }
-
-  /** Ring of cells at Chebyshev distance k from (cx, cy); k=0 is the cell. */
-  def ringCells(cx: Long, cy: Long, k: Long): Seq[(Long, Long)] =
-    if (k == 0) Seq((cx, cy))
-    else {
-      val top    = for (dx <- -k to k) yield (cx + dx, cy + k)
-      val bottom = for (dx <- -k to k) yield (cx + dx, cy - k)
-      val left   = for (dy <- -k + 1 to k - 1) yield (cx - k, cy + dy)
-      val right  = for (dy <- -k + 1 to k - 1) yield (cx + k, cy + dy)
-      top ++ bottom ++ left ++ right
-    }
 }

@@ -1,7 +1,9 @@
 package graft.spatial
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.functions._
+import graft.functions.{NearestSiteExpr, SiteIndex, SitesWithinExpr}
 import graft.geom.{Geom, Pt}
 
 /** Admin-zone polygon (the reference's ZoningLayer row,
@@ -32,6 +34,13 @@ final case class IdPoint(id: Long, x: Double, y: Double)
   *  - partitioned ([[pipJoinPartitioned]]): both sides keyed by covering
   *    cell and equi-joined — used when zones don't fit in one executor; the
   *    point side is salted against hot cells.
+  *
+  * The site probes (the reference's nearest-edge and radius probes) have
+  * the same two modes: [[nearestSiteJoin]] and [[radiusJoin]] broadcast
+  * one primitive-array [[graft.functions.SiteIndex]] and probe it with a
+  * native codegen expression in the point side's own stage;
+  * [[nearestSiteJoinPartitioned]] and [[radiusJoinPartitioned]] are cell
+  * equi-joins for site sides beyond broadcast.
   */
 object SpatialJoin {
 
@@ -165,56 +174,27 @@ object SpatialJoin {
       .toDF("id", "zone_id")
   }
 
+  /** The `id` of an `IdPoint` row as a non-null bigint column: a null id
+    * throws, as the `IdPoint` encoder's own null check does. */
+  private def pointId: Column = GraftColumnBridge.column(
+    AssertNotNull(GraftColumnBridge.expression(col("id").cast("long")))).as("id")
+
   /** Nearest-site join (the reference's closest-segment probe generalized:
-    * cons.py:428-490 move_address nearest building edge; cdau.py:241-243
-    * 5 m radius probe). Exact global nearest via ring-expanding cell search:
-    * a site in a ring at Chebyshev distance k is at least (k-1)*cellSize away,
-    * so the scan stops as soon as best <= (k-1)*cellSize. Each point's scan
-    * is also bounded by the Chebyshev distance from its cell to the farthest
-    * corner of the site cells' bounding box: by then every site has been
-    * seen, wherever the point lies. */
+    * cons.py:428-490 move_address nearest building edge): `(id, site_id)`
+    * of every point's exact nearest site, ties on the lower `site_id`. The
+    * sites go into one broadcast [[graft.functions.SiteIndex]] and each
+    * point is probed by the native NearestSiteExpr, so scan → probe →
+    * aggregate stays one whole-stage codegen stage with no object encoder.
+    * The probe scans rings of cells around the point's cell and stops at
+    * ring k once the best distance is at most (k-1)·cellSize, or once
+    * every site cell has been reached. A point with a null x or y gets a
+    * null `site_id`; a null id throws, as the `IdPoint` encoder does. */
   def nearestSiteJoin(
       points: Dataset[IdPoint], sites: Seq[Site], grid: CellGrid): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
     require(sites.nonEmpty, "nearestSiteJoin needs at least one site")
-    val byCell: Map[(Long, Long), Array[Site]] = sites
-      .groupBy(s => (grid.cellX(s.x), grid.cellY(s.y)))
-      .map { case (c, ss) => (c, ss.sortBy(_.site_id).toArray) }
-    val xs = sites.map(s => grid.cellX(s.x)); val ys = sites.map(s => grid.cellY(s.y))
-    val (x0, x1, y0, y1) = (xs.min, xs.max, ys.min, ys.max)
-    val bc = spark.sparkContext.broadcast(byCell)
-    points
-      .mapPartitions { it =>
-        val idx = bc.value
-        it.map { p =>
-          val cx = grid.cellX(p.x); val cy = grid.cellY(p.y)
-          val lastRing = math.max(math.max(math.abs(cx - x0), math.abs(cx - x1)),
-            math.max(math.abs(cy - y0), math.abs(cy - y1)))
-          var bestD2 = Double.MaxValue
-          var bestId = Long.MaxValue
-          var k = 0L
-          var done = false
-          while (!done) {
-            val bound = (k - 1).toDouble * grid.cellSize
-            if (k > 0 && bound > 0 && bestD2 <= bound * bound) done = true
-            else if (k > lastRing) done = true
-            else {
-              for ((rcx, rcy) <- grid.ringCells(cx, cy, k);
-                   ss <- idx.get((rcx, rcy)); s <- ss) {
-                val dx = p.x - s.x; val dy = p.y - s.y
-                val d2 = dx * dx + dy * dy
-                if (d2 < bestD2 || (d2 == bestD2 && s.site_id < bestId)) {
-                  bestD2 = d2; bestId = s.site_id
-                }
-              }
-              k += 1
-            }
-          }
-          (p.id, bestId)
-        }
-      }
-      .toDF("id", "site_id")
+    val index = points.sparkSession.sparkContext.broadcast(SiteIndex(sites, grid))
+    points.toDF().select(pointId,
+      NearestSiteExpr.nearestSite(col("x"), col("y"), index).as("site_id"))
   }
 
   /** Dataset-partitioned radius join — for site sides beyond broadcast.
@@ -290,32 +270,18 @@ object SpatialJoin {
     resolved.reduce(_ union _)
   }
 
-  /** Radius join: all (point, site) pairs within `radius`. Requires
-    * grid.cellSize >= radius so the 3×3 neighborhood covers the disc
-    * (the reference's Point.boundingBox + R-tree probe, geo/point.py:21-25). */
+  /** Radius join (the cdau 5 m probe, cdau.py:241-243; the reference's
+    * Point.boundingBox + R-tree probe, geo/point.py:21-25): all
+    * `(id, site_id)` pairs within `radius`. Requires grid.cellSize >=
+    * radius so the 3×3 cell neighborhood covers the disc. The native
+    * SitesWithinExpr probes one broadcast [[graft.functions.SiteIndex]]
+    * inside codegen and the matches are exploded; a point with a null x or
+    * y gives no row, a null id throws. */
   def radiusJoin(
       points: Dataset[IdPoint], sites: Seq[Site], grid: CellGrid, radius: Double): DataFrame = {
     require(grid.cellSize >= radius, "cellSize must be >= radius for 3x3 probe")
-    val spark = points.sparkSession
-    import spark.implicits._
-    val byCell: Map[Long, Array[Site]] = sites
-      .groupBy(s => grid.cellOf(s.x, s.y))
-      .map { case (c, ss) => (c, ss.sortBy(_.site_id).toArray) }
-    val bc = spark.sparkContext.broadcast(byCell)
-    val r2 = radius * radius
-    points
-      .mapPartitions { it =>
-        val idx = bc.value
-        it.flatMap { p =>
-          grid.neighborhood(p.x, p.y).iterator
-            .flatMap(c => idx.getOrElse(c, Array.empty[Site]).iterator)
-            .filter { s =>
-              val dx = p.x - s.x; val dy = p.y - s.y
-              dx * dx + dy * dy <= r2
-            }
-            .map(s => (p.id, s.site_id))
-        }
-      }
-      .toDF("id", "site_id")
+    val index = points.sparkSession.sparkContext.broadcast(SiteIndex(sites, grid))
+    points.toDF().select(pointId,
+      explode(SitesWithinExpr.sitesWithin(col("x"), col("y"), lit(radius), index)).as("site_id"))
   }
 }

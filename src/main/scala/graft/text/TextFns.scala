@@ -13,9 +13,10 @@ object TextFns {
   /** Whitespace tokens. */
   def tokens(text: Column): Column = split(text, " ")
 
-  /** Token count via length arithmetic (identical to the oracle SQL form). */
+  /** Token count via length arithmetic (identical to the oracle SQL form
+    * `length(text) - length(replace(text, ' ', '')) + 1`). */
   def tokenCount(text: Column): Column =
-    (length(text) - length(regexp_replace(text, " ", "")) + lit(1)).cast("long")
+    (length(text) - length(replaceLit(text, " ", "")) + lit(1)).cast("long")
 
   /** GPT-2-style pre-tokenizer alternation (ASCII form, so Java regex and
     * DuckDB's RE2 tokenize identically — both leftmost-first): contractions,
@@ -134,12 +135,12 @@ object TextFns {
   def typeTokenRatio(toks: Column): Column =
     round(size(array_distinct(toks)).cast("double") / size(toks).cast("double"), 6)
 
-  /** Non-regex replace (maps to DuckDB replace()). Spark's `replace` SQL
-    * function is string translate; use regexp_replace with quoted pattern. */
-  private def replaceAll(c: Column, find: String, repl: String): Column =
-    regexp_replace(c, java.util.regex.Pattern.quote(find), repl)
-
-  def replaceLit(c: Column, find: String, repl: String): Column = replaceAll(c, find, repl)
+  /** Literal replace-all of a non-empty `find` (Spark's `replace`, i.e.
+    * StringReplace; DuckDB's replace()). */
+  def replaceLit(c: Column, find: String, repl: String): Column = {
+    require(find.nonEmpty, "replaceLit needs a non-empty search string")
+    replace(c, lit(find), lit(repl))
+  }
 
   /** Stopword lexicon of [[langId]] — the single source: the q_lang_id and
     * q_corpus_clean oracle SQL is generated from it too. */

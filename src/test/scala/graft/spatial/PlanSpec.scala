@@ -1,10 +1,12 @@
 package graft.spatial
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import graft.TestSpark
+import graft.functions.{NearestSiteExpr, SitesWithinExpr}
 
 /** Plan-shape guards: the flagship join must stay broadcast + codegen. */
 class PlanSpec extends AnyFunSuite {
@@ -75,6 +77,38 @@ class PlanSpec extends AnyFunSuite {
         (if (here) Seq(node) else Nil) ++ node.children.flatMap(walk)
     }
     walk(plan)
+  }
+
+  test("site probe plans: no object encoders, the probe inside whole-stage codegen") {
+    val pts = SynthGeo.points(spark, TestSpark.sf001)
+    val knn = SpatialJoin.nearestSiteJoin(pts, SynthGeo.sites, CellGrid(12.0, 0.0, 1L << 20))
+      .groupBy("site_id").count()
+    val radius = SpatialJoin.radiusJoin(pts, SynthGeo.sites, CellGrid(6.5, 0.0, 1L << 20), 6.5)
+    for ((q, probe) <- Seq(knn -> classOf[NearestSiteExpr], radius -> classOf[SitesWithinExpr])) {
+      q.collect()
+      val plan = finalPlan(q.queryExecution.executedPlan)
+      val text = plan.toString
+      for (node <- Seq("DeserializeToObject", "MapPartitions", "SerializeFromObject"))
+        assert(!text.contains(node), s"unexpected $node:\n$text")
+      val stages = plan.collect { case w: WholeStageCodegenExec => stageNodes(w.child) }
+      val probing = stages.filter(_.exists(_.expressions.exists(
+        _.exists(probe.isInstance))))
+      assert(probing.size == 1, s"${probe.getSimpleName} not inside one codegen stage:\n$text")
+      if (probe == classOf[NearestSiteExpr]) // scan → probe → partial aggregate: one stage
+        assert(probing.head.exists(_.isInstanceOf[HashAggregateExec]), text)
+    }
+  }
+
+  /** The adaptive plan's final physical plan, stages inlined. */
+  private def finalPlan(plan: SparkPlan): SparkPlan = plan.transform {
+    case a: AdaptiveSparkPlanExec => finalPlan(a.executedPlan)
+    case s: QueryStageExec => finalPlan(s.plan)
+  }
+
+  /** Nodes of one whole-stage codegen stage (its inputs excluded). */
+  private def stageNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case _: InputAdapter => Nil
+    case n => n +: n.children.flatMap(stageNodes)
   }
 
   test("parquet scan prunes columns for the PIP query") {

@@ -23,13 +23,6 @@ class CellGridSpec extends AnyFunSuite {
     assert(cells.size === 6) // x cells 0,1,2 × y cells 0,1
     assert(cells.contains(grid.pack(0, 0)) && cells.contains(grid.pack(2, 1)))
   }
-
-  test("ring cells: k=0 is self, k=1 is the 8 neighbors") {
-    assert(grid.ringCells(5, 5, 0) === Seq((5L, 5L)))
-    val r1 = grid.ringCells(5, 5, 1)
-    assert(r1.size === 8 && !r1.contains((5L, 5L)))
-    assert(grid.ringCells(5, 5, 2).size === 16)
-  }
 }
 
 class SpatialJoinSpec extends AnyFunSuite {
@@ -203,6 +196,78 @@ class SpatialJoinSpec extends AnyFunSuite {
       val zs = idx.getOrElse(pipGrid.cellOf(c.x, c.y), Array.empty)
       assert(zs.exists(_.zone_id == z.zone_id))
     }
+  }
+}
+
+/** The native site probes behind `nearestSiteJoin` and `radiusJoin`
+  * against brute force on the shapes a cell index gets wrong first: ties
+  * across cells, points on cell edges, negative coordinates, a single
+  * site, a point at a site and null coordinates — under whole-stage
+  * codegen, without it, and interpreted. */
+class SiteProbeSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  val grid = CellGrid(10.0, origin = 0.0, rowWidth = 1L << 20)
+
+  val sites: Seq[Site] = Seq(
+    Site(7L, 12.0, 5.0), Site(2L, 8.0, 5.0), // tie at (10, 5), across a cell edge
+    Site(5L, 12.0, 15.0), Site(3L, 18.0, 15.0), // tie at (15, 15), in one cell
+    Site(9L, -15.0, -25.0), Site(4L, -30.0, 0.0), Site(8L, 40.0, -10.0),
+    Site(6L, 30.0, 30.0), Site(1L, 30.0, 30.0)) // two sites at one place
+
+  /** (id, x, y); None is a null coordinate. */
+  val points: Seq[(Long, Option[Double], Option[Double])] = Seq(
+    (1L, Some(10.0), Some(5.0)), (2L, Some(15.0), Some(15.0)),
+    (3L, Some(20.0), Some(30.0)), (4L, Some(0.0), Some(0.0)), (5L, Some(-10.0), Some(-20.0)),
+    (6L, Some(30.0), Some(30.0)), (7L, Some(12.0), Some(15.0)), (8L, Some(-15.0), Some(-25.0)),
+    (9L, Some(-0.0), Some(-10.0)), (10L, Some(-20.5), Some(-12.5)), (11L, Some(22.0), Some(15.0)),
+    (12L, Some(40.0), Some(20.0)), (13L, Some(-300.0), Some(450.0)), (14L, Some(2.0), Some(-5.0)),
+    (15L, None, Some(5.0)), (16L, Some(5.0), None), (17L, None, None))
+
+  private def d2(x: Double, y: Double, s: Site) = (x - s.x) * (x - s.x) + (y - s.y) * (y - s.y)
+
+  private def nearest(ss: Seq[Site]): Map[Long, Option[Long]] = points.map {
+    case (id, Some(x), Some(y)) => id -> Some(ss.minBy(s => (d2(x, y, s), s.site_id)).site_id)
+    case (id, _, _) => id -> None
+  }.toMap
+
+  private def within(ss: Seq[Site], r: Double): Set[(Long, Long)] = points.collect {
+    case (id, Some(x), Some(y)) => ss.filter(d2(x, y, _) <= r * r).map(s => (id, s.site_id))
+  }.flatten.toSet
+
+  private val modes: Seq[(String, Seq[(String, String)])] = Seq(
+    "whole-stage codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true"),
+    "no whole-stage codegen" -> Seq("spark.sql.codegen.wholeStage" -> "false"),
+    "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+
+  for ((mode, conf) <- modes; (name, ss) <- Seq("sites" -> sites, "a single site" -> sites.take(1)))
+    test(s"nearest and radius probes match brute force ($name, $mode)") {
+      import spark.implicits._
+      TestSpark.withConf(conf: _*) {
+        val pts = points.toDF("id", "x", "y").as[IdPoint]
+        val got = SpatialJoin.nearestSiteJoin(pts, ss, grid)
+          .as[(Long, Option[Long])].collect().toMap
+        assert(got === nearest(ss))
+        for (r <- Seq(0.0, 2.0, 10.0)) {
+          val pairs = SpatialJoin.radiusJoin(pts, ss, grid, r).as[(Long, Long)].collect()
+          assert(pairs.toSet === within(ss, r), s"radius $r")
+          assert(pairs.length === pairs.toSet.size, s"radius $r: duplicate pairs")
+        }
+      }
+    }
+
+  test("the probes decide ties, cell edges and exact hits as specified") {
+    import spark.implicits._
+    val pts = points.toDF("id", "x", "y").as[IdPoint]
+    val got = SpatialJoin.nearestSiteJoin(pts, sites, grid).as[(Long, Option[Long])].collect().toMap
+    assert(got(1L) === Some(2L)) // equidistant from 7 (own cell) and 2: lower id
+    assert(got(2L) === Some(3L)) // equidistant from 5 and 3
+    assert(got(6L) === Some(1L)) // at two sites at one place
+    assert(got(7L) === Some(5L) && got(8L) === Some(9L)) // exactly at a site
+    assert(got(15L) === None && got(16L) === None && got(17L) === None)
+    val near = SpatialJoin.radiusJoin(pts, sites, grid, 10.0).as[(Long, Long)].collect().toSet
+    assert(near.contains((11L, 5L)) && near.contains((11L, 3L))) // 10 away: boundary in
+    assert(!near.exists(_._1 >= 15L)) // a null coordinate gives no row
   }
 }
 
