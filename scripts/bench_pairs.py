@@ -2,10 +2,10 @@
 """Alternating-pair comparison of two checkouts on one perfbench workload.
 
     python3 scripts/bench_pairs.py --parent DIR --change DIR --workload W --pairs N
-                                   [--seconds 6] [--seed 1]
 
-Each pair runs `python3 perfbench/run.py --workload W --seconds S --seed N`
-once in each checkout (each builds its own sources into its own
+Each pair runs `python3 perfbench/run.py --workload W --seconds S` once in
+each checkout, S being the `run_seconds` of the change's BENCHMARK.json and
+the seed perfbench's default (each builds its own sources into its own
 .bench_build/); the order swaps every pair, parent first in even pairs, so
 slow drift of the host cancels out. Every run's metrics go to stderr as it
 finishes. The summary, for each end-to-end metric named in the change's
@@ -26,9 +26,8 @@ import subprocess
 import sys
 
 
-def run(checkout, a):
-    cmd = [sys.executable, "perfbench/run.py", "--workload", a.workload,
-           "--seconds", str(a.seconds), "--seed", str(a.seed)]
+def run(checkout, workload, seconds):
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seconds", str(seconds)]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
                        text=True)
     lines = p.stdout.strip().splitlines()
@@ -58,22 +57,22 @@ def main():
     ap.add_argument("--change", required=True, help="checkout holding the change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
-    ap.add_argument("--seconds", type=int, default=6)
-    ap.add_argument("--seed", type=int, default=1)
     a = ap.parse_args()
     with open(os.path.join(a.change, "BENCHMARK.json")) as fh:
-        better = {m["name"]: m["better"] for m in json.load(fh)["end_to_end"]}
+        bench = json.load(fh)
+    better = {m["name"]: m["better"] for m in bench["end_to_end"]}
+    seconds = bench["run_seconds"]
 
     runs = {"parent": [], "change": []}
     for i in range(a.pairs):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         for side in order:
-            m = run(getattr(a, side), a)
+            m = run(getattr(a, side), a.workload, seconds)
             runs[side].append(m)
             print(f"pair {i} {side}: " + " ".join(f"{k}={v:.4g}" for k, v in sorted(m.items())),
                   file=sys.stderr, flush=True)
 
-    print(f"{a.workload}: {a.pairs} pairs, seed {a.seed}, {a.seconds} s")
+    print(f"{a.workload}: {a.pairs} pairs, {seconds} s")
     print(f"{'metric':<14}{'parent':>12}{'change':>12}{'delta':>9}{'wins':>8}"
           f"{'parent IQR':>12}  beyond IQR")
     for name, direction in better.items():

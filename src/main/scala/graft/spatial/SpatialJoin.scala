@@ -201,7 +201,8 @@ object SpatialJoin {
     * The SITE side explodes into its 3×3 cell neighborhood (constant ×9
     * blow-up of the small-to-medium side); the big point side is keyed by
     * its single cell, so it shuffles exactly once with one row per point.
-    * Same output as radiusJoin (set-equality tested). */
+    * Same output as radiusJoin (set-equality tested), except that a null
+    * x or y throws here, where radiusJoin gives that point no row. */
   def radiusJoinPartitioned(
       points: Dataset[IdPoint], sites: Dataset[Site], grid: CellGrid,
       radius: Double): DataFrame = {
@@ -229,7 +230,9 @@ object SpatialJoin {
     * > g away), so the point resolves; unresolved points re-join at 4g.
     * Each round is one cell equi-join with a constant ×9 site explosion —
     * no ring scans, no broadcast — and rounds are log(extent/cellSize).
-    * Ties break by site_id, matching nearestSiteJoin. */
+    * Ties break by site_id, matching nearestSiteJoin. The two differ on a
+    * null x or y: this path decodes each point into an `IdPoint` and
+    * throws, where nearestSiteJoin gives that point a null `site_id`. */
   def nearestSiteJoinPartitioned(
       points: Dataset[IdPoint], sites: Dataset[Site], baseCell: Double,
       maxRounds: Int = 24): DataFrame = {

@@ -7,9 +7,9 @@ import graft.TestSpark.jobsOf
 
 /** Job budgets for the three DBSCAN plans on one fixed 150-point cloud.
   * On inputs this small the Spark job count, not the data, sets the run
-  * time, and a job count is deterministic for a fixed input and session
-  * configuration, so each plan's count is pinned at one shuffle partition
-  * and at eight where ten runs agreed on it. */
+  * time, so a plan's job count is pinned where it repeated exactly in 40
+  * runs beside four busy loops; elsewhere the three plans are only checked
+  * to agree on the rows. */
 class DbscanJobBudgetSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -44,14 +44,13 @@ class DbscanJobBudgetSpec extends AnyFunSuite {
     out
   }
 
-  /** Jobs per (plan, setting), each the same in ten runs. dbscanDense
-    * at one shuffle partition ran 49 or 50 jobs and its forced
-    * contraction 44 to 46, so those two cases carry no budget. */
+  /** Jobs per (plan, setting), the same in every one of 40 loaded runs.
+    * The other cases vary from run to run: at one shuffle partition
+    * dbscan ran 22 or 23 jobs, dbscanDense 49 or 50 and its forced
+    * contraction 44 to 46; at eight partitions dbscanDense ran 52 or 53
+    * and its forced contraction 47 or 48. They carry no budget. */
   private val budgets: Map[(String, String), Int] = Map(
-    ("dbscan", "one shuffle partition") -> 23,
-    ("dbscan", "eight partitions") -> 24,
-    ("dbscanDense", "eight partitions") -> 52,
-    ("dbscanDense(forceContraction)", "eight partitions") -> 47)
+    ("dbscan", "eight partitions") -> 24)
 
   for ((setting, conf) <- settings) test(s"job budgets at $setting") {
     TestSpark.withConf(conf: _*) {

@@ -68,15 +68,19 @@ class PlanSpec extends AnyFunSuite {
   private def evaluationSites(plan: SparkPlan, name: String): Seq[SparkPlan] = {
     val caches = scala.collection.mutable.Set.empty[AnyRef]
     def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case s: QueryStageExec => walk(s.plan)
       case m: InMemoryTableScanExec =>
-        if (caches.add(m.relation.cacheBuilder)) walk(m.relation.cachedPlan) else Nil
+        if (caches.add(m.relation.cacheBuilder)) walk(finalPlan(m.relation.cachedPlan)) else Nil
       case node =>
         val here = node.expressions.exists(_.exists(_.prettyName == name))
         (if (here) Seq(node) else Nil) ++ node.children.flatMap(walk)
     }
-    walk(plan)
+    walk(finalPlan(plan))
+  }
+
+  /** The adaptive plan's final physical plan, stages inlined. */
+  private def finalPlan(plan: SparkPlan): SparkPlan = plan.transform {
+    case a: AdaptiveSparkPlanExec => finalPlan(a.executedPlan)
+    case s: QueryStageExec => finalPlan(s.plan)
   }
 
   test("site probe plans: no object encoders, the probe inside whole-stage codegen") {
@@ -97,12 +101,6 @@ class PlanSpec extends AnyFunSuite {
       if (probe == classOf[NearestSiteExpr]) // scan → probe → partial aggregate: one stage
         assert(probing.head.exists(_.isInstanceOf[HashAggregateExec]), text)
     }
-  }
-
-  /** The adaptive plan's final physical plan, stages inlined. */
-  private def finalPlan(plan: SparkPlan): SparkPlan = plan.transform {
-    case a: AdaptiveSparkPlanExec => finalPlan(a.executedPlan)
-    case s: QueryStageExec => finalPlan(s.plan)
   }
 
   /** Nodes of one whole-stage codegen stage (its inputs excluded). */
