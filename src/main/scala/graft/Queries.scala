@@ -54,7 +54,7 @@ object Queries {
   private val knnGrid = CellGrid(12.0, origin = 0.0, rowWidth = 1L << 20)
   private val radGrid = CellGrid(6.5, origin = 0.0, rowWidth = 1L << 20)
 
-  val all: Map[String, Q] = Map(
+  private val entries: Seq[(String, Q)] = Seq(
     // ================= relational core (SURVEY §2.2) ====================
     // filtered scan + projection (BaseLayer.append(query=...), base.py:157-199)
     "q_filter_project" -> Q(
@@ -3049,28 +3049,6 @@ object Queries {
               FROM t JOIN r ON t.lang = r.lang
               WHERE bp < thr ORDER BY doc_id""")),
 
-    // span-level duplicate coverage (Lee et al. substring-dedup shape):
-    // per doc, how many token positions sit under a full-width 5-gram that
-    // occurs more than once ANYWHERE in the corpus (within-doc repeats
-    // count). Positional window hashes from one codegen'd scan, count>1
-    // aggregate on the 8-byte hash, hit join on that constant-width key,
-    // per-doc interval union — the oracle replays it on the gram strings
-    "q_dup_spans" -> Q(
-      (s, d) => Dedup.dupSpans(tSp(s, d, "documents"), "doc_id", "text", n = 5)
-        .orderBy("doc_id"),
-      Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-              x AS (SELECT doc_id, unnest(range(1, len(w) - 3)) AS i, w
-                    FROM t WHERE len(w) >= 5),
-              g AS (SELECT doc_id, i, array_to_string(w[i:i+4], ' ') AS sh FROM x),
-              d AS (SELECT sh FROM g GROUP BY sh HAVING count(*) > 1),
-              h AS (SELECT doc_id, i FROM g JOIN d USING (sh)),
-              o AS (SELECT doc_id, i,
-                      lag(i) OVER (PARTITION BY doc_id ORDER BY i) AS p FROM h)
-              SELECT doc_id,
-                CAST(sum(CASE WHEN p IS NULL THEN 5 ELSE least(5, i - p) END) AS BIGINT)
-                  AS n_dup_tokens
-              FROM o GROUP BY doc_id ORDER BY doc_id""")),
-
     // the END-TO-END corpus cleaning pipeline, composed from the gated
     // primitives: length floor -> language id == 'en' -> duplicate-2-gram
     // repetition cap -> exact-Jaccard near-dup pairs -> one-survivor-per-
@@ -3155,8 +3133,7 @@ object Queries {
     // the same reason as q_dedup_minhash (this corpus's cross-pairs sit at
     // s >= 0.9 where the banding's deterministic miss prob is < 1e-7).
     "q_dedup_stream" -> Q(
-      (s, d) => graft.streaming.EventStream
-        .runNearDupOnce(s, d, s"q_dedup_stream_sink_${System.nanoTime}")
+      (s, d) => graft.streaming.EventStream.runNearDupOnce(s, d)
         .select("doc_id").orderBy("doc_id"),
       Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
               x AS (SELECT doc_id, w, unnest(range(1, greatest(len(w)-1, 2))) AS i FROM t),
@@ -4409,6 +4386,14 @@ object Queries {
                 UNION ALL SELECT 3, 'click', (SELECT count(*) FROM s3)
                 UNION ALL SELECT 4, 'purchase', (SELECT count(*) FROM s4))
               ORDER BY step""")))
+
+  /** The registry. A repeated key fails here, at load: a map literal would
+    * keep only its last body and silently drop the earlier one. */
+  val all: Map[String, Q] = {
+    val repeated = entries.groupBy(_._1).collect { case (k, es) if es.size > 1 => k }
+    require(repeated.isEmpty, s"repeated query keys: ${repeated.toSeq.sorted.mkString(", ")}")
+    entries.toMap
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map { case (k, q) => (k, q.fn) }

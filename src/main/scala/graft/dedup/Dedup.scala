@@ -162,50 +162,6 @@ object Dedup {
       .agg(count(lit(1)).as("n_hits"))
   }
 
-  /** Span-level duplicate coverage — the substring-dedup primitive of
-    * Lee et al., "Deduplicating Training Data Makes Language Models
-    * Better" (2022), at n-gram granularity: a token position is DUPLICATED
-    * when some full-width n-gram covering it occurs more than once in the
-    * corpus (in any document OR at another position of the same document —
-    * within-doc boilerplate repeats count, unlike whole-doc dedup).
-    * Returns (idCol, n_dup_tokens) for every document with at least one
-    * duplicated position, where n_dup_tokens = exact size of the union of
-    * the duplicated n-token spans.
-    *
-    * Plan shape at 10^12 docs: one codegen'd scan emits positional window
-    * hashes (PosShingleHash64Expr — no string materialization), the
-    * duplicate set is a count>1 aggregate on the 8-byte hash (map-side
-    * partial), hits come back via a shuffle join on that constant-width
-    * key (AQE skew-split absorbs boilerplate hot grams), and the interval
-    * union is a per-document window — bounded by document length, never by
-    * corpus size. No global sort, no broadcast that grows with the corpus.
-    *
-    * The positional-hash table is deliberately NOT persisted: it is
-    * ~24 bytes per corpus TOKEN (larger than the text itself), so
-    * materializing it for the two consumers would spill a corpus-sized
-    * table to executor disk at scale — re-running the codegen'd
-    * column-pruned scan for the aggregate and the hit join is cheaper. */
-  def dupSpans(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = split(col(textCol), " ")
-    // (id, pos, h): position is 1-based.
-    val g =
-      docs.select(col(idCol),
-          posexplode(graft.functions.ShingleHash64Expr.posShingleHash64(toks, n)))
-        .select(col(idCol), (col("pos") + lit(1)).as("pos"), col("col").as("h"))
-    val dup = g.groupBy("h").agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1).select("h")
-    val hits = g.join(dup, "h").select(col(idCol), col("pos"))
-    // union of the length-n intervals [pos, pos+n-1]: positions are unique
-    // per doc, so covered = n for the first + min(n, gap) for each next.
-    val w = Window.partitionBy(idCol).orderBy("pos")
-    hits.withColumn("prev", lag("pos", 1).over(w))
-      .withColumn("add", when(col("prev").isNull, lit(n))
-        .otherwise(least(lit(n), col("pos") - col("prev"))))
-      .groupBy(col(idCol))
-      .agg(sum("add").cast("long").as("n_dup_tokens"))
-  }
-
   /** Word shingles (n-grams) as an array column, from a token array. */
   def shingles(toks: Column, n: Int): Column =
     transform(

@@ -37,31 +37,6 @@ case class ShingleHash64Expr(child: Expression, n: Int) extends UnaryExpression 
     copy(child = newChild)
 }
 
-/** Positional sibling of [[ShingleHash64Expr]]: emits the hash of EVERY
-  * full-width n-token window, in position order (element i = window
-  * starting at token i), with no distinct step — the scan kernel for
-  * span-level duplicate detection, where the position of each occurrence
-  * matters and within-document repeats count. A document shorter than n
-  * tokens yields an empty array (no partial tail windows — a span rule is
-  * only defined for full windows). Same FNV-1a + splitmix stream as the
-  * distinct variant, so the two expressions hash identical windows to
-  * identical values. */
-case class PosShingleHash64Expr(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "pos_shingle_hash64"
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleHash64Expr.posShingleHashes(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ShingleHash64Expr.posShingleHashes($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object ShingleHash64Expr {
 
   /** Shared by interpreted eval and generated code (called statically). */
@@ -99,40 +74,6 @@ object ShingleHash64Expr {
     new GenericArrayData(if (m == out.length) out else out.take(m))
   }
 
-  /** All full-width window hashes in position order (no distinct, no
-    * partial tails). Shares the per-window kernel with the distinct form. */
-  def posShingleHashes(arr: ArrayData, n: Int): GenericArrayData = {
-    val len = arr.numElements()
-    if (len < n) return new GenericArrayData(Array.emptyLongArray)
-    val out = new Array[Long](len - n + 1)
-    var i = 0
-    while (i <= len - n) {
-      var h = 0xcbf29ce484222325L
-      var first = true
-      var j = i
-      val end = i + n
-      while (j < end) {
-        if (!arr.isNullAt(j)) {
-          if (!first) { h ^= 0x20L; h *= 0x100000001b3L }
-          val bytes = arr.getUTF8String(j).getBytes
-          var k = 0
-          while (k < bytes.length) { h ^= bytes(k) & 0xFFL; h *= 0x100000001b3L; k += 1 }
-          first = false
-        }
-        j += 1
-      }
-      h ^= h >>> 30; h *= 0xbf58476d1ce4e5b9L
-      h ^= h >>> 27; h *= 0x94d049bb133111ebL
-      h ^= h >>> 31
-      out(i) = h
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
   def shingleHash64(toks: Column, n: Int): Column =
     GraftColumnBridge.column(ShingleHash64Expr(GraftColumnBridge.expression(toks), n))
-
-  def posShingleHash64(toks: Column, n: Int): Column =
-    GraftColumnBridge.column(PosShingleHash64Expr(GraftColumnBridge.expression(toks), n))
 }

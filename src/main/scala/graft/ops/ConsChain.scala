@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import graft.clean.{DeleteInvalid, Feature, Simplify, Topology}
 import graft.geom.{Geom, Pt}
 import ParcelOps.ConsF
@@ -8,129 +8,22 @@ import ParcelOps.ConsF
 /** The ConsLayer preparation chain the reference runs before tiling
   * (test_parcel.py:66-70): remove_outside_parts → explode_multi_parts →
   * clean() [delete_invalid(small only for non-parts) → topology →
-  * merge_building_parts → simplify → delete_small]. Each stage delegates to
-  * the engine's distributed operators; levels use -1 for NULL so the
-  * reference's NULL-vs-0 comparisons hold.
+  * merge_building_parts → simplify → delete_small], as composable
+  * distributed stages that [[graft.pipeline.AppRun.runMulti]] runs in that
+  * order (s01–s07). Stage shapes:
+  *   remove_outside  = left join parts ⨝ buildings on the building id
+  *   explode         = flatMap
+  *   delete_invalid  = map + a vertex-keyed join of the moved vertices
+  *   topology        = Topology.repair's vertex/segment cell shuffles over
+  *                     ALL features at once (municipalities never share
+  *                     coordinates, so one global pass is correct)
+  *   merge_parts     = BuildingParts.mergeBuildingParts (ref cogroup)
+  *   simplify        = Simplify.simplifyShared vertex shuffle
+  * Row identity is a global rank assigned ONCE over a deterministic sort
+  * key, so ring⇄feature joins reproduce at any parallelism (SURVEY §7.4).
+  * Levels use -1 for NULL so the reference's NULL-vs-0 comparisons hold.
   */
 object ConsChain {
-
-  /** remove_outside_parts (cons.py:139-173). Duplicate building rows
-    * (sources storing one row per polygon part) resolve LAST-ROW-WINS, the
-    * reference's dict-build behavior — and the behavior its 324-part golden
-    * anchors to. */
-  def removeOutsideParts(cons: Seq[ConsF]): Seq[ConsF] = {
-    val buildings = cons.filter(_.kind == "building").map(b => b.localId -> b).toMap
-    cons.filterNot { f =>
-      f.kind == "part" && (
-        (f.levAbove == 0 && f.levBelow != 0 && f.levBelow != -1) ||
-          (buildings.contains(f.ref) &&
-            !BuildingParts.isInside(f.geometry, buildings(f.ref).geometry)))
-    }
-  }
-
-  /** explode_multi_parts (polygon.py:51-84): one feature per polygon part. */
-  def explode(cons: Seq[ConsF]): Seq[ConsF] =
-    cons.flatMap(f => f.geometry.toSeq.map(p => f.copy(geometry = Array(p))))
-
-  /** delete_invalid_geometries with the ConsLayer query (small-area rules
-    * apply only to non-part features). */
-  def deleteInvalid(spark: SparkSession, cons: Seq[ConsF]): Seq[ConsF] = {
-    val results = cons.map { f =>
-      (f, DeleteInvalid.cleanFeature(f.geometry, querySmall = f.kind != "part"))
-    }
-    val moves = results.flatMap(_._2.moves).toMap
-    results.flatMap { case (f, r) =>
-      r.geometry.map(g => f.copy(geometry = DeleteInvalid.applyMoves(g, moves)))
-    }
-  }
-
-  /** topology over the outer rings of every part, holes passed through.
-    * Ring keys use a data-derived width (max parts per feature), so no
-    * fixed cap can crash on a legitimately large multipolygon. */
-  def topology(spark: SparkSession, cons: Seq[ConsF]): Seq[ConsF] = {
-    import spark.implicits._
-    val indexed = cons.zipWithIndex
-    val w = math.max(1L, cons.iterator.map(_.geometry.length.toLong).maxOption.getOrElse(1L))
-    val feats = indexed.flatMap { case (f, i) =>
-      f.geometry.toSeq.zipWithIndex.map { case (poly, pi) =>
-        Feature(i.toLong * w + pi, poly.head)
-      }
-    }
-    val repaired = Topology.repair(spark.createDataset(feats))
-      .collect().map(f => f.fid -> f.ring).toMap
-    indexed.map { case (f, i) =>
-      f.copy(geometry = f.geometry.zipWithIndex.map { case (poly, pi) =>
-        repaired.getOrElse(i.toLong * w + pi, poly.head) +: poly.tail
-      })
-    }
-  }
-
-  /** shared-vertex simplify over all rings (data-derived key widths). */
-  def simplify(spark: SparkSession, cons: Seq[ConsF]): Seq[ConsF] = {
-    import spark.implicits._
-    val indexed = cons.zipWithIndex
-    val wp = math.max(1L, cons.iterator.map(_.geometry.length.toLong).maxOption.getOrElse(1L))
-    val wr = math.max(1L, cons.iterator.flatMap(_.geometry.iterator.map(_.length.toLong))
-      .maxOption.getOrElse(1L))
-    val feats = indexed.flatMap { case (f, i) =>
-      f.geometry.toSeq.zipWithIndex.flatMap { case (poly, pi) =>
-        poly.toSeq.zipWithIndex.map { case (ring, ri) =>
-          Feature((i.toLong * wp + pi) * wr + ri, ring)
-        }
-      }
-    }
-    val out = Simplify.simplifyShared(spark.createDataset(feats))
-      .collect().map(f => f.fid -> f.ring).toMap
-    indexed.map { case (f, i) =>
-      f.copy(geometry = f.geometry.zipWithIndex.map { case (poly, pi) =>
-        poly.zipWithIndex.map { case (ring, ri) =>
-          out.getOrElse((i.toLong * wp + pi) * wr + ri, ring)
-        }
-      })
-    }
-  }
-
-  /** merge_building_parts via the faithful cogroup operator. */
-  def mergeParts(spark: SparkSession, cons: Seq[ConsF]): Seq[ConsF] = {
-    import spark.implicits._
-    val rows = cons.zipWithIndex.map { case (f, i) =>
-      BuildingParts.ConsRow(s"${f.localId}#$i", f.ref, f.kind,
-        math.max(0, f.levAbove), math.max(0, f.levBelow), 0, "", f.geometry)
-    }
-    val merged = BuildingParts.mergeBuildingParts(spark.createDataset(rows)).collect()
-    merged.map { r =>
-      ConsF(r.localId.split("#")(0), r.ref, r.kind, r.levAbove, r.levBelow, r.geometry)
-    }.toSeq
-  }
-
-  def deleteSmall(cons: Seq[ConsF]): Seq[ConsF] =
-    cons.filter(f => Geom.area(f.geometry) >= Geom.MinArea)
-
-  /** The full reference chain. */
-  def prepare(spark: SparkSession, cons: Seq[ConsF]): Seq[ConsF] = {
-    val a = removeOutsideParts(cons)
-    val b = explode(a)
-    val c = deleteInvalid(spark, b)
-    val d = topology(spark, c)
-    val e = mergeParts(spark, d)
-    val f = simplify(spark, e)
-    deleteSmall(f)
-  }
-
-  // ------------------------------------------------------------------
-  // Fully-distributed chain: the same stages end-to-end in Dataset land,
-  // with NO driver-side Seq bridging. Stage shapes:
-  //   remove_outside  = left join parts ⨝ buildings on the building id
-  //   explode         = flatMap
-  //   delete_invalid  = map + broadcast of the (spike-bounded) moves map
-  //   topology        = Topology.repair's vertex/segment cell shuffles over
-  //                     ALL features at once (municipalities never share
-  //                     coordinates, so one global pass is correct)
-  //   merge_parts     = BuildingParts.mergeBuildingParts (ref cogroup)
-  //   simplify        = Simplify.simplifyShared vertex shuffle
-  // Row identity is a global rank assigned ONCE over a deterministic sort
-  // key, so ring⇄feature joins reproduce at any parallelism (SURVEY §7.4).
-  // ------------------------------------------------------------------
 
   final case class FidCons(fid: Long, f: ConsF)
 
@@ -294,19 +187,4 @@ object ConsChain {
 
   def deleteSmallD(rebuilt: Dataset[FidCons]): Dataset[FidCons] =
     rebuilt.filter(fc => Geom.area(fc.f.geometry) >= Geom.MinArea)
-
-  /** prepare(), distributed, with caller-assigned input order (fid =
-    * position in layer order): semantically equal to the Seq chain — set
-    * equality spec on the reference fixture. */
-  def prepareDistributedOrdered(consOrdered: Dataset[FidCons]): Dataset[ConsF] = {
-    val spark = consOrdered.sparkSession
-    import spark.implicits._
-    // persist the two stages whose outputs feed a bounds-aggregate job AND
-    // the stage transform itself (explodeD/simplifyD derive key widths from
-    // the data), so neither input recomputes
-    val kept = removeOutsidePartsD(consOrdered).persist()
-    val merged = mergePartsD(topologyD(deleteInvalidD(explodeD(kept)))).persist()
-    val out = deleteSmallD(simplifyD(merged)).map(_.f)
-    out
-  }
 }

@@ -134,17 +134,64 @@ object WebGraph {
 
   /** Fixed-iteration PageRank over (src, dst) long edges covering nodes
     * 0..n-1 with no dangling nodes (every synthetic page links out).
-    * Returns (id, rank). Damping 0.85, uniform start 1/n.
-    *
-    * Per iteration: join ranks into the cached degree-annotated edge set
-    * (shuffle = one double per node), aggregate contributions on dst
-    * (partial map-side sums first), left-join back onto the node range so
-    * in-degree-0 nodes keep the teleport mass. localCheckpoint every 5
-    * rounds cuts lineage the same way Adjacency.connectedComponents does.
-    */
+    * Returns (id, rank). Damping 0.85, uniform start 1/n. */
   def pageRank(edges: DataFrame, n: Long, iters: Int,
       damping: Double = 0.85, teleport: Double = 0.15): DataFrame = {
     val spark = edges.sparkSession
+    val nodes = graft.CacheBin.persist(
+      spark.range(n).select(col("id")).repartition(col("id"))
+        .sortWithinPartitions("id"))
+    // teleport is a caller literal (not 1-damping): 1.0-0.85 is
+    // 0.15000000000000002 in IEEE doubles, one ulp off the 0.15 the SQL
+    // oracle parses — bit-parity needs the same literal on both sides
+    // before the shared /n and FMA-free + are applied
+    propagate(edges, nodes, lit(1.0 / n), lit(teleport / n), iters, damping)
+  }
+
+  /** Fixed-iteration TrustRank (Gyöngyi/Garcia-Molina/Pedersen 2004):
+    * PageRank whose teleport mass lands ONLY on a vetted seed set — trust
+    * flows out of known-good pages and decays with distance, so spam farms
+    * far from any seed score ≈ 0 however densely they interlink. The
+    * standard seeded anti-spam score next to [[kCore]]'s structural one.
+    *
+    * The teleport/|S| and 1/|S| constants are computed as single IEEE
+    * divisions of exact operands so the SQL oracle reproduces them
+    * bit-for-bit. Requires every node to have out-degree ≥ 1 (the
+    * synthetic rule guarantees it; dangling mass would otherwise leak). */
+  def trustRank(edges: DataFrame, n: Long, seeds: DataFrame, iters: Int,
+      damping: Double = 0.85, teleport: Double = 0.15): DataFrame = {
+    val spark = edges.sparkSession
+    // seed hygiene: dedup (a duplicate seed row would fan out the node
+    // join and double-count that node's mass every iteration) and count
+    // |S| from the NODE table, not the raw input — a stale seed id
+    // outside [0, n) would otherwise split teleport mass across rows that
+    // never receive it, silently deflating every score
+    val nodes = graft.CacheBin.persist(
+      spark.range(n).select(col("id"))
+        .join(seeds.select(col("v").as("id")).distinct()
+          .withColumn("is_seed", lit(true)), Seq("id"), "left")
+        .select(col("id"), coalesce(col("is_seed"), lit(false)).as("is_seed"))
+        .repartition(col("id")).sortWithinPartitions("id"))
+    val nSeeds = nodes.filter(col("is_seed")).count()
+    require(nSeeds > 0, "trustRank needs a non-empty in-range seed set")
+    def onSeeds(v: Double) = when(col("is_seed"), lit(v)).otherwise(lit(0.0))
+    propagate(edges, nodes, onSeeds(1.0 / nSeeds), onSeeds(teleport / nSeeds),
+      iters, damping)
+  }
+
+  /** The rank-propagation loop of [[pageRank]] and [[trustRank]]: `iters`
+    * rounds of rank ← teleport + damping · Σ(in-neighbour rank / out-degree)
+    * over `nodes` (keyed by id, hash(id)-partitioned and id-sorted),
+    * starting from `init`. `init` and `teleport` are columns over `nodes`.
+    *
+    * Per iteration: join ranks into the cached degree-annotated edge set
+    * (shuffle = one double per node), aggregate contributions on dst
+    * (partial map-side sums first), left-join back onto the node table so
+    * in-degree-0 nodes keep the teleport mass. localCheckpoint every 5
+    * rounds cuts lineage the same way Adjacency.connectedComponents does.
+    */
+  private def propagate(edges: DataFrame, nodes: DataFrame, init: Column,
+      teleport: Column, iters: Int, damping: Double): DataFrame = {
     // The edge table is exchanged and sorted exactly ONCE. Partitioned AND
     // sorted on src before persisting, the cached scan reports hash(src)
     // partitioning + src ordering, so every iteration's sort-merge joins
@@ -161,15 +208,11 @@ object WebGraph {
     val deg = graft.CacheBin.persist(
       edgesP.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
         .sortWithinPartitions("src"))
-    // nodes cached on the same layout keyed by id: the mass join's left
-    // side then never moves either, and each new rank table comes out of
-    // that SMJ already hash(id)-partitioned and id-sorted for the NEXT
-    // iteration's joins — steady state is one exchange per iteration
-    // (the partially-aggregated per-dst mass), nothing else
-    val nodes = graft.CacheBin.persist(
-      spark.range(n).select(col("id")).repartition(col("id"))
-        .sortWithinPartitions("id"))
-    var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"))
+    // the mass join's left side (nodes) never moves either, and each new
+    // rank table comes out of that SMJ already hash(id)-partitioned and
+    // id-sorted for the NEXT iteration's joins — steady state is one
+    // exchange per iteration (the partially-aggregated per-dst mass)
+    var ranks = nodes.select(col("id"), init.as("rank"))
     for (it <- 1 to iters) {
       // per-src outgoing mass first (node-sized join — one double per
       // src), THEN the edge join: the big table only ever streams through
@@ -184,67 +227,7 @@ object WebGraph {
       ranks = nodes
         .join(contrib, nodes("id") === contrib("dst"), "left")
         .select(col("id"),
-          // teleport is a caller literal (not 1-damping): 1.0-0.85 is
-          // 0.15000000000000002 in IEEE doubles, one ulp off the 0.15 the
-          // SQL oracle parses — bit-parity needs the same literal on both
-          // sides before the shared /n and FMA-free + are applied
-          (lit(teleport / n) +
-            lit(damping) * coalesce(col("mass"), lit(0.0))).as("rank"))
-      if (it % 5 == 0) ranks = ranks.localCheckpoint()
-    }
-    ranks
-  }
-
-  /** Fixed-iteration TrustRank (Gyöngyi/Garcia-Molina/Pedersen 2004):
-    * PageRank whose teleport mass lands ONLY on a vetted seed set — trust
-    * flows out of known-good pages and decays with distance, so spam farms
-    * far from any seed score ≈ 0 however densely they interlink. The
-    * standard seeded anti-spam score next to [[kCore]]'s structural one.
-    *
-    * Same single-exchange-per-iteration discipline as [[pageRank]] (edge
-    * table partitioned+sorted on src ONCE; degrees and the seed-flagged
-    * node table share the layout; per-iteration movement = one double per
-    * node). The teleport/|S| and 1/|S| constants are computed as single
-    * IEEE divisions of exact operands so the SQL oracle reproduces them
-    * bit-for-bit. Requires every node to have out-degree ≥ 1 (the
-    * synthetic rule guarantees it; dangling mass would otherwise leak). */
-  def trustRank(edges: DataFrame, n: Long, seeds: DataFrame, iters: Int,
-      damping: Double = 0.85, teleport: Double = 0.15): DataFrame = {
-    val spark = edges.sparkSession
-    val edgesP = graft.CacheBin.persist(
-      edges.repartition(col("src")).sortWithinPartitions("src"))
-    val deg = graft.CacheBin.persist(
-      edgesP.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
-        .sortWithinPartitions("src"))
-    // seed hygiene: dedup (a duplicate seed row would fan out the node
-    // join and double-count that node's mass every iteration) and count
-    // |S| from the NODE table, not the raw input — a stale seed id
-    // outside [0, n) would otherwise split teleport mass across rows that
-    // never receive it, silently deflating every score
-    val nodes = graft.CacheBin.persist(
-      spark.range(n).select(col("id"))
-        .join(seeds.select(col("v").as("id")).distinct()
-          .withColumn("is_seed", lit(true)), Seq("id"), "left")
-        .select(col("id"), coalesce(col("is_seed"), lit(false)).as("is_seed"))
-        .repartition(col("id")).sortWithinPartitions("id"))
-    val nSeeds = nodes.filter(col("is_seed")).count()
-    require(nSeeds > 0, "trustRank needs a non-empty in-range seed set")
-    val tele = teleport / nSeeds
-    val init = 1.0 / nSeeds
-    var ranks = nodes.select(col("id"),
-      when(col("is_seed"), lit(init)).otherwise(lit(0.0)).as("rank"))
-    for (it <- 1 to iters) {
-      val outMass = ranks
-        .join(deg, ranks("id") === deg("src"))
-        .select(col("src"), (col("rank") / col("deg")).as("c"))
-      val contrib = edgesP
-        .join(outMass, "src")
-        .groupBy("dst").agg(sum("c").as("mass"))
-      ranks = nodes
-        .join(contrib, nodes("id") === contrib("dst"), "left")
-        .select(col("id"),
-          (when(col("is_seed"), lit(tele)).otherwise(lit(0.0)) +
-            lit(damping) * coalesce(col("mass"), lit(0.0))).as("rank"))
+          (teleport + lit(damping) * coalesce(col("mass"), lit(0.0))).as("rank"))
       if (it % 5 == 0) ranks = ranks.localCheckpoint()
     }
     ranks

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming face of the engine. The reference is batch-only
   * (SURVEY §2.8), so streaming here covers the graft's ingest shape: a
@@ -10,26 +9,27 @@ import org.apache.spark.sql.types.StructType
   * provably equivalent to the batch q_event_windows query — the streaming
   * and batch plans share the same grouping semantics, so a pipeline can
   * switch between backfill (batch) and live (stream) with identical results.
+  * Every bounded `run*Once` goes through one run-once harness, [[drainOnce]].
   */
 object EventStream {
 
-  /** Scratch root for EPHEMERAL streaming state (the run-once harness
-    * drains a bounded backfill into a memory sink and discards the
-    * checkpoint). The default temp dir sits on a disk filesystem, and
-    * HDFS-backed state store commits fsync per partition per store per
+  /** Scratch root of ONE bounded run (see [[drainOnce]], which deletes it
+    * when the run ends). The default temp dir sits on a disk filesystem,
+    * and HDFS-backed state store commits fsync per partition per store per
     * micro-batch — measured 430 s of task time at 10 s of task CPU on the
     * interval join (guide §7.4 "blocked on I/O", §5). A RAM-backed tmpfs
     * removes the sync stalls; durability is irrelevant by construction
     * here (a crash restarts the whole bounded run). Production streams
     * with real recovery contracts pass their own durable
-    * checkpointLocation — [[GeoPipeline.appendStream]] still does. */
-  def scratchDir(prefix: String): String = {
+    * checkpointLocation — [[graft.pipeline.GeoPipeline.appendStream]]
+    * still does. */
+  private def scratchDir(): String = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     val base =
       if (java.nio.file.Files.isDirectory(shm) &&
         java.nio.file.Files.isWritable(shm)) shm
       else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    java.nio.file.Files.createTempDirectory(base, prefix).toString
+    java.nio.file.Files.createTempDirectory(base, "graft_stream_").toString
   }
 
   /** Start a query with checkpoint-file CHECKSUMMING off (Spark 4.1
@@ -62,6 +62,52 @@ object EventStream {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** The run-once harness every bounded streaming run goes through: it
+    * drains the stream `query` builds into a memory sink with a generated
+    * unique name and returns that table. The checkpoint lives under a
+    * fresh scratch root, deleted when the run ends whatever its outcome.
+    * With `staged = Some((rows, sentinels))`, `rows` are first written to
+    * `<root>/in`, the directory `query` receives; after the first drain
+    * the sentinels are appended there and drained too. Append mode emits
+    * a session or an outer-join miss only once the watermark passes its
+    * end, and far-future sentinels move it past every real row. */
+  private[streaming] def drainOnce(spark: SparkSession, outputMode: String,
+      staged: Option[(DataFrame, DataFrame)] = None)(
+      query: String => DataFrame): DataFrame = {
+    val root = java.nio.file.Paths.get(scratchDir())
+    try {
+      val in = root.resolve("in").toString
+      staged.foreach(_._1.write.parquet(in))
+      val name = s"graft_run_${runSeq.incrementAndGet()}"
+      val q = startUnchecksummed(spark)(query(in).writeStream
+        .option("checkpointLocation", root.resolve("cp").toString)
+        .outputMode(outputMode).format("memory").queryName(name).start())
+      try {
+        q.processAllAvailable()
+        staged.foreach { case (_, sentinels) =>
+          sentinels.write.mode("append").parquet(in)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+      spark.table(name)
+    } finally {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally walk.close()
+    }
+  }
+
+  /** The `table` parquet of `sfDir` as a file stream. FileStreamSource
+    * needs a directory and the table is a single file, so a glob filter
+    * scopes the directory scan to it. */
+  private[streaming] def tableStream(spark: SparkSession, sfDir: String,
+      table: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(s"$sfDir/$table.parquet").schema)
+      .option("pathGlobFilter", s"$table.parquet").parquet(sfDir)
 
   /** Tumbling 5-minute windowed counts/sums, streaming flavor. */
   def windowedAgg(events: DataFrame): DataFrame =
@@ -198,23 +244,15 @@ object EventStream {
   /** Run nearDupFilter synchronously over the sf documents table split by
     * doc_id parity — odd ids stream against the even-id static corpus —
     * and return the surviving rows (the q_dedup_stream driver shape). */
-  def runNearDupOnce(spark: SparkSession, sfDir: String, queryName: String): DataFrame = {
-    val schema: StructType = spark.read
-      .parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
-      .filter(col("doc_id") % 2 === 1)
-      .select("doc_id", "text")
+  def runNearDupOnce(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
       .filter(col("doc_id") % 2 === 0)
       .select("doc_id", "text")
-    val q = startUnchecksummed(spark)(nearDupFilter(stream, corpus).writeStream
-      .option("checkpointLocation", scratchDir("graft_neardup_cp_"))
-      .outputMode("append").format("memory").queryName(queryName).start())
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    drainOnce(spark, "append")(_ => nearDupFilter(
+      tableStream(spark, sfDir, "documents")
+        .filter(col("doc_id") % 2 === 1)
+        .select("doc_id", "text"),
+      corpus))
   }
 
   /** STREAMING face of the flagship spatial join: the same UDF-free cell
@@ -242,49 +280,12 @@ object EventStream {
         col("zone_id"), col("n"))
   }
 
-  private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Run zoneWindowCounts over the parquet events of `sfDir` synchronously
     * (memory sink, complete mode) and return the result. */
   def runZoneWindowsOnce(spark: SparkSession, sfDir: String,
-      zones: Seq[graft.spatial.Zone], grid: graft.spatial.CellGrid): DataFrame = {
-    val schema: StructType = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-    val name = s"zone_windows_${runSeq.incrementAndGet()}"
-    val q = startUnchecksummed(spark)(zoneWindowCounts(stream, zones, grid).writeStream
-      .option("checkpointLocation", scratchDir("graft_zonewin_cp_"))
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start())
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
-  }
-
-  /** Run streamingDedup over the documents table synchronously. */
-  def runDedupOnce(spark: SparkSession, sfDir: String, queryName: String): DataFrame = {
-    import spark.implicits._
-    val schema: StructType = spark.read
-      .parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
-    val keyed = stream
-      .select(substring(col("text"), 1, 30).as("k"), col("doc_id"))
-      .as[(String, Long)]
-    val q = startUnchecksummed(spark)(streamingDedup(keyed).writeStream
-      .option("checkpointLocation", scratchDir("graft_dedup_cp_"))
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
-  }
+      zones: Seq[graft.spatial.Zone], grid: graft.spatial.CellGrid): DataFrame =
+    drainOnce(spark, "complete")(_ =>
+      zoneWindowCounts(tableStream(spark, sfDir, "events"), zones, grid))
 
   /** Run the streaming link-window rollup synchronously: readStream over
     * the documents parquet, the SAME pure-column page synthesis as the
@@ -292,24 +293,9 @@ object EventStream {
     * event-time windows (WebGraph.hostWindowCounts), memory sink. `n` is
     * the corpus row count (one cheap batch count, passed in so the stream
     * stays a pure column map). */
-  def runHostWindowsOnce(spark: SparkSession, sfDir: String, n: Long): DataFrame = {
-    val schema: StructType = spark.read
-      .parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
-    val name = s"host_windows_${runSeq.incrementAndGet()}"
-    val q = startUnchecksummed(spark)(graft.ops.WebGraph
-      .hostWindowCounts(graft.sources.Pages.linkedPagesFrom(stream, n))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start())
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
-  }
+  def runHostWindowsOnce(spark: SparkSession, sfDir: String, n: Long): DataFrame =
+    drainOnce(spark, "complete")(_ => graft.ops.WebGraph.hostWindowCounts(
+      graft.sources.Pages.linkedPagesFrom(tableStream(spark, sfDir, "documents"), n)))
 
   /** Gap-based session windows via Spark's NATIVE `session_window`: the
     * streaming aggregation operator merges overlapping per-key windows in
@@ -344,27 +330,15 @@ object EventStream {
   def runSessionWindowsOnce(spark: SparkSession, sfDir: String,
       gapSec: Long): DataFrame = {
     val batch = spark.read.parquet(s"$sfDir/events.parquet")
-    val dir = scratchDir("graft_sessions_")
-    batch.write.mode("overwrite").parquet(s"$dir/in")
-    val stream = spark.readStream.schema(batch.schema).parquet(s"$dir/in")
-    val name = s"session_windows_${runSeq.incrementAndGet()}"
-    val q = startUnchecksummed(spark)(sessionWindowAgg(stream, gapSec).writeStream
-      .option("checkpointLocation", scratchDir("graft_sess_cp_"))
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start())
-    q.processAllAvailable()
     val maxTs = batch
       .agg(max(expr("unix_micros(cast(ts as timestamp)) div 1000000")))
       .head().getLong(0)
-    batch.limit(1)
+    val sentinel = batch.limit(1)
       .withColumn("user_id", lit(-1L))
       .withColumn("ts", timestamp_seconds(lit(maxTs + 2 * gapSec + 10)))
-      .write.mode("append").parquet(s"$dir/in")
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name).filter(col("user_id") >= 0)
+    drainOnce(spark, "append", Some((batch, sentinel)))(in =>
+      sessionWindowAgg(spark.readStream.schema(batch.schema).parquet(in), gapSec))
+      .filter(col("user_id") >= 0)
   }
 
   /** STREAM–STREAM event-time interval join — the attribution shape
@@ -449,40 +423,21 @@ object EventStream {
     * them, so one drain suffices (no watermark-flush sentinel needed —
     * that is only an append-mode AGGREGATION/outer-join concern). */
   def runIntervalJoinOnce(spark: SparkSession, sfDir: String,
-      maxDelaySec: Long): DataFrame = {
-    val schema: StructType = spark.read.parquet(s"$sfDir/events.parquet").schema
-    def src() = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(sfDir)
-    val imps = src().filter(col("event_id") % 2 === 0)
-    val clks = src().filter(col("event_id") % 2 === 1)
-    val name = s"interval_join_${runSeq.incrementAndGet()}"
-    val q = startUnchecksummed(spark)(intervalJoin(imps, clks, "event_type", maxDelaySec).writeStream
-      .option("checkpointLocation", scratchDir("graft_ijoin_cp_"))
-      .outputMode("append").format("memory").queryName(name).start())
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
-  }
+      maxDelaySec: Long): DataFrame =
+    drainOnce(spark, "append") { _ =>
+      def src() = tableStream(spark, sfDir, "events")
+      intervalJoin(src().filter(col("event_id") % 2 === 0),
+        src().filter(col("event_id") % 2 === 1), "event_type", maxDelaySec)
+    }
 
   /** Run [[intervalJoinOuter]] synchronously. Unmatched impressions only
     * emit when the watermark passes their horizon, so after draining the
     * real data the harness appends one far-future sentinel row to EACH
     * stream (the global watermark is the MIN across inputs — both must
-    * advance) and drains again; sentinel ids are negative and filtered. */
+    * advance) and drains again; sentinel rows are filtered by type. */
   def runIntervalJoinOuterOnce(spark: SparkSession, sfDir: String,
       maxDelaySec: Long): DataFrame = {
     val batch = spark.read.parquet(s"$sfDir/events.parquet")
-    val dir = scratchDir("graft_ijoin_")
-    batch.write.mode("overwrite").parquet(s"$dir/in")
-    def src() = spark.readStream.schema(batch.schema).parquet(s"$dir/in")
-    val imps = src().filter(col("event_id") % 2 === 0)
-    val clks = src().filter(col("event_id") % 2 === 1)
-    val name = s"interval_join_outer_${runSeq.incrementAndGet()}"
-    val q = startUnchecksummed(spark)(intervalJoinOuter(imps, clks, "event_type", maxDelaySec,
-        watermarkDelay = "0 seconds").writeStream
-      .option("checkpointLocation", scratchDir("graft_ijoino_cp_"))
-      .outputMode("append").format("memory").queryName(name).start())
-    q.processAllAvailable()
     val maxUs = batch
       .agg(max(unix_micros(col("ts").cast("timestamp")))).head().getLong(0)
     val sentinelTs = timestamp_micros(
@@ -496,31 +451,12 @@ object EventStream {
       .withColumn("event_id", lit(id))
       .withColumn("ts", sentinelTs)
       .withColumn("event_type", lit("zz_sentinel"))
-    sentinel(2000000001L).unionByName(sentinel(2000000002L))
-      .write.mode("append").parquet(s"$dir/in")
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name).filter(col("event_type") =!= "zz_sentinel")
-  }
-
-  /** Run the streaming agg over the parquet events of `sfDir` synchronously
-    * (memory sink, complete mode) and return the result as a DataFrame. */
-  def runOnce(spark: SparkSession, sfDir: String, queryName: String): DataFrame = {
-    val schema: StructType = spark.read
-      .parquet(s"$sfDir/events.parquet").schema
-    // FileStreamSource needs a directory; the testdata table is a single
-    // file, so scope the directory scan with a glob filter
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-    val q = startUnchecksummed(spark)(windowedAgg(stream).writeStream
-      .option("checkpointLocation", scratchDir("graft_win_cp_"))
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    val sentinels = sentinel(2000000001L).unionByName(sentinel(2000000002L))
+    drainOnce(spark, "append", Some((batch, sentinels))) { in =>
+      def src() = spark.readStream.schema(batch.schema).parquet(in)
+      intervalJoinOuter(src().filter(col("event_id") % 2 === 0),
+        src().filter(col("event_id") % 2 === 1), "event_type", maxDelaySec,
+        watermarkDelay = "0 seconds")
+    }.filter(col("event_type") =!= "zz_sentinel")
   }
 }

@@ -5,7 +5,8 @@ import graft.TestSpark
 
 /** Exact duplicate-span detection: shared-gram marking, self-repeat
   * periodicity, the touch-vs-gap merge boundary (next.pos ≤ prev.pos + k),
-  * and partitioning invariance. k = 8 throughout. */
+  * and partitioning invariance at k = 8; exact interval unions of
+  * cross-doc and overlapping within-doc repeats at k = 3. */
 class SpanDedupSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -56,5 +57,39 @@ class SpanDedupSpec extends AnyFunSuite {
     graft.CacheBin.drain()
     assert(a === b)
     assert(!a.exists(_._1 == 9L))
+  }
+
+  /** dup_tokens per doc at k = 3: the size of the union of the duplicated
+    * 3-token windows, since touching or overlapping windows merge into one
+    * span. */
+  private def dupTokens(rows: Seq[(Long, String)]): Map[Long, Long] = {
+    import spark.implicits._
+    val out = SpanDedup.dupProfile(rows.toDF("doc_id", "text"), k = 3)
+      .select("doc_id", "dup_tokens").as[(Long, Long)].collect().toMap
+    graft.CacheBin.drain()
+    out
+  }
+
+  test("dup_tokens is the exact interval union on cross-doc duplicates") {
+    // docs 1 and 2 share the 6-token run "c d e f g h" => duplicated
+    // 3-grams at positions {2,3,4,5} in doc 1 and {1,2,3,4} in doc 2; the
+    // union of those length-3 spans covers 6 tokens in each. doc 3 is
+    // clean, doc 4 is shorter than k (no windows).
+    assert(dupTokens(Seq(
+      (1L, "a b c d e f g h"),
+      (2L, "z c d e f g h w"),
+      (3L, "nothing shared here at all"),
+      (4L, "c d"))) === Map(1L -> 6L, 2L -> 6L))
+  }
+
+  test("dup_tokens counts within-doc repeats and unions overlaps exactly") {
+    // doc 1: "x y z" at positions 0 and 5, disjoint spans => 3 + 3 = 6.
+    // doc 2 windows: "x y x"(0) "y x y"(1) "x y x"(2) "y x y"(3) "x y z"(4);
+    // the first two repeat inside doc 2 and "x y z" matches doc 1, so all
+    // five overlapping windows are duplicated => the whole doc, 7 tokens.
+    assert(dupTokens(Seq(
+      (1L, "x y z q r x y z"),
+      (2L, "x y x y x y z"),
+      (3L, "completely unrelated filler text"))) === Map(1L -> 6L, 2L -> 7L))
   }
 }

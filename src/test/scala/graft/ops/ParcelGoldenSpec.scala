@@ -65,15 +65,7 @@ class ParcelChainGoldenSpec extends AnyFunSuite {
   def parcels: Seq[Parcel] = Wkb.readTsv(s"$res/parcel.tsv").map { case (a, g) =>
     Parcel(a("localId"), null, 0, g)
   }
-  def consRaw: Seq[ConsF] = Wkb.readTsv(s"$res/cons_gpkg.tsv").map { case (a, g) =>
-    val lid = a("localId")
-    def i(k: String) = a.get(k).filter(_.nonEmpty)
-      .flatMap(v => scala.util.Try(v.toDouble.toInt).toOption).getOrElse(-1)
-    ConsF(lid, ParcelOps.refOf(lid), ParcelOps.kindOf(lid),
-      i("numberOfFloorsAboveGround"), i("numberOfFloorsBelowGround"), g)
-  }
-
-  lazy val prepared: Seq[ConsF] = ConsChain.prepare(spark, consRaw)
+  lazy val prepared: Seq[ConsF] = ConsPrepare(spark, ConsPrepare.fixture)
 
   test("reference golden: count_parts after the full chain -> 324 total, 7/4 on refs") {
     import spark.implicits._
@@ -140,14 +132,7 @@ class DistributedMergeSpec extends AnyFunSuite {
     val parcels = Wkb.readTsv(s"$res/parcel.tsv").map { case (a, g) =>
       Parcel(a("localId"), null, 0, g)
     }
-    val consRaw = Wkb.readTsv(s"$res/cons_gpkg.tsv").map { case (a, g) =>
-      val lid = a("localId")
-      def i(k: String) = a.get(k).filter(_.nonEmpty)
-        .flatMap(v => scala.util.Try(v.toDouble.toInt).toOption).getOrElse(-1)
-      ConsF(lid, ParcelOps.refOf(lid), ParcelOps.kindOf(lid),
-        i("numberOfFloorsAboveGround"), i("numberOfFloorsBelowGround"), g)
-    }
-    val prepared = ConsChain.prepare(spark, consRaw)
+    val prepared = ConsPrepare(spark, ConsPrepare.fixture)
     val pcl1 = ParcelOps.deleteVoidParcels(
       spark.createDataset(parcels), spark.createDataset(prepared))
     val pcl2 = ParcelOps.createMissingParcels(pcl1, spark.createDataset(prepared))
@@ -205,14 +190,7 @@ class PartsCountGoldenSpec extends AnyFunSuite {
     val parcels = Wkb.readTsv(s"$res/parcel.tsv").map { case (a, g) =>
       Parcel(a("localId"), null, 0, g)
     }
-    val consRaw = Wkb.readTsv(s"$res/cons_gpkg.tsv").map { case (a, g) =>
-      val lid = a("localId")
-      def i(k: String) = a.get(k).filter(_.nonEmpty)
-        .flatMap(v => scala.util.Try(v.toDouble.toInt).toOption).getOrElse(-1)
-      ParcelOps.ConsF(lid, ParcelOps.refOf(lid), ParcelOps.kindOf(lid),
-        i("numberOfFloorsAboveGround"), i("numberOfFloorsBelowGround"), g)
-    }
-    val prepared = ConsChain.prepare(spark, consRaw)
+    val prepared = ConsPrepare(spark, ConsPrepare.fixture)
     val pcl1 = ParcelOps.deleteVoidParcels(
       spark.createDataset(parcels), spark.createDataset(prepared))
     val pcl2 = ParcelOps.createMissingParcels(pcl1, spark.createDataset(prepared))

@@ -41,7 +41,7 @@ class CadastreGmlSpec extends AnyFunSuite {
 
   test("reference golden: test_simplify2 — chain keeps geometries GEOS-valid (test_cons.py:423-446)") {
     import graft.TestSpark
-    import graft.ops.{ConsChain, ParcelOps}
+    import graft.ops.{ConsPrepare, ParcelOps}
     import graft.ops.ParcelOps.ConsF
     val spark = TestSpark.spark
     // the reference appends 38023.buildingpart.gml TWICE (as building and
@@ -59,7 +59,7 @@ class CadastreGmlSpec extends AnyFunSuite {
       }
     val cons = consOf(feats, asPart = false) ++ consOf(feats, asPart = true)
     assert(cons.length === 48) // featureCount doubles, like the reference
-    val out = ConsChain.prepare(spark, cons)
+    val out = ConsPrepare(spark, cons)
     assert(out.nonEmpty)
     // every surviving ring is GEOS-valid (no self-intersection, >= 3 pts)
     for (f <- out; poly <- f.geometry; ring <- poly) {

@@ -8,7 +8,8 @@ class EventStreamSpec extends AnyFunSuite {
 
   test("streaming windowed agg equals the batch q_event_windows result") {
     import spark.implicits._
-    val streamed = EventStream.runOnce(spark, TestSpark.sf001, "stream_windows")
+    val streamed = EventStream.drainOnce(spark, "complete")(_ => EventStream
+        .windowedAgg(EventStream.tableStream(spark, TestSpark.sf001, "events")))
       .as[(Long, String, Long, Double)].collect().toSet
     val batch = graft.Queries.queries("q_event_windows")(spark, TestSpark.sf001)
       .as[(Long, String, Long, Double)].collect().toSet
@@ -55,10 +56,24 @@ class EventStreamSpec extends AnyFunSuite {
     assert(out === Seq(("A", 1L), ("B", 2L), ("C", 4L)), out.toString)
   }
 
+  test("a run-once query with a sentinel flush leaves no scratch directory behind") {
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    val base = if (java.nio.file.Files.isDirectory(shm)) shm
+      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def scratch() = base.toFile.list().filter(_.startsWith("graft_")).toSet
+    val before = scratch()
+    val sessions = EventStream.runSessionWindowsOnce(spark, TestSpark.sf001, 1800L)
+    assert(sessions.count() > 0)
+    assert(scratch() -- before === Set.empty[String])
+  }
+
   test("stateful streaming dedup equals batch exactDedup keep_ids (single batch)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val streamed = EventStream.runDedupOnce(spark, TestSpark.sf001, "stream_dedup")
+    val streamed = EventStream.drainOnce(spark, "append")(_ => EventStream
+        .streamingDedup(EventStream.tableStream(spark, TestSpark.sf001, "documents")
+          .select(substring(col("text"), 1, 30).as("k"), col("doc_id"))
+          .as[(String, Long)]))
       .as[(String, Long)].collect().toMap
     val batch = graft.dedup.Dedup.exactDedup(
         spark.read.parquet(s"${TestSpark.sf001}/documents.parquet"),

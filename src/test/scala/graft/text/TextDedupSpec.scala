@@ -355,57 +355,6 @@ class DedupSpec extends AnyFunSuite {
       col("doc_id") % 97 === 0, n = 4).queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
   }
-
-  test("dupSpans: exact interval union on hand-built cross-doc duplicates") {
-    import spark.implicits._
-    // docs 1 and 2 share the 6-token run "c d e f g h" => 3-grams at
-    // positions {3,4,5,6} in doc 1 and {2,3,4,5} in doc 2; the union of
-    // those length-3 spans covers 6 tokens in each. doc 3 is clean.
-    val docs = Seq(
-      (1L, "a b c d e f g h"),
-      (2L, "z c d e f g h w"),
-      (3L, "nothing shared here at all"),
-      (4L, "c d")                               // shorter than n: no windows
-    ).toDF("doc_id", "text")
-    val got = Dedup.dupSpans(docs, "doc_id", "text", n = 3)
-      .as[(Long, Long)].collect().toMap
-    assert(got === Map(1L -> 6L, 2L -> 6L))
-  }
-
-  test("dupSpans counts within-document repeats and unions overlaps exactly") {
-    import spark.implicits._
-    // "x y z" occurs twice INSIDE doc 1 (positions 1 and 6; disjoint spans
-    // => 3 + 3 = 6 covered). In doc 2 the two occurrences overlap
-    // (positions 1 and 3 => union [1,5] = 5 covered). No other doc shares.
-    val docs = Seq(
-      (1L, "x y z q r x y z"),
-      (2L, "x y x y x y z"),     // grams: "x y x"(1) "y x y"(2) "x y x"... wait
-      (3L, "completely unrelated filler text")
-    ).toDF("doc_id", "text")
-    // doc 2 grams: pos1 "x y x", pos2 "y x y", pos3 "x y x", pos4 "y x y",
-    // pos5 "x y z": "x y x" dups at {1,3}, "y x y" at {2,4}, and "x y z"
-    // matches doc 1 => doc 2 covered = union of spans at 1,2,3,4,5 = 7
-    // (entire doc); doc 1 covered = spans at 1 and 6 = 6.
-    val got = Dedup.dupSpans(docs, "doc_id", "text", n = 3)
-      .as[(Long, Long)].collect().toMap
-    assert(got === Map(1L -> 6L, 2L -> 7L))
-  }
-
-  test("posShingleHash64 is position-ordered and distinct-consistent with shingleHash64") {
-    import spark.implicits._
-    val docs = Seq((1L, "a b c a b c d"), (2L, "q r"), (3L, "s t u")).toDF("doc_id", "text")
-    val both = docs.select(col("doc_id"),
-        graft.functions.ShingleHash64Expr.posShingleHash64(split(col("text"), " "), 3).as("p"),
-        graft.functions.ShingleHash64Expr.shingleHash64(split(col("text"), " "), 3).as("d"))
-      .as[(Long, Seq[Long], Seq[Long])].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    // doc 1: 5 windows, "a b c" repeated at positions 1 and 4
-    val (p1, d1) = both(1L)
-    assert(p1.length === 5 && p1(0) === p1(3) && p1.distinct.toSet === d1.toSet)
-    // shorter than n: positional form is empty; distinct form hashes the tail
-    assert(both(2L)._1.isEmpty && both(2L)._2.nonEmpty)
-    // exactly n tokens: one window, identical across both forms
-    assert(both(3L)._1 === both(3L)._2)
-  }
 }
 
 class SimilaritySpec extends AnyFunSuite {
