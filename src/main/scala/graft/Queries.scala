@@ -2707,7 +2707,7 @@ object Queries {
     // the 100 TB shape). Oracle = the exact all-shared-gram pair scan.
     "q_containment" -> Q(
       (s, d) => Dedup.containmentPairs(
-          t(s, d, "documents"), "doc_id", "text", shingleN = 3, threshold = 0.7)
+          t(s, d, "documents"), "doc_id", "text", threshold = 0.7)
         .orderBy("id_a", "id_b"),
       Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
               x AS (SELECT doc_id, w, unnest(range(1, greatest(len(w)-1, 2))) AS i FROM t),
@@ -3158,7 +3158,7 @@ object Queries {
     // DuckDB row gates recall, not just shape.
     "q_dedup_minhash" -> Q(
       (s, d) => Dedup.minhashNearDups(t(s, d, "documents"), "doc_id", "text",
-        shingleN = 3, threshold = 0.6)
+        threshold = 0.6)
         .orderBy("id_a", "id_b"),
       Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
               x AS (SELECT doc_id, w, unnest(range(1, greatest(len(w)-1, 2))) AS i FROM t),

@@ -377,7 +377,7 @@ object Sweep {
 
   /** MinHash+LSH near-dups over n replicas (weak by default: 4 per core);
     * recall is measured against the unreplicated pair count × n, since
-    * maxBucket may drop hot random band collisions at scale. */
+    * the band cap may drop hot random band collisions at scale. */
   private def dedup(spark: SparkSession, cores: Int, n: Long, m: Meter): Out = {
     val base = Dedup.minhashNearDups(
       spark.read.parquet(s"${m.sfDir}/documents.parquet"), "doc_id", "text").count()

@@ -12,13 +12,14 @@ import org.apache.spark.sql.functions._
   * standard training-data pipeline suite.
   *
   * Scale notes: everything is expressed as Catalyst column math + explode +
-  * shuffle-on-key. MinHash signatures are computed with higher-order array
-  * functions (transform/aggregate), NOT per-permutation UDF calls, so the
-  * whole signature stage stays in codegen. The LSH band join shuffles only
-  * (band_id, band_hash, doc_id) pairs — constant width regardless of doc
+  * shuffle-on-key. MinHash signatures come from one native expression
+  * (MinHashSigHashedExpr), NOT per-permutation UDF calls, so the whole
+  * signature stage stays in codegen. The LSH band join shuffles only
+  * (band key, doc_id) pairs — constant width regardless of doc
   * size — and the candidate self-join is per-bucket, so hot buckets (boiler-
-  * plate shingles) are the skew risk: cap bucket width upstream via a
-  * count filter (maxBucket) exactly like salting would.
+  * plate shingles) are the skew risk: bucket width is capped upstream by
+  * one count filter ([[Dedup.underCap]]), shared by every band, segment
+  * and fingerprint join.
   */
 object Dedup {
 
@@ -113,28 +114,6 @@ object Dedup {
     graft.sources.Bucketed.appendBucketed(
       keptKeys.select(col("k")).distinct(), table)
 
-  /** Refresh the minhash index with an ingested batch (typically the docs
-    * that survived [[incrementalNearDups]] selection): append their band
-    * membership and shingle sets under the tables' stored bucket specs.
-    * The write-time hot-bucket cap applies within this batch only; a
-    * periodic [[writeMinhashIndex]] rebuild re-compacts and re-caps
-    * globally. */
-  def appendMinhashIndex(batch: DataFrame, idCol: String, textCol: String,
-                         prefix: String,
-                         shingleN: Int = 3, nPerm: Int = 64, bands: Int = 16,
-                         maxBucket: Int = 64): Unit = {
-    val (hashed, bandRows) = shingleBandRows(batch, idCol, textCol,
-      shingleN, nPerm, bands,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keyed = bandRows.select(bandKey.as("bk"), col("id"))
-    val hot = keyed.groupBy("bk").agg(count(lit(1)).as("w"))
-      .filter(col("w") > maxBucket).select("bk")
-    graft.sources.Bucketed.appendBucketed(
-      keyed.join(hot, Seq("bk"), "left_anti"), s"${prefix}_bands")
-    graft.sources.Bucketed.appendBucketed(
-      hashed.select(col("id"), col("sh")), s"${prefix}_sets")
-  }
-
   /** Benchmark decontamination — the training-hygiene gate every corpus
     * runs before a split ships: a training document is CONTAMINATED when it
     * shares any word n-gram with the held-out evaluation set (the overlap
@@ -168,18 +147,37 @@ object Dedup {
       sequence(lit(0), greatest(size(toks) - lit(n), lit(0))),
       i => concat_ws(" ", slice(toks, i + lit(1), lit(n))))
 
-  /** LSH banding: explode signature into (band_id, band_hash) rows. */
-  def lshBands(sig: Column, bands: Int, rows: Int): Column =
-    transform(
-      sequence(lit(0), lit(bands - 1)),
-      b => struct(
-        b.as("band_id"),
-        xxhash64(concat_ws(",", slice(sig, b * lit(rows) + lit(1), lit(rows)))).as("band_hash")))
+  // The MinHash shape of every MinHash entry: 3-word shingles, 64
+  // permutations cut into 16 bands of 4 rows, and band buckets capped at
+  // 64 documents.
+  private[graft] val ShingleN = 3
+  private val NPerm = 64
+  private val Bands = 16
+  private val MaxBucket = 64
 
-  /** Hashed shingle sets + exploded LSH band rows for `docs` — the shared
+  /** MinHash LSH band keys of a hashed-shingle array column: the
+    * signature (MinHashSigHashedExpr, NPerm permutations) cut into Bands
+    * bands, each band hashed and folded with its band id into ONE 8-byte
+    * key. The odd-constant multiply is a bijection of the band hash, so
+    * equal bands always collide onto the same key (no recall loss); a
+    * cross-band collision can only ADD a candidate, which the exact verify
+    * then discards — the key never needs oracle parity. array_repeat hands
+    * every band lambda the signature as its argument, so the signature is
+    * computed once per row, not once per band. */
+  private[graft] def minhashBandKeys(shs: Column): Column = {
+    val rows = NPerm / Bands
+    transform(
+      array_repeat(graft.functions.MinHashSigExpr.minhashSigHashed(shs, NPerm), Bands),
+      (sig, b) =>
+        xxhash64(concat_ws(",", slice(sig, b * lit(rows) + lit(1), lit(rows)))) *
+          lit(0x9E3779B97F4A7C15L) + b)
+  }
+
+  /** Hashed shingle sets + capped LSH band rows for `docs` — the shared
     * front half of the one-shot near-dup join ([[minhashNearDups]]) and the
     * incremental index/batch paths ([[writeMinhashIndex]] /
-    * [[incrementalNearDups]]).
+    * [[incrementalNearDups]]). Returns `sets` (id, shs) and the band rows
+    * (bk, id) minus every band bucket wider than MaxBucket ([[underCap]]).
     *
     * Shingles are HASHED to 8-byte longs at the scan: the signature
     * permutes the hashes (native codegen expr) and the verify join shuffles
@@ -187,60 +185,79 @@ object Dedup {
     * exchange. The hashing itself is one codegen'd pass (ShingleHash64Expr:
     * no string materialization, no interpreted HOF). A 64-bit collision can
     * only MERGE two distinct shingles (≈n²/2^64 odds), indistinguishable in
-    * practice. Both outputs are persisted (CacheBin-registered; the session
-    * driver drains handles after its terminal action): the shingle sets
-    * feed the verify join, and the band rows feed both the hot-bucket scan
-    * and the candidate join. */
-  private def shingleBandRows(
-      docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, nPerm: Int, bands: Int,
-      storage: org.apache.spark.storage.StorageLevel)
+    * practice. Both are persisted (CacheBin-registered; the session driver
+    * drains handles after its terminal action): the shingle sets feed the
+    * verify join, and the band rows feed both the hot-bucket scan and the
+    * candidate join. */
+  private def shingleBandRows(docs: DataFrame, idCol: String, textCol: String)
       : (DataFrame, DataFrame) = {
-    val toks = split(col(textCol), " ")
-    val hashed = graft.CacheBin.persist(docs
-      .select(
-        col(idCol).as("id"),
-        graft.functions.ShingleHash64Expr.shingleHash64(toks, shingleN).as("sh")),
-      storage)
-    val bandRows = graft.CacheBin.persist(hashed
-      .withColumn("sig",
-        graft.functions.MinHashSigExpr.minhashSigHashed(col("sh"), nPerm))
-      .select(col("id"), explode(lshBands(col("sig"), bands, nPerm / bands)).as("b"))
-      .select(col("id"), col("b.band_id"), col("b.band_hash")), storage)
-    (hashed, bandRows)
+    val sets = graft.CacheBin.persist(docs.select(
+      col(idCol).as("id"),
+      graft.functions.ShingleHash64Expr.shingleHash64(split(col(textCol), " "), ShingleN)
+        .as("shs")))
+    val bandRows = graft.CacheBin.persist(
+      sets.select(explode(minhashBandKeys(col("shs"))).as("bk"), col("id")))
+    (sets, underCap(bandRows, "bk", MaxBucket))
   }
 
-  /** (band_id, band_hash) folded into ONE 8-byte key so the incremental
-    * index can be bucketed and sort-merge-joined on a single column. The
-    * odd-constant multiply is a bijection of band_hash, so equal bands
-    * always collide onto the same key (no recall loss); a cross-band
-    * collision can only ADD a candidate, which exact verification then
-    * discards — the key never needs oracle parity. */
-  private def bandKey: Column =
-    col("band_hash") * lit(0x9E3779B97F4A7C15L) + col("band_id")
+  /** The skew cap of the band, segment and fingerprint joins: the keys of
+    * `rows` shared by more than `maxWidth` rows. A boilerplate key shared
+    * by k rows is k² candidate pairs however selective the rest of the key
+    * space is, so it is dropped (LOSSY, by design) before the self-join.
+    * The hot set is found with a map-side-combined groupBy (small result:
+    * only over-cap keys), but it grows with the number of boilerplate
+    * clusters, so it must never be FORCED through the driver: no broadcast
+    * hint. The anti join is left to AQE, whose runtime stats on an
+    * aggregate output are REAL — a small hot set broadcasts, a
+    * corpus-scale one falls back to a spillable sort-merge anti on the
+    * same key the candidate join shuffles on anyway. */
+  private[graft] def overCap(rows: DataFrame, key: String, maxWidth: Long): DataFrame =
+    rows.groupBy(key).agg(count(lit(1)).as("w"))
+      .filter(col("w") > maxWidth).select(key)
+
+  /** `rows` minus every row whose `key` is [[overCap]]. */
+  private[graft] def underCap(rows: DataFrame, key: String, maxWidth: Long): DataFrame =
+    rows.join(overCap(rows, key, maxWidth), Seq(key), "left_anti")
+
+  /** Candidate pairs of a band-key self-join: (id_a < id_b) for every two
+    * rows of `bands` (bk, id) that share a key, once each. */
+  private def bandPairs(bands: DataFrame): DataFrame =
+    bands.as("l")
+      .join(bands.as("r"), col("l.bk") === col("r.bk") && col("l.id") < col("r.id"))
+      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
+      .distinct()
 
   /** Write the corpus MINHASH index for incremental near-dup ingestion:
     * `<prefix>_bands` = (bk, id) band-bucket membership, bucketed+sorted by
-    * bk, with over-cap buckets (width > maxBucket — boilerplate band
-    * collisions) dropped at WRITE time; `<prefix>_sets` = (id, sh) hashed
+    * bk, with over-cap buckets (width > MaxBucket — boilerplate band
+    * collisions) dropped at WRITE time; `<prefix>_sets` = (id, shs) hashed
     * shingle sets, bucketed+sorted by id, for the exact-Jaccard verify.
     * Both shuffles are paid once here — every later batch probe
     * ([[incrementalNearDups]]) reads both tables join-ready, so no
     * corpus-sized exchange ever happens at ingest time. */
   def writeMinhashIndex(corpus: DataFrame, idCol: String, textCol: String,
-                        prefix: String, buckets: Int,
-                        shingleN: Int = 3, nPerm: Int = 64, bands: Int = 16,
-                        maxBucket: Int = 64): Unit = {
-    val (hashed, bandRows) = shingleBandRows(corpus, idCol, textCol,
-      shingleN, nPerm, bands,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keyed = bandRows.select(bandKey.as("bk"), col("id"))
-    val hot = keyed.groupBy("bk").agg(count(lit(1)).as("w"))
-      .filter(col("w") > maxBucket).select("bk")
-    graft.sources.Bucketed.writeBucketed(
-      keyed.join(hot, Seq("bk"), "left_anti"), s"${prefix}_bands", "bk", buckets)
-    graft.sources.Bucketed.writeBucketed(
-      hashed.select(col("id"), col("sh")), s"${prefix}_sets", "id", buckets)
+                        prefix: String, buckets: Int): Unit =
+    minhashIndex(corpus, idCol, textCol, prefix,
+      (rows, table, key) => graft.sources.Bucketed.writeBucketed(rows, table, key, buckets))
+
+  /** Refresh the minhash index with an ingested batch (typically the docs
+    * that survived [[incrementalNearDups]] selection): append their band
+    * membership and shingle sets under the tables' stored bucket specs.
+    * The write-time hot-bucket cap applies within this batch only; a
+    * periodic [[writeMinhashIndex]] rebuild re-compacts and re-caps
+    * globally. */
+  def appendMinhashIndex(batch: DataFrame, idCol: String, textCol: String,
+                         prefix: String): Unit =
+    minhashIndex(batch, idCol, textCol, prefix,
+      (rows, table, _) => graft.sources.Bucketed.appendBucketed(rows, table))
+
+  /** The index writers' one body; `sink(rows, table, bucket key)` writes
+    * or appends. */
+  private def minhashIndex(docs: DataFrame, idCol: String, textCol: String,
+                           prefix: String, sink: (DataFrame, String, String) => Unit): Unit = {
+    val (sets, bands) = shingleBandRows(docs, idCol, textCol)
+    sink(bands, s"${prefix}_bands", "bk")
+    sink(sets, s"${prefix}_sets", "id")
   }
 
   /** Incremental MinHash near-dup: probe an incoming crawl batch against
@@ -257,75 +274,29 @@ object Dedup {
     * sequential, exchange-free scan per ingest (the unavoidable floor of
     * a join-based probe — what the index eliminates is re-shuffling and
     * re-sorting the corpus every batch, measured by the incremental sweep).
-    * The batch self-probe applies the same maxBucket skew cap as the
+    * The batch self-probe applies the same MaxBucket skew cap as the
     * one-shot path; the corpus side was capped at index-write time. */
   def incrementalNearDups(batch: DataFrame, idCol: String, textCol: String,
-                          prefix: String,
-                          shingleN: Int = 3, nPerm: Int = 64, bands: Int = 16,
-                          threshold: Double = 0.6, maxBucket: Int = 64,
-                          storage: org.apache.spark.storage.StorageLevel =
-                            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      : DataFrame = {
+                          prefix: String, threshold: Double = 0.6): DataFrame = {
     val spark = batch.sparkSession
-    val (bHashed, bBands) = shingleBandRows(batch, idCol, textCol,
-      shingleN, nPerm, bands, storage)
-    val bKeyed = graft.CacheBin.persist(
-      bBands.select(bandKey.as("bk"), col("id")), storage)
-    val bHot = bKeyed.groupBy("bk").agg(count(lit(1)).as("w"))
-      .filter(col("w") > maxBucket).select("bk")
-    val bOk = bKeyed.join(bHot, Seq("bk"), "left_anti")
-    val crossCand = bOk
+    val (bSets, bBands) = shingleBandRows(batch, idCol, textCol)
+    val crossCand = bBands
       .join(spark.table(s"${prefix}_bands").withColumnRenamed("id", "id_a"), "bk")
       .select(col("id_a"), col("id").as("id_b")).distinct()
-    val batchCand = bOk.as("l")
-      .join(bOk.as("r"), col("l.bk") === col("r.bk") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b")).distinct()
-    val bSets = bHashed.withColumnRenamed("sh", "shs")
-    // cross pairs read the two sides from different tables (the bucketed
-    // corpus index and the batch), so they cannot go through withOverlap,
-    // which reads both from one; a union would shuffle the corpus index
-    val crossOverlap = crossCand
-      .join(spark.table(s"${prefix}_sets").select(col("id").as("id_a"), col("sh").as("shs_a")), "id_a")
-      .join(bSets.select(col("id").as("id_b"), col("shs").as("shs_b")), "id_b")
-      .withColumn("inter", size(array_intersect(col("shs_a"), col("shs_b"))).cast("double"))
-    jaccardAtLeast(crossOverlap, threshold)
-      .unionByName(jaccardAtLeast(withOverlap(batchCand, bSets), threshold))
+    // the cross side reads its two set tables separately (the bucketed
+    // corpus index and the batch): a union would shuffle the corpus index
+    jaccardAtLeast(withOverlap(crossCand, spark.table(s"${prefix}_sets"), bSets), threshold)
+      .unionByName(jaccardAtLeast(withOverlap(bandPairs(bBands), bSets, bSets), threshold))
   }
 
   /** Full MinHash-LSH near-dup pipeline: doc (id, text) -> candidate pairs
-    * with exact Jaccard >= threshold. Candidates from band-bucket self-join;
-    * exact verification via distinct-shingle set overlap. */
-  def minhashNearDups(
-      docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, nPerm: Int = 64, bands: Int = 16,
-      threshold: Double = 0.6, maxBucket: Int = 64,
-      storage: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    val (hashed, bandRows) =
-      shingleBandRows(docs, idCol, textCol, shingleN, nPerm, bands, storage)
-    // skew guard: drop degenerate buckets wider than maxBucket. The hot
-    // set is found with a map-side-combined groupBy (small result: only
-    // over-cap buckets), but it grows with the number of boilerplate
-    // clusters, so it must never be FORCED through the driver: no
-    // broadcast hint. The anti join is left to AQE, whose runtime stats on
-    // an aggregate output are REAL (unlike the post-explode estimate the
-    // candidate join needs a hint for) — small hot sets broadcast, a
-    // corpus-scale hot set falls back to a spillable sort-merge anti on
-    // the same bucket key the candidate join shuffles on anyway
-    val hot = bandRows.groupBy("band_id", "band_hash")
-      .agg(count(lit(1)).as("w")).filter(col("w") > maxBucket)
-      .select("band_id", "band_hash")
-    val bucketed = bandRows
-      .join(hot, Seq("band_id", "band_hash"), "left_anti")
-    val cand = bucketed.as("l")
-      .join(bucketed.as("r"),
-        col("l.band_id") === col("r.band_id") &&
-          col("l.band_hash") === col("r.band_hash") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .distinct()
-    // verify over the cached hashed-shingle sets
-    jaccardAtLeast(withOverlap(cand, hashed.withColumnRenamed("sh", "shs")), threshold)
+    * with exact Jaccard >= threshold. Candidates from the band-key
+    * self-join ([[bandPairs]]); exact verification via distinct-shingle
+    * set overlap. */
+  def minhashNearDups(docs: DataFrame, idCol: String, textCol: String,
+                      threshold: Double = 0.6): DataFrame = {
+    val (sets, bands) = shingleBandRows(docs, idCol, textCol)
+    jaccardAtLeast(withOverlap(bandPairs(bands), sets, sets), threshold)
   }
 
   /** EXACT n-gram Jaccard pair join with PPJoin-style prefix filtering
@@ -367,12 +338,7 @@ object Dedup {
           col("b.sz") >= lit(threshold) * col("a.sz") - lit(1e-9))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    withOverlap(cand, sets)
-      .withColumn("jaccard",
-        round(col("inter") /
-          (size(col("shs_a")) + size(col("shs_b")) - col("inter")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    jaccardAtLeast(withOverlap(cand, sets, sets), threshold)
   }
 
   /** Exact n-gram CONTAINMENT pairs: C(A,B) = |A∩B| / min(|A|,|B|) ≥ t.
@@ -406,13 +372,12 @@ object Dedup {
     * skew risk → AQE skew-split on the candidate exchange; the fp-epsilon
     * on the prefix bound only ADMITS candidates (verify discards), recall
     * stays 1.0. Requires threshold <= 1. */
-  def containmentPairs(
-      docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, threshold: Double = 0.8): DataFrame = {
+  def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
+                       threshold: Double = 0.8): DataFrame = {
     // prefix of the prospective MIN side: first |S| - ceil(t·|S|) + 1
     // shingles in (df, hash) order (ceil via the epsilon-guarded fp bound,
     // as in jaccardPairsExact — admits, never drops)
-    val (sets, prefix) = shinglePrefixes(docs, idCol, textCol, shingleN, threshold,
+    val (sets, prefix) = shinglePrefixes(docs, idCol, textCol, ShingleN, threshold,
       sz => sz - ceil(lit(threshold) * sz - lit(1e-9)) + 1)
     val full = sets.select(col("id"), explode(col("shs")).as("sh"), size(col("shs")).as("sz"))
     // a = the smaller set (strictly, sz_a <= sz_b; ties broken by id so
@@ -424,7 +389,7 @@ object Dedup {
       .select(least(col("a.id"), col("b.id")).as("id_a"),
         greatest(col("a.id"), col("b.id")).as("id_b"))
       .distinct()
-    withOverlap(cand, sets)
+    withOverlap(cand, sets, sets)
       .withColumn("containment",
         round(col("inter") / least(size(col("shs_a")), size(col("shs_b"))), 6))
       .filter(col("containment") >= threshold)
@@ -463,22 +428,29 @@ object Dedup {
     (sets, prefix)
   }
 
-  /** Verify side of the pair joins: attach both documents' hashed shingle
-    * sets to the (id_a, id_b) candidates by id and count the overlap
-    * (`inter`). Over 64-bit hashes |A∩B| equals the string-set overlap
-    * except under a collision, and shuffles ~3× fewer bytes. */
-  private def withOverlap(cand: DataFrame, sets: DataFrame): DataFrame =
+  /** Verify side of the pair joins: attach the (id, shs) hashed shingle
+    * sets to the (id_a, id_b) candidates by id — `setsA` to id_a, `setsB`
+    * to id_b, one table or two — and count the overlap (`inter`). Over
+    * 64-bit hashes |A∩B| equals the string-set overlap except under a
+    * collision, and shuffles ~3× fewer bytes. */
+  private def withOverlap(cand: DataFrame, setsA: DataFrame, setsB: DataFrame): DataFrame =
     cand
-      .join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("shs", "shs_a"), "id_a")
-      .join(sets.withColumnRenamed("id", "id_b").withColumnRenamed("shs", "shs_b"), "id_b")
-      .withColumn("inter", size(array_intersect(col("shs_a"), col("shs_b"))).cast("double"))
+      .join(setsA.withColumnRenamed("id", "id_a").withColumnRenamed("shs", "shs_a"), "id_a")
+      .join(setsB.withColumnRenamed("id", "id_b").withColumnRenamed("shs", "shs_b"), "id_b")
+      .withColumn("inter", overlap(col("shs_a"), col("shs_b")))
 
-  /** Exact Jaccard of [[withOverlap]]'s rows, kept at >= threshold. The
-    * sets are distinct hash sets, so |A∪B| = |A| + |B| − |A∩B|. */
-  private def jaccardAtLeast(overlap: DataFrame, threshold: Double): DataFrame =
-    overlap
-      .withColumn("jaccard",
-        round(col("inter") / (size(col("shs_a")) + size(col("shs_b")) - col("inter")), 6))
+  /** |A∩B| of two distinct hash-set columns, as a double. */
+  private[graft] def overlap(a: Column, b: Column): Column = size(array_intersect(a, b)).cast("double")
+
+  /** Exact Jaccard of two distinct hash-set columns with overlap `inter`
+    * ([[overlap]]), rounded to 6 places: |A∪B| = |A| + |B| − |A∩B|. */
+  private[graft] def jaccard(a: Column, b: Column, inter: Column): Column =
+    round(inter / (size(a) + size(b) - inter), 6)
+
+  /** Exact Jaccard of [[withOverlap]]'s rows, kept at >= threshold. */
+  private def jaccardAtLeast(overlapped: DataFrame, threshold: Double): DataFrame =
+    overlapped
+      .withColumn("jaccard", jaccard(col("shs_a"), col("shs_b"), col("inter")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
 
@@ -626,8 +598,9 @@ object Dedup {
     * key, then a codegen'd bit_count(a ^ b) verifies the exact distance.
     *
     * `nBlocks` <= 0 picks [[autoBlocks]] (>= 20-bit keys); `maxBucket` > 0
-    * additionally drops keys shared by more than `maxBucket` docs via a
-    * broadcast anti join — a LOSSY skew backstop for corpus-scale
+    * additionally drops keys shared by more than `maxBucket` docs
+    * ([[underCap]]: an anti join against the aggregated hot-key set, never
+    * broadcast-hinted) — a LOSSY skew backstop for corpus-scale
     * boilerplate clusters (a cluster of k identical pages is k² candidate
     * pairs no matter how wide the keys are), mirroring minhashNearDups'
     * cap. Leave it 0 for exact-radius semantics. */
@@ -661,19 +634,7 @@ object Dedup {
     // driver (observed at 320k docs). Registered in CacheBin (caller
     // drains after its terminal action).
     val keyed0 = graft.CacheBin.persist(simhashComboKeys(sigs, maxDist, b))
-    val keyed =
-      if (maxBucket <= 0) keyed0
-      else {
-        // the over-cap key set grows with the number of boilerplate
-        // clusters (~C(b,k) keys each), so it must never be FORCED through
-        // the driver: no broadcast hint. AQE's runtime stats on the
-        // aggregate output are real, so a small hot set broadcasts and a
-        // multi-GB one falls back to a spillable sort-merge anti on the
-        // same key the candidate join shuffles on anyway
-        val hot = keyed0.groupBy("key").agg(count(lit(1)).as("w"))
-          .filter(col("w") > maxBucket).select("key")
-        keyed0.join(hot, Seq("key"), "left_anti")
-      }
+    val keyed = if (maxBucket <= 0) keyed0 else underCap(keyed0, "key", maxBucket)
     // merge-join hint on both sides: the candidate join must SHUFFLE on
     // the ~21-bit keys — never broadcast a table that grows with n — and
     // sort-merge (unlike shuffled-hash, whose build side must FIT in

@@ -32,8 +32,9 @@ import org.apache.spark.sql.functions._
   * Candidates are distinct'd on the 8-byte id pair ALONE (texts re-attach
   * by id afterwards — the SimHash r4 lesson: never drag payloads through
   * the widest exchange). Boilerplate segments (hot keys) are capped by
-  * `maxBucket` with a left_anti against the aggregated hot-key set — the
-  * same non-broadcast skew guard as the MinHash index. The segment
+  * `maxBucket` with a left_anti against the aggregated hot-key set
+  * ([[Dedup.overCap]]) — the same non-broadcast skew guard as the MinHash
+  * index. The segment
   * parameter table is derived from DISTINCT observed lengths (bounded by
   * the corpus length cap, not the corpus) and broadcast, so the corpus
   * side stays one codegen scan per role (index / probe).
@@ -93,12 +94,12 @@ object EditDedup {
     }.toDF("len", "l1", "i", "p", "w")
 
     // (l1, i, segment-hash) folded into ONE 8-byte key — the MinHash
-    // bandKey idiom: the odd-constant multiply is a bijection of the
-    // segment hash, so equal (l1, i, segment) triples always collide onto
-    // the same key (no recall loss) and a cross-group collision can only
-    // ADD a candidate, which exact verification discards. Halves the
-    // exchange row width vs a 3-column key and keeps the join sort on a
-    // single long.
+    // band-key idiom (Dedup.minhashBandKeys): the odd-constant multiply is
+    // a bijection of the segment hash, so equal (l1, i, segment) triples
+    // always collide onto the same key (no recall loss) and a cross-group
+    // collision can only ADD a candidate, which exact verification
+    // discards. Halves the exchange row width vs a 3-column key and keeps
+    // the join sort on a single long.
     def segKey(l1: Column): Column =
       xxhash64(expr("substring(txt, p + 1, w)")) * lit(0x9E3779B97F4A7C15L) +
         (l1.cast("long") * lit(64L) + $"i")
@@ -108,11 +109,9 @@ object EditDedup {
     val prbRows = base.join(broadcast(prbParams), "len")
       .select($"id", segKey($"l1").as("k"))
 
-    // skew cap: boilerplate segments shared by > maxBucket docs are dropped
-    // from BOTH roles (lossy, documented) — aggregated + anti-joined, never
-    // driver-collected or broadcast
-    val hot = idxRows.groupBy("k").agg(count(lit(1)).as("n"))
-      .filter($"n" > maxBucket).select("k")
+    // skew cap: boilerplate segments shared by > maxBucket index rows are
+    // dropped from BOTH roles (lossy, documented)
+    val hot = Dedup.overCap(idxRows, "k", maxBucket)
     val idxOk = idxRows.join(hot, Seq("k"), "left_anti")
     val prbOk = prbRows.join(hot, Seq("k"), "left_anti")
 

@@ -63,16 +63,16 @@ object Adjacency {
   def connectedComponents(vertices: DataFrame, edges: DataFrame, maxIter: Int = 30): DataFrame =
     connectedComponentsWithRounds(vertices, edges, maxIter)._1
 
-  /** Eager localCheckpoint + STATS reset. `Dataset.localCheckpoint`
-    * truncates lineage but PRESERVES the child plan's sizeInBytes
-    * estimate, and the propagation loop's join estimates multiply the
-    * label plan's stats ~4× per round — a double-exponential BigInteger
-    * that overflows Catalyst's stats visitor near round 14 (hit at
-    * 2M-point DBSCAN scale, where the giant component needs that many
-    * pointer-jump rounds). Rebuilding the frame from the checkpointed RDD
-    * resets to the conservative default estimate each round (runtime join
-    * strategy stays AQE-decided, so no planning quality is lost). */
-  private def ckFresh(df: DataFrame): DataFrame =
+  /** Eager localCheckpoint + STATS reset, for this file's star rounds and
+    * [[WebGraph.scc]]'s label loops. `Dataset.localCheckpoint` truncates
+    * lineage but PRESERVES the child plan's sizeInBytes estimate, and a
+    * loop's join estimates multiply the label plan's stats ~4× per round —
+    * a double-exponential BigInteger that overflows Catalyst's stats
+    * visitor near round 14 (hit at 2M-point DBSCAN scale, where the giant
+    * component needs that many pointer-jump rounds). Rebuilding the frame
+    * from the checkpointed RDD resets to the conservative default estimate
+    * each round (runtime join strategy stays AQE-decided). */
+  private[ops] def ckFresh(df: DataFrame): DataFrame =
     org.apache.spark.sql.GraftRddBridge.freshStatsCopy(df.localCheckpoint())
 
   /** Connected components as a left join of `vertices` (bid) on the

@@ -310,7 +310,8 @@ object WebGraph {
     *   2. LOSSY skew cap: content served by more than `maxHostsPerContent`
     *      hosts is dropped via left_anti (a k-host boilerplate page is
     *      C(k,2) pairs — the cap bounds the self-join's output exactly as
-    *      minhashNearDups' maxBucket does; AQE picks broadcast vs
+    *      minhashNearDups' band cap does, with the same
+    *      [[graft.dedup.Dedup.underCap]]; AQE picks broadcast vs
     *      sort-merge from real stats);
     *   3. per-ck self-join (host_a < host_b) → groupBy pair count: the
     *      only quadratic step, bounded by the cap²·n_ck;
@@ -324,9 +325,7 @@ object WebGraph {
     val hc = pages.select(col(hostCol).as("h"), col(contentKeyCol).as("ck"))
       .distinct()
     val perHost = hc.groupBy("h").agg(count(lit(1)).as("n"))
-    val hot = hc.groupBy("ck").agg(count(lit(1)).as("nh"))
-      .filter(col("nh") > maxHostsPerContent).select("ck")
-    val ok = hc.join(hot, Seq("ck"), "left_anti")
+    val ok = graft.dedup.Dedup.underCap(hc, "ck", maxHostsPerContent)
     ok.as("l").join(ok.as("r"),
         col("l.ck") === col("r.ck") && col("l.h") < col("r.h"))
       .groupBy(col("l.h").as("host_a"), col("r.h").as("host_b"))
@@ -562,26 +561,22 @@ object WebGraph {
   def scc(rawEdges: DataFrame, maxRounds: Int = 30, maxIters: Int = 64): DataFrame = {
     val spark = rawEdges.sparkSession
     import spark.implicits._
-    // localCheckpoint alone PRESERVES the child plan's sizeInBytes stats,
-    // and an iterative loop that joins the label table 3× per iteration
-    // multiplies them into a planner-killing BigInteger (the failure
-    // Adjacency.ckFresh documents) — rebuild each checkpoint from its RDD
-    // so every iteration starts from the conservative default estimate.
-    def ck(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftRddBridge.freshStatsCopy(df.localCheckpoint())
+    // every checkpoint is Adjacency.ckFresh: the label table is joined 3×
+    // per iteration, so its stats must reset each time
+    import Adjacency.ckFresh
     // checkpoint + row count riding the SAME materialization (an
     // accumulator on the checkpoint job): retries only inflate the count,
     // zero is exact — so emptiness decisions cost no extra action
     val ctr = new java.util.concurrent.atomic.AtomicLong
     def ck2Count(df: DataFrame, tag: String): (DataFrame, Long) = {
       val acc = spark.sparkContext.longAccumulator(s"scc_rows_${tag}_${ctr.incrementAndGet()}")
-      val c = ck(df.as[(Long, Long)].map { r => acc.add(1L); r }
+      val c = ckFresh(df.as[(Long, Long)].map { r => acc.add(1L); r }
         .toDF(df.columns(0), df.columns(1)))
       (c, acc.value)
     }
     def ck1Count(df: DataFrame, tag: String): (DataFrame, Long) = {
       val acc = spark.sparkContext.longAccumulator(s"scc_rows_${tag}_${ctr.incrementAndGet()}")
-      val c = ck(df.as[Long].map { r => acc.add(1L); r }.toDF(df.columns(0)))
+      val c = ckFresh(df.as[Long].map { r => acc.add(1L); r }.toDF(df.columns(0)))
       (c, acc.value)
     }
     var (edges, nEdges) = ck2Count(rawEdges
@@ -643,7 +638,7 @@ object WebGraph {
         // to fold them into one union-of-messages aggregate forced real
         // shuffles where AQE had been broadcasting and ran 20% slower.
         def minPropagate(hopEdges: DataFrame, tag: String): DataFrame = {
-          var lbl = ck(verts.select(col("v"), col("v").as("c")))
+          var lbl = ckFresh(verts.select(col("v"), col("v").as("c")))
           var fixed = false
           var iters = 0
           while (!fixed) {
@@ -656,7 +651,7 @@ object WebGraph {
               .join(lbl.select(col("v").as("c"), col("c").as("jc")), Seq("c"))
               .select(col("v"), col("jc"))
             val changed = spark.sparkContext.longAccumulator(s"scc_${tag}_${outer}_$iters")
-            val next = ck(lbl.withColumnRenamed("c", "c0")
+            val next = ckFresh(lbl.withColumnRenamed("c", "c0")
               .join(hop, Seq("v"), "left")
               .join(jump, Seq("v"), "left")
               .select(col("v"), col("c0"), least(col("c0"),
@@ -683,7 +678,7 @@ object WebGraph {
             scala.concurrent.Await.result(fBw, scala.concurrent.duration.Duration.Inf))
         } finally exec.shutdown()
         // ---- (3) settle where min-ancestor == min-descendant ----
-        val comp = ck(fw.join(bw.withColumnRenamed("c", "t"), Seq("v"))
+        val comp = ckFresh(fw.join(bw.withColumnRenamed("c", "t"), Seq("v"))
           .filter(col("t") === col("c"))
           .select(col("v"), col("c").as("scc_id")))
         settled += comp
@@ -708,14 +703,15 @@ object WebGraph {
     * endorsed by the same sources, weighted by how many distinct sources
     * cite both. The classic "related pages" / host-similarity signal.
     *
-    * Skew discipline — the mirrorHosts/maxBucket rule applied to link
+    * Skew discipline — the mirrorHosts/band-cap rule applied to link
     * fanout: sources citing more than `maxFanout` targets are directory
     * pages/link farms whose C(fan,2) pair explosion would dominate the
     * join, so they are dropped by a left_anti against the over-cap source
-    * set (an aggregate-derived table, never driver state; lossy and
-    * DOCUMENTED — the oracle applies the same rule). Under the cap the
-    * per-source pair fanout is ≤ C(maxFanout, 2), so the self-join output
-    * is linear in sources; the pair rollup map-side combines.
+    * set ([[graft.dedup.Dedup.underCap]]: an aggregate-derived table, never
+    * driver state; lossy and DOCUMENTED — the oracle applies the same
+    * rule). Under the cap the per-source pair fanout is ≤ C(maxFanout, 2),
+    * so the self-join output is linear in sources; the pair rollup
+    * map-side combines.
     *
     * `links`: (src, dst); duplicates collapse first so weights count
     * distinct sources. Returns (a, b, w) with a < b and w >= minWeight. */
@@ -723,9 +719,7 @@ object WebGraph {
     val l = links
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .distinct()
-    val hot = l.groupBy("src").agg(count(lit(1)).as("fan"))
-      .filter(col("fan") > maxFanout).select("src")
-    val ok = graft.CacheBin.persist(l.join(hot, Seq("src"), "left_anti"))
+    val ok = graft.CacheBin.persist(graft.dedup.Dedup.underCap(l, "src", maxFanout))
     ok.as("x").join(ok.as("y"),
         col("x.src") === col("y.src") && col("x.dst") < col("y.dst"))
       .groupBy(col("x.dst").as("a"), col("y.dst").as("b"))

@@ -23,7 +23,23 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  /** Cosine of a pre-normed pair — the one pair step of every pair join
+    * here: vectors `va`, `vb` with norms `na`, `nb` ([[norm]]) computed
+    * once per vector before the join, so each pair costs one dot product. */
+  private def cosPair: Column = dot(col("va"), col("vb")) / (col("na") * col("nb"))
+
+  // The IVF probe width (nearest lists scanned per query) and the
+  // sign-LSH target bucket width of every entry that probes.
+  private val NProbe = 4
+  private val TargetBucket = 64
+
+  /** An embedding table as typed (id, vector) rows. */
+  private def vectors(emb: DataFrame, idCol: String, vecCol: String)
+      : Dataset[(Long, Array[Float])] = {
+    import emb.sparkSession.implicits._
+    emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
+      .as[(Long, Array[Float])]
+  }
 
   /** Per-vector top-k by (cos DESC, nbr_id ASC) over (vec_id, nbr_id, cos)
     * pairs: [[graft.ops.BottomK]] on priority −cos, so only ≤k rows per
@@ -61,9 +77,7 @@ object Similarity {
       norm(col(vecCol)).as("na"))
     val r = emb.select(col(idCol).as("nbr_id"), col(vecCol).as("vb"),
       norm(col(vecCol)).as("nb"))
-    val pairs = l.join(r, col("vec_id") =!= col("nbr_id"))
-      .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
-    topKPerVec(pairs, k)
+    topKPerVec(l.join(r, col("vec_id") =!= col("nbr_id")).withColumn("cos", cosPair), k)
   }
 
   // ---- exact top-k without all-pairs (blocked IVF + triangle pruning) ----
@@ -100,14 +114,14 @@ object Similarity {
     *     Lloyd, same machinery as ivfTopK); record each list's radius
     *     r_j = max ‖u − c_j‖ over members — the only driver-side state is
     *     the (nlist × dim) centroid matrix + nlist radii, same as ivfTopK;
-    *  2. pass 1 scans the nprobe nearest lists per query → provisional
+    *  2. pass 1 scans the NProbe nearest lists per query → provisional
     *     top-k and the kth distance bound d_k (∞ when fewer than k
     *     candidates); only ≤k rows per query survive to the merge;
     *  3. pass 2 scans ONLY unprobed lists j with
     *     ‖u_q − c_j‖ − r_j ≤ d_k + ε: any neighbor that could still enter
     *     the top-k must live in such a list (triangle inequality), so the
     *     union of both passes is provably the exact answer. Candidate work
-    *     per query is nprobe lists + the un-prunable tail instead of n.
+    *     per query is NProbe lists + the un-prunable tail instead of n.
     *
     * Pair cosine uses the identical DotF32 expression over the ORIGINAL
     * float arrays as bruteForceTopK — bit-identical scores, so ranking
@@ -117,13 +131,12 @@ object Similarity {
     */
   def exactTopK(
       emb: DataFrame, idCol: String, vecCol: String, k: Int,
-      nlist: Int = 16, nprobe: Int = 4, iters: Int = 1,
+      nlist: Int = 16, iters: Int = 1,
       seedHash: Long => Long = mixSeedHash,
       probeAcc: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val vecs = emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .as[(Long, Array[Float])]
+    val vecs = vectors(emb, idCol, vecCol)
     val normedDf = vecs.map { case (id, v) =>
       (id, unitD(v).map(_.toFloat))
     }.toDF("id", "v")
@@ -145,15 +158,11 @@ object Similarity {
     }
     val bR = spark.sparkContext.broadcast(radii)
     val lists = assigned.select(col("list"), col("nbr_id"), col("vb"), col("nb"))
-    // pass 1: nprobe nearest lists per query
+    // pass 1: NProbe nearest lists per query
     val probes1 = vecs.flatMap { case (id, v) =>
-      nearestListsDbl(unitD(v), bC.value, nprobe).map(c => (c, id, v))
+      nearestListsDbl(unitD(v), bC.value, NProbe).map(c => (c, id, v))
     }.toDF("list", "vec_id", "va").withColumn("na", norm(col("va")))
-    val pairs1 = probes1.join(lists, Seq("list"))
-      .filter(col("vec_id") =!= col("nbr_id"))
-      .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
-      .select(col("vec_id"), col("nbr_id"), col("cos"))
-    val top1 = graft.CacheBin.persist(topKByCos(pairs1, k))
+    val top1 = graft.CacheBin.persist(topKByCos(listPairs(probes1, lists), k))
     val bounds = top1.map { case (id, s) =>
       (id, if (s.length < k) Double.MaxValue else 2.0 - 2.0 * s.last._3)
     }.toDF("vec_id", "dk2")
@@ -170,25 +179,29 @@ object Similarity {
         // false) — clamped to 0 it correctly means "only lists whose
         // bound is exactly reachable can still matter"
         val dk = math.sqrt(math.max(0.0, dk2Opt.getOrElse(Double.MaxValue)))
-        val probed = nearestListsDbl(u, bC.value, nprobe).toSet
+        val probed = nearestListsDbl(u, bC.value, NProbe).toSet
         val out = bC.value.indices.iterator
           .filterNot(probed)
           .filter(j => distToCentroid(u, bC.value(j)) - bR.value(j) <= dk + 1e-9)
           .map(j => (j, id, v)).toSeq
         // optional pruning diagnostic: pass-2 list probes actually emitted
-        // (the spec pins this << n * (nlist - nprobe) on clustered data).
+        // (the spec pins this << n * (nlist - NProbe) on clustered data).
         // Accumulators in transformations are at-least-once — task retries
         // can only OVERCOUNT, so the spec's upper bound can false-alarm
         // but never false-pass (and local-mode test runs don't retry)
         probeAcc.foreach(_.add(out.size.toLong))
         out
       }.toDF("list", "vec_id", "va").withColumn("na", norm(col("va")))
-    val pairs2 = probes2.join(lists, Seq("list"))
-      .filter(col("vec_id") =!= col("nbr_id"))
-      .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
-      .select(col("vec_id"), col("nbr_id"), col("cos"))
-    topKPerVec(pairs1Top.unionByName(pairs2), k)
+    topKPerVec(pairs1Top.unionByName(listPairs(probes2, lists)), k)
   }
+
+  /** (vec_id, nbr_id, cos) for every probe (list, vec_id, va, na) × list
+    * member (list, nbr_id, vb, nb) pair of the same list, self-pairs
+    * excluded. */
+  private def listPairs(probes: DataFrame, lists: DataFrame): DataFrame =
+    probes.join(lists, Seq("list"))
+      .filter(col("vec_id") =!= col("nbr_id"))
+      .select(col("vec_id"), col("nbr_id"), cosPair.as("cos"))
 
   /** Deterministic random hyperplanes: nBits × dim, seeded (pure function of
     * (seed, bit, component) via splitmix — no RNG state). */
@@ -240,16 +253,13 @@ object Similarity {
       seedHash: Long => Long = mixSeedHash): Array[Array[Double]] = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val seedRows = emb
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .as[(Long, Array[Float])]
+    val vecs = vectors(emb, idCol, vecCol)
+    val seedRows = vecs
       .map { case (id, v) => (seedHash(id), v) }
       .toDF("h", "v")
       .orderBy("h").limit(k)
       .select("v").as[Array[Float]].collect()
     var centroids = seedRows.map(_.map(_.toDouble))
-    val vecs = emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .as[(Long, Array[Float])]
     for (_ <- 0 until iters) {
       val bC = spark.sparkContext.broadcast(centroids)
       val next = vecs
@@ -292,34 +302,47 @@ object Similarity {
       (d, c)
     }.sorted.take(nprobe).map(_._2)
 
+  /** IVF inverted lists (list, nbr_id, vb, nb): every vector under its
+    * nearest centroid, with its norm computed once, before any join. */
+  private def ivfLists(vecs: Dataset[(Long, Array[Float])],
+                       centroids: Array[Array[Double]]): DataFrame = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    val bC = spark.sparkContext.broadcast(centroids)
+    vecs.map { case (id, v) => (nearestCentroid(v, bC.value)._1, id, v) }
+      .toDF("list", "nbr_id", "vb")
+      .withColumn("nb", norm(col("vb")))
+  }
+
+  /** The IVF probe of [[ivfTopK]] and [[ivfProbeIndex]]: each query
+    * explodes into its NProbe nearest lists, equi-joins the single-keyed
+    * `lists` side ([[ivfLists]]) and keeps its top-k by cosine. */
+  private def ivfProbeTopK(queries: Dataset[(Long, Array[Float])],
+                           centroids: Array[Array[Double]], lists: DataFrame,
+                           k: Int): DataFrame = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val bC = spark.sparkContext.broadcast(centroids)
+    val probes = queries
+      .flatMap { case (id, v) => probeLists(v, bC.value, NProbe).map(c => (c, id, v)) }
+      .toDF("list", "vec_id", "va")
+      .withColumn("na", norm(col("va")))
+    topKPerVec(listPairs(probes, lists).distinct(), k)
+  }
+
   /** IVF ANN (the k-means flavor of the scale path): vectors partition into
-    * nlist inverted lists by nearest centroid; a query probes its nprobe
+    * nlist inverted lists by nearest centroid; a query probes its NProbe
     * nearest lists and brute-forces only those — candidate work scales with
-    * n·(nprobe/nlist) instead of n². The probe side explodes ×nprobe and
+    * n·(NProbe/nlist) instead of n². The probe side explodes ×NProbe and
     * equi-joins the single-keyed list side, the same candidates-then-refine
     * shape as the spatial cell join. Deterministic end to end. */
   def ivfTopK(
       emb: DataFrame, idCol: String, vecCol: String, k: Int,
-      nlist: Int = 16, nprobe: Int = 4, iters: Int = 3,
+      nlist: Int = 16, iters: Int = 3,
       seedHash: Long => Long = mixSeedHash): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     val centroids = kmeansCentroids(emb, idCol, vecCol, nlist, iters, seedHash)
-    val bC = spark.sparkContext.broadcast(centroids)
-    val vecs = emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .as[(Long, Array[Float])]
-    val lists = vecs
-      .map { case (id, v) => (nearestCentroid(v, bC.value)._1, id, v) }
-      .toDF("list", "nbr_id", "vb")
-      .withColumn("nb", norm(col("vb"))) // per-vector norm, once, pre-join
-    val probes = vecs
-      .flatMap { case (id, v) => probeLists(v, bC.value, nprobe).map(c => (c, id, v)) }
-      .toDF("list", "vec_id", "va")
-      .withColumn("na", norm(col("va")))
-    val pairs = probes.join(lists, Seq("list"))
-      .filter(col("vec_id") =!= col("nbr_id"))
-      .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
-    topKPerVec(pairs.select("vec_id", "nbr_id", "cos").distinct(), k)
+    val vecs = vectors(emb, idCol, vecCol)
+    ivfProbeTopK(vecs, centroids, ivfLists(vecs, centroids), k)
   }
 
   /** Persist the corpus IVF index for incremental similarity queries:
@@ -337,84 +360,77 @@ object Similarity {
     val spark = emb.sparkSession
     import spark.implicits._
     val centroids = kmeansCentroids(emb, idCol, vecCol, nlist, iters, seedHash)
-    val bC = spark.sparkContext.broadcast(centroids)
-    val lists = emb
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (nearestCentroid(v, bC.value)._1, id, v) }
-      .toDF("list", "nbr_id", "vb")
-      .withColumn("nb", norm(col("vb")))
-    graft.sources.Bucketed.writeBucketed(lists, s"${prefix}_lists", "list", buckets)
+    graft.sources.Bucketed.writeBucketed(ivfLists(vectors(emb, idCol, vecCol), centroids),
+      s"${prefix}_lists", "list", buckets)
     graft.sources.Bucketed.writeBucketed(
       centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq.toDF("list", "c"),
       s"${prefix}_centroids", "list", 1)
   }
 
   /** ANN top-k for a QUERY BATCH against the persisted corpus index
-    * ([[writeIvfIndex]]): each query explodes into its nprobe nearest
+    * ([[writeIvfIndex]]): each query explodes into its NProbe nearest
     * lists and equi-joins the bucketed lists table — zero exchange and
     * zero sort above the corpus-side scan (spec-asserted), so every
-    * per-batch shuffle is probe-sized (batch × nprobe rows), flat in
+    * per-batch shuffle is probe-sized (batch × NProbe rows), flat in
     * corpus size. Driver state = the centroid matrix only, read back from
     * `<prefix>_centroids`. Identical ranking semantics to [[ivfTopK]]
     * restricted to the batch (same dot kernel, same (cos DESC, nbr_id)
     * total order). */
   def ivfProbeIndex(queries: DataFrame, idCol: String, vecCol: String,
-                    prefix: String, k: Int, nprobe: Int = 4): DataFrame = {
+                    prefix: String, k: Int): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
     val centroids = spark.table(s"${prefix}_centroids")
       .orderBy("list").select("c").as[Array[Double]].collect()
-    val bC = spark.sparkContext.broadcast(centroids)
-    val probes = queries
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) => probeLists(v, bC.value, nprobe).map(c => (c, id, v)) }
-      .toDF("list", "vec_id", "va")
-      .withColumn("na", norm(col("va")))
-    val pairs = probes.join(spark.table(s"${prefix}_lists"), Seq("list"))
-      .filter(col("vec_id") =!= col("nbr_id"))
-      .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
-    topKPerVec(pairs.select("vec_id", "nbr_id", "cos").distinct(), k)
+    ivfProbeTopK(vectors(queries, idCol, vecCol), centroids,
+      spark.table(s"${prefix}_lists"), k)
   }
 
-  /** Embedding-cosine near-duplicate pairs: LSH sign buckets + Hamming-1
-    * multiprobe generate candidates, a single pre-normed dot per pair
-    * verifies cos >= threshold. Output (id_a < id_b) pairs. The candidate
-    * set is a deterministic function of the hyperplanes (recall < 1 like
-    * any LSH dedup, but reproducible — the oracle replays the buckets), and
-    * per-bucket work is constant at any n via the same auto-nBits rule as
-    * annTopK. */
-  def embedNearDups(
-      emb: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      nBits: Int = 0, targetBucket: Int = 64, nRows: Long = -1L,
-      dim: Int = -1): DataFrame = {
+  /** Sign-LSH multiprobe candidate pairs, the shared front half of
+    * [[annTopK]] and [[embedNearDups]]: each vector (id_a, va, na) meets
+    * every vector (id_b, vb, nb) whose sign-bit bucket ([[lshBucket]]) is
+    * its own or one bit away (mask 0 = own bucket, mask 1<<i = flip bit
+    * i). Both directions and the self-pair come out; callers filter.
+    *
+    * nBits = 0 AUTO-SCALES with the table: enough sign bits that the
+    * expected bucket holds ~TargetBucket vectors (nBits = max(4,
+    * ceil(log2(n / TargetBucket)))) — at 10^12 rows that is ~34 bits /
+    * 2^34 buckets, keeping the per-bucket brute force constant instead of
+    * letting buckets grow linearly with n. */
+  private def signLshPairs(emb: DataFrame, idCol: String, vecCol: String,
+                           nBits: Int): DataFrame = {
     val bits =
       if (nBits > 0) nBits
-      else {
-        // callers that know their table size pass nRows and skip this action
-        val n = if (nRows >= 0) nRows else emb.count()
-        math.max(4, math.ceil(
-          math.log(math.max(1.0, n.toDouble / targetBucket)) / math.log(2)).toInt)
-      }
-    val dim0 = if (dim > 0) dim else emb.select(size(col(vecCol))).first().getInt(0)
-    val planes = hyperplanes(bits, dim0)
+      else math.max(4, math.ceil(
+        math.log(math.max(1.0, emb.count().toDouble / TargetBucket)) / math.log(2)).toInt)
+    val planes = hyperplanes(bits, emb.select(size(col(vecCol))).first().getInt(0))
     val withB = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("b", lshBucket(col("v"), planes))
-      .withColumn("n", norm(col("v")))
+      .withColumn("n", norm(col("v"))) // per-vector norm, once, pre-join
     val masks = array((0L +: (0 until bits).map(i => 1L << i)).map(lit): _*)
     val probes = withB.select(
       col("id"), col("v"), col("n"), col("b"), explode(masks).as("mask"))
-      .withColumn("pb", col("b").bitwiseXOR(col("mask")))
-      .select(col("id").as("id_a"), col("v").as("va"), col("n").as("na"), col("pb"))
+      .select(col("id").as("id_a"), col("v").as("va"), col("n").as("na"),
+        col("b").bitwiseXOR(col("mask")).as("pb"))
     val base = withB.select(col("id").as("id_b"), col("v").as("vb"),
       col("n").as("nb"), col("b").as("pb"))
     probes.join(base, Seq("pb"))
+  }
+
+  /** Embedding-cosine near-duplicate pairs: LSH sign buckets + Hamming-1
+    * multiprobe generate candidates ([[signLshPairs]]), a single
+    * pre-normed dot per pair verifies cos >= threshold. Output (id_a <
+    * id_b) pairs. The candidate set is a deterministic function of the
+    * hyperplanes (recall < 1 like any LSH dedup, but reproducible — the
+    * oracle replays the buckets), and per-bucket work is constant at any n
+    * via the same auto-nBits rule as annTopK. */
+  def embedNearDups(emb: DataFrame, idCol: String, vecCol: String, threshold: Double,
+                    nBits: Int = 0): DataFrame =
+    signLshPairs(emb, idCol, vecCol, nBits)
       .filter(col("id_a") < col("id_b")) // one direction; dedups the probe overlap too
-      .filter(dot(col("va"), col("vb")) / (col("na") * col("nb")) >= threshold)
+      .filter(cosPair >= threshold)
       .select("id_a", "id_b")
       .distinct()
-  }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     * deduplication by cluster-then-compare — embeddings partition into
@@ -435,68 +451,30 @@ object Similarity {
   def semDeDup(emb: DataFrame, idCol: String, vecCol: String,
                threshold: Double, nlist: Int = 16, iters: Int = 0,
                seedHash: Long => Long = mixSeedHash): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     val centroids = kmeansCentroids(emb, idCol, vecCol, nlist, iters, seedHash)
-    val bC = spark.sparkContext.broadcast(centroids)
     // read 3× (both pair sides + the losers' list lookup), so persist once
-    val assigned = graft.CacheBin.persist(
-      emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-        .as[(Long, Array[Float])]
-        .map { case (id, v) => (nearestCentroid(v, bC.value)._1, id, v) }
-        .toDF("list", "id", "v")
-        .withColumn("nv", norm(col("v"))))
+    val assigned = graft.CacheBin.persist(ivfLists(vectors(emb, idCol, vecCol), centroids))
     val pairs = assigned
-      .select(col("list"), col("id").as("id_a"), col("v").as("va"), col("nv").as("na"))
-      .join(assigned.select(col("list"), col("id").as("id_b"),
-        col("v").as("vb"), col("nv").as("nb")), Seq("list"))
+      .select(col("list"), col("nbr_id").as("id_a"), col("vb").as("va"), col("nb").as("na"))
+      .join(assigned.withColumnRenamed("nbr_id", "id_b"), Seq("list"))
       .filter(col("id_a") < col("id_b"))
-      .filter(dot(col("va"), col("vb")) / (col("na") * col("nb")) >= threshold)
+      .filter(cosPair >= threshold)
       .select(col("id_a").as("a"), col("id_b").as("b"))
     // the component graph is the (tiny) near-dup graph, never the corpus:
     // its star edges are exactly the non-representative pair endpoints
     graft.ops.Adjacency.componentStars(pairs)._1
-      .join(assigned.select(col("id").as("bid"), col("list")), "bid")
+      .join(assigned.select(col("nbr_id").as("bid"), col("list")), "bid")
       .select(col("bid").as(idCol), col("list"))
   }
 
   /** IVF-style ANN: bucket by LSH signature, brute-force within bucket plus
-    * neighbor buckets at Hamming distance 1 (probe lists). Returns candidate
-    * top-k per vector; recall < 1 by construction (approximate path).
-    *
-    * nBits = 0 (default) AUTO-SCALES with the table: enough sign bits that
-    * the expected bucket holds ~targetBucket vectors (nBits = max(4,
-    * ceil(log2(n / targetBucket)))) — at 10^12 rows that is ~34 bits /
-    * 2^34 buckets, keeping the per-bucket brute force constant instead of
-    * letting buckets grow linearly with n. */
-  def annTopK(
-      emb: DataFrame, idCol: String, vecCol: String, k: Int, nBits: Int = 0,
-      targetBucket: Int = 64, nRows: Long = -1L, dim: Int = -1): DataFrame = {
-    val bits =
-      if (nBits > 0) nBits
-      else {
-        // callers that know their table size pass nRows and skip this action
-        val n = if (nRows >= 0) nRows else emb.count()
-        math.max(4, math.ceil(
-          math.log(math.max(1.0, n.toDouble / targetBucket)) / math.log(2)).toInt)
-      }
-    val dim0 = if (dim > 0) dim else emb.select(size(col(vecCol))).first().getInt(0)
-    val planes = hyperplanes(bits, dim0)
-    val withB = emb.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
-      .withColumn("b", lshBucket(col("v"), planes))
-      .withColumn("n", norm(col("v"))) // per-vector norm, once, pre-join
-    // multiprobe: each vector also probes buckets at Hamming distance 1
-    // (mask 0 = own bucket, mask 1<<i = flip bit i)
-    val masks = array((0L +: (0 until bits).map(i => 1L << i)).map(lit): _*)
-    val probes = withB.select(
-      col("vec_id"), col("v"), col("n"), col("b"), explode(masks).as("mask"))
-      .withColumn("pb", col("b").bitwiseXOR(col("mask")))
-      .select(col("vec_id"), col("v"), col("n"), col("pb"))
-    val base = withB.select(col("vec_id").as("nbr_id"), col("v").as("vb"),
-      col("n").as("nb"), col("b").as("pb"))
-    val pairs = probes.join(base, Seq("pb"))
-      .filter(col("vec_id") =!= col("nbr_id"))
-      .withColumn("cos", dot(col("v"), col("vb")) / (col("n") * col("nb")))
-    topKPerVec(pairs.select("vec_id", "nbr_id", "cos").distinct(), k)
-  }
+    * neighbor buckets at Hamming distance 1 ([[signLshPairs]], whose nBits
+    * = 0 auto-scales with the table). Returns candidate top-k per vector;
+    * recall < 1 by construction (approximate path). */
+  def annTopK(emb: DataFrame, idCol: String, vecCol: String, k: Int,
+              nBits: Int = 0): DataFrame =
+    topKPerVec(signLshPairs(emb, idCol, vecCol, nBits)
+      .filter(col("id_a") =!= col("id_b"))
+      .select(col("id_a").as("vec_id"), col("id_b").as("nbr_id"), cosPair.as("cos"))
+      .distinct(), k)
 }

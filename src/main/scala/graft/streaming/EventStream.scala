@@ -184,10 +184,11 @@ object EventStream {
 
   /** Streaming NEAR-duplicate filter against a static corpus — the
     * crawl-ingest shape of the dedup suite: every incoming document is
-    * shingle-hashed and minhash-banded with the SAME codegen kernels as the
-    * batch path (ShingleHash64Expr → MinHashSigHashedExpr → lshBands), then
-    * stream-static LEFT OUTER joined to the corpus's banded signature
-    * index; candidate hits are verified by exact hashed-shingle Jaccard and
+    * shingle-hashed and minhash-banded with the SAME column definitions as
+    * the batch path (ShingleHash64Expr → [[graft.dedup.Dedup.minhashBandKeys]]),
+    * then stream-static LEFT OUTER joined on the band key to the corpus's
+    * banded signature index; candidate hits are verified by exact
+    * hashed-shingle Jaccard ([[graft.dedup.Dedup.jaccard]]) and
     * a per-doc group pass drops any document with a verified match
     * >= threshold. Emits the surviving (doc_id, text) rows.
     *
@@ -198,31 +199,25 @@ object EventStream {
   def nearDupFilter(
       docs: DataFrame, // streaming (doc_id long, text string)
       corpus: DataFrame, // static (doc_id long, text string)
-      shingleN: Int = 3, nPerm: Int = 64, bands: Int = 16,
       threshold: Double = 0.6): DataFrame = {
     import graft.dedup.Dedup
-    import graft.functions.{MinHashSigExpr, ShingleHash64Expr}
     val spark = docs.sparkSession
     import spark.implicits._
     // text rides the stream side through banding (a self-join to re-attach
     // it would be an illegal stream-stream join)
     def banded(df: DataFrame, carry: Seq[String], idAs: String, shAs: String) = df
-      .select(col("doc_id").as(idAs) +: carry.map(col) :+
-        ShingleHash64Expr.shingleHash64(split(col("text"), " "), shingleN).as(shAs): _*)
-      .withColumn("sig", MinHashSigExpr.minhashSigHashed(col(shAs), nPerm))
+      .select(col("doc_id").as(idAs) +: carry.map(col) :+ graft.functions.ShingleHash64Expr
+        .shingleHash64(split(col("text"), " "), Dedup.ShingleN).as(shAs): _*)
       .select(col(idAs) +: carry.map(col) :+ col(shAs) :+
-        explode(Dedup.lshBands(col("sig"), bands, nPerm / bands)).as("b"): _*)
-      .select(col(idAs) +: carry.map(col) :+ col(shAs) :+
-        col("b.band_id") :+ col("b.band_hash"): _*)
+        explode(Dedup.minhashBandKeys(col(shAs))).as("bk"): _*)
     val corpusIdx = banded(corpus, Seq.empty, "c_id", "c_sh")
     val streamB = banded(docs, Seq("text"), "doc_id", "sh")
     streamB
-      .join(corpusIdx, Seq("band_id", "band_hash"), "left_outer")
-      .withColumn("inter", size(array_intersect(col("sh"), col("c_sh"))).cast("double"))
+      .join(corpusIdx, Seq("bk"), "left_outer")
+      .withColumn("inter", Dedup.overlap(col("sh"), col("c_sh")))
       .withColumn("verified",
         col("c_id").isNotNull &&
-          round(col("inter") /
-            (size(col("sh")) + size(col("c_sh")) - col("inter")), 6) >= threshold)
+          Dedup.jaccard(col("sh"), col("c_sh"), col("inter")) >= threshold)
       .select(col("doc_id"), col("text"), col("verified"))
       .as[(Long, String, Boolean)]
       .groupByKey(_._1)

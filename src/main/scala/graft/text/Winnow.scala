@@ -75,8 +75,9 @@ object Winnow {
     * matching step: docs sharing ≥ `minShared` selected hashes. The
     * fingerprint table (≈2/(w+1) of the grams) shuffles ONCE on the
     * 8-byte hash; hashes selected in more than `maxHashDocs` documents
-    * are boilerplate (the minhash maxBucket discipline) and are excised
-    * by an aggregate-derived left_anti before the self-join, so per-hash
+    * are boilerplate and are excised by the minhash band cap's
+    * aggregate-derived left_anti ([[graft.dedup.Dedup.underCap]]) before
+    * the self-join, so per-hash
     * pair fan-out is bounded by C(maxHashDocs, 2). Returns
     * (id_a, id_b, shared) with id_a < id_b. */
   def nearDupPairs(docs: DataFrame, idCol: Column, textCol: Column,
@@ -84,9 +85,7 @@ object Winnow {
     val fp = graft.CacheBin.persist(
       fingerprints(docs, idCol, textCol, k, w)
         .select(col("id"), col("gram_hash")).distinct())
-    val hot = fp.groupBy("gram_hash").agg(count(lit(1)).as("nd"))
-      .filter(col("nd") > maxHashDocs).select("gram_hash")
-    val ok = fp.join(hot, Seq("gram_hash"), "left_anti")
+    val ok = graft.dedup.Dedup.underCap(fp, "gram_hash", maxHashDocs)
     ok.as("x").join(ok.as("y"),
         col("x.gram_hash") === col("y.gram_hash") && col("x.id") < col("y.id"))
       .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"))

@@ -19,6 +19,17 @@ object TestSpark {
   val sf001 = "/root/testdata/sf0.001"
   val sf01: String = java.nio.file.Paths.get(sf001).resolveSibling("sf0.01").toString
 
+  /** Run `f` on a fresh directory `<java.io.tmpdir>/<prefix><random>` and
+    * delete the whole tree when `f` ends, whether it passes or throws, so
+    * a test run leaves no scratch behind. */
+  def withTempDir[T](prefix: String)(f: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try f(dir)
+    finally scala.util.Using.resource(java.nio.file.Files.walk(dir))(
+      _.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.delete(p)))
+  }
+
   /** Run `f` with the given SQL confs set on the shared session, restoring
     * the previous values (or unsetting) afterwards. */
   def withConf[T](kv: (String, String)*)(f: => T): T = {

@@ -47,7 +47,7 @@ class PairJobBudgetSpec extends AnyFunSuite {
   }
 
   test("containmentPairs at sf0.001: job budget") {
-    val (pairs, jobs) = measured(Dedup.containmentPairs(_, "doc_id", "text", 3, 0.7))
+    val (pairs, jobs) = measured(Dedup.containmentPairs(_, "doc_id", "text", 0.7))
     val want = brute((a, b) => (a & b).size.toDouble / math.min(a.size, b.size), 0.7)
     assert(want.nonEmpty)
     assert(pairs == want)

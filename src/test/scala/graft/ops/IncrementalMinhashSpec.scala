@@ -70,6 +70,34 @@ class IncrementalMinhashSpec extends AnyFunSuite {
     assert(got.toSeq === Seq((300L, 400L)))
   }
 
+  // n copies of one text: every band bucket is exactly n documents wide,
+  // so the 64-document band cap keeps all C(n,2) pairs up to n = 64 and
+  // drops every bucket (and so every pair) at n = 65
+  private def copies(n: Int, from: Long): DataFrame =
+    (0 until n).map(i => (from + i, "the quick brown fox jumps over it")).toDF("doc_id", "text")
+
+  private def pairsAtOne(pairs: DataFrame): Set[(Long, Long)] = {
+    val rows = pairs.as[(Long, Long, Double)].collect()
+    graft.CacheBin.drain()
+    assert(rows.forall(_._3 == 1.0), rows.toSeq.take(3))
+    rows.map(r => (r._1, r._2)).toSet
+  }
+
+  test("band cap boundary: 64 identical docs pair up, 65 pair none (one-shot)") {
+    assert(pairsAtOne(Dedup.minhashNearDups(copies(64, 0L), "doc_id", "text")).size === 2016)
+    assert(pairsAtOne(Dedup.minhashNearDups(copies(65, 0L), "doc_id", "text")).isEmpty)
+  }
+
+  test("band cap boundary: 64 identical docs pair up, 65 pair none (in-batch)") {
+    // a one-doc corpus sharing no shingle with the batch: every pair is in-batch
+    Dedup.writeMinhashIndex(Seq((-1L, "red green blue cyan magenta")).toDF("doc_id", "text"),
+      "doc_id", "text", "mh_cap_idx", 2)
+    assert(pairsAtOne(Dedup.incrementalNearDups(copies(64, 1000L), "doc_id", "text", "mh_cap_idx"))
+      .size === 2016)
+    assert(pairsAtOne(Dedup.incrementalNearDups(copies(65, 1000L), "doc_id", "text", "mh_cap_idx"))
+      .isEmpty)
+  }
+
   test("zero shuffle above either corpus index scan") {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {

@@ -64,64 +64,67 @@ class SplitSpec extends AnyFunSuite {
   }
 
   test("polygon holes subtract from the overlap (donut boundary)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_split")
-    val gj = """{"type":"FeatureCollection","features":[
+    graft.TestSpark.withTempDir("graft_split") { dir =>
+      val gj = """{"type":"FeatureCollection","features":[
       {"type":"Feature","properties":{},"geometry":{"type":"Polygon","coordinates":
        [[[0,0],[100,0],[100,100],[0,100],[0,0]],
         [[40,40],[60,40],[60,60],[40,60],[40,40]]]}}]}"""
-    java.nio.file.Files.writeString(dir.resolve("donut.geojson"), gj)
-    val polys = Split.read(dir.resolve("donut.geojson").toString)
-    assert(polys.head.holes.length === 1)
-    def square(x: Double, y: Double, r: Double): Geom.MultiPolygon =
-      Array(Array(Array(Pt(x - r, y - r), Pt(x + r, y - r), Pt(x + r, y + r), Pt(x - r, y + r))))
-    assert(Split.keep(square(20, 20, 5), polys), "solid part of the donut")
-    assert(!Split.keep(square(50, 50, 5), polys), "entirely inside the hole")
-    // half-over-the-hole-edge square: 50% in the ring -> boundary keeps
-    assert(math.abs(Split.overlapArea(square(40, 50, 5), polys.head) - 50.0) < 1e-9)
+      java.nio.file.Files.writeString(dir.resolve("donut.geojson"), gj)
+      val polys = Split.read(dir.resolve("donut.geojson").toString)
+      assert(polys.head.holes.length === 1)
+      def square(x: Double, y: Double, r: Double): Geom.MultiPolygon =
+        Array(Array(Array(Pt(x - r, y - r), Pt(x + r, y - r), Pt(x + r, y + r), Pt(x - r, y + r))))
+      assert(Split.keep(square(20, 20, 5), polys), "solid part of the donut")
+      assert(!Split.keep(square(50, 50, 5), polys), "entirely inside the hole")
+      // half-over-the-hole-edge square: 50% in the ring -> boundary keeps
+      assert(math.abs(Split.overlapArea(square(40, 50, 5), polys.head) - 50.0) < 1e-9)
+    }
   }
 
   test("subject holes count: holey parcel near the 50% line") {
-    // boundary = left half-plane square [0,100]x[0,100]; subject = square
-    // [50-30, 50+30] with a hole [60,80]x[20,80] entirely on the RIGHT
-    // (outside) side. Outer overlap = 30*60=1800 of outer 3600 (exactly
-    // 50%); the hole (20*60=1200, all outside) shrinks the true area to
-    // 2400 with overlap still 1800 -> 75%, comfortably kept. Counting
-    // outer rings only would score it at exactly 50% — this subject nudged
-    // 1 unit right would then flip wrongly.
-    val dir = java.nio.file.Files.createTempDirectory("graft_split_h")
-    val gj = """{"type":"FeatureCollection","features":[
+    graft.TestSpark.withTempDir("graft_split_h") { dir =>
+      // boundary = left half-plane square [0,100]x[0,100]; subject = square
+      // [50-30, 50+30] with a hole [60,80]x[20,80] entirely on the RIGHT
+      // (outside) side. Outer overlap = 30*60=1800 of outer 3600 (exactly
+      // 50%); the hole (20*60=1200, all outside) shrinks the true area to
+      // 2400 with overlap still 1800 -> 75%, comfortably kept. Counting
+      // outer rings only would score it at exactly 50% — this subject nudged
+      // 1 unit right would then flip wrongly.
+      val gj = """{"type":"FeatureCollection","features":[
       {"type":"Feature","properties":{},"geometry":{"type":"Polygon","coordinates":
        [[[0,0],[100,0],[100,100],[0,100],[0,0]]]}}]}"""
-    java.nio.file.Files.writeString(dir.resolve("b.geojson"), gj)
-    val polys = Split.read(dir.resolve("b.geojson").toString)
-    def subj(shift: Double): Geom.MultiPolygon = Array(Array(
-      Array(Pt(70 + shift, 20), Pt(130 + shift, 20), Pt(130 + shift, 80), Pt(70 + shift, 80)),
-      Array(Pt(110 + shift, 20), Pt(130 + shift, 20), Pt(130 + shift, 80), Pt(110 + shift, 80))))
-    // outer-only ratio = (100-70-shift)*60/3600; hole-subtracted ratio =
-    // same overlap / 2400
-    assert(Split.keep(subj(0), polys), "hole-subtracted ratio 75% keeps")
-    assert(Split.keep(subj(5), polys), "outer-only would score 41% and drop")
-    assert(!Split.keep(subj(25), polys), "only 12.5% truly inside")
+      java.nio.file.Files.writeString(dir.resolve("b.geojson"), gj)
+      val polys = Split.read(dir.resolve("b.geojson").toString)
+      def subj(shift: Double): Geom.MultiPolygon = Array(Array(
+        Array(Pt(70 + shift, 20), Pt(130 + shift, 20), Pt(130 + shift, 80), Pt(70 + shift, 80)),
+        Array(Pt(110 + shift, 20), Pt(130 + shift, 20), Pt(130 + shift, 80), Pt(110 + shift, 80))))
+      // outer-only ratio = (100-70-shift)*60/3600; hole-subtracted ratio =
+      // same overlap / 2400
+      assert(Split.keep(subj(0), polys), "hole-subtracted ratio 75% keeps")
+      assert(Split.keep(subj(5), polys), "outer-only would score 41% and drop")
+      assert(!Split.keep(subj(25), polys), "only 12.5% truly inside")
+    }
   }
 
   test("split polygon strictly inside the subject is NOT a keep") {
-    // reference is_inside_area: contains(g1) and overlaps(g1) both False
-    // when the split polygon nests inside the feature -> False, even
-    // though the inner polygon covers >=50% of the subject's area
-    val dir = java.nio.file.Files.createTempDirectory("graft_split_i")
-    val gj = """{"type":"FeatureCollection","features":[
+    graft.TestSpark.withTempDir("graft_split_i") { dir =>
+      // reference is_inside_area: contains(g1) and overlaps(g1) both False
+      // when the split polygon nests inside the feature -> False, even
+      // though the inner polygon covers >=50% of the subject's area
+      val gj = """{"type":"FeatureCollection","features":[
       {"type":"Feature","properties":{},"geometry":{"type":"Polygon","coordinates":
        [[[10,10],[90,10],[90,90],[10,90],[10,10]]]}}]}"""
-    java.nio.file.Files.writeString(dir.resolve("inner.geojson"), gj)
-    val polys = Split.read(dir.resolve("inner.geojson").toString)
-    val big: Geom.MultiPolygon = Array(Array(
-      Array(Pt(0, 0), Pt(100, 0), Pt(100, 100), Pt(0, 100))))
-    assert(!Split.keep(big, polys),
-      "inner boundary covers 64% but the reference returns False")
-    // the same boundary KEEPS a subject it genuinely overlaps >=50%
-    val half: Geom.MultiPolygon = Array(Array(
-      Array(Pt(5, 20), Pt(60, 20), Pt(60, 80), Pt(5, 80))))
-    assert(Split.keep(half, polys))
+      java.nio.file.Files.writeString(dir.resolve("inner.geojson"), gj)
+      val polys = Split.read(dir.resolve("inner.geojson").toString)
+      val big: Geom.MultiPolygon = Array(Array(
+        Array(Pt(0, 0), Pt(100, 0), Pt(100, 100), Pt(0, 100))))
+      assert(!Split.keep(big, polys),
+        "inner boundary covers 64% but the reference returns False")
+      // the same boundary KEEPS a subject it genuinely overlaps >=50%
+      val half: Geom.MultiPolygon = Array(Array(
+        Array(Pt(5, 20), Pt(60, 20), Pt(60, 80), Pt(5, 80))))
+      assert(Split.keep(half, polys))
+    }
   }
 
   test("filterD runs the rule distributed") {

@@ -50,46 +50,50 @@ class CheckpointResumeSpec extends AnyFunSuite {
     mr.taskDocs.collect().map(d => (d.label, d.xml)).sortBy(_._1).toSeq)
 
   test("kill mid-DAG, rerun: manifest hits + identical final goldens") {
-    val dir = Files.createTempDirectory("graft_resume").toString
-    val (cons, parcels, ads) = inputs()
-    val munOf = (_: String) => "38012"
+    TestSpark.withTempDir("graft_resume") { tmp =>
+      val dir = tmp.toString
+      val (cons, parcels, ads) = inputs()
+      val munOf = (_: String) => "38012"
 
-    val cp1 = new CheckpointedPipeline(spark, dir)
-    val r1 = summarize(AppRun.runMulti(spark, cons, parcels, ads, munOf,
-      checkpoint = Some((cp1, "fixture38012-v1"))))
-    assert(cp1.computedStages === 14, s"expected 14 fresh stages, got ${cp1.computedStages}")
+      val cp1 = new CheckpointedPipeline(spark, dir)
+      val r1 = summarize(AppRun.runMulti(spark, cons, parcels, ads, munOf,
+        checkpoint = Some((cp1, "fixture38012-v1"))))
+      assert(cp1.computedStages === 14, s"expected 14 fresh stages, got ${cp1.computedStages}")
 
-    // full rerun resumes every stage (zero recomputed), same goldens
-    val cp2 = new CheckpointedPipeline(spark, dir)
-    val r2 = summarize(AppRun.runMulti(spark, inputs()._1, parcels, ads, munOf,
-      checkpoint = Some((cp2, "fixture38012-v1"))))
-    assert(cp2.computedStages === 0, s"resume recomputed ${cp2.computedStages}")
-    assert(r2 === r1)
+      // full rerun resumes every stage (zero recomputed), same goldens
+      val cp2 = new CheckpointedPipeline(spark, dir)
+      val r2 = summarize(AppRun.runMulti(spark, inputs()._1, parcels, ads, munOf,
+        checkpoint = Some((cp2, "fixture38012-v1"))))
+      assert(cp2.computedStages === 0, s"resume recomputed ${cp2.computedStages}")
+      assert(r2 === r1)
 
-    // simulate dying before the last two stages were checkpointed
-    Files.delete(Paths.get(s"$dir/s12_taskmap.manifest.json"))
-    Files.delete(Paths.get(s"$dir/s13_taskdocs.manifest.json"))
-    val cp3 = new CheckpointedPipeline(spark, dir)
-    val r3 = summarize(AppRun.runMulti(spark, inputs()._1, parcels, ads, munOf,
-      checkpoint = Some((cp3, "fixture38012-v1"))))
-    assert(cp3.computedStages === 2, s"tail resume recomputed ${cp3.computedStages}")
-    assert(r3 === r1)
+      // simulate dying before the last two stages were checkpointed
+      Files.delete(Paths.get(s"$dir/s12_taskmap.manifest.json"))
+      Files.delete(Paths.get(s"$dir/s13_taskdocs.manifest.json"))
+      val cp3 = new CheckpointedPipeline(spark, dir)
+      val r3 = summarize(AppRun.runMulti(spark, inputs()._1, parcels, ads, munOf,
+        checkpoint = Some((cp3, "fixture38012-v1"))))
+      assert(cp3.computedStages === 2, s"tail resume recomputed ${cp3.computedStages}")
+      assert(r3 === r1)
 
-    // a changed input fingerprint invalidates everything
-    val cp4 = new CheckpointedPipeline(spark, dir)
-    AppRun.runMulti(spark, inputs()._1, parcels, ads, munOf,
-      checkpoint = Some((cp4, "fixture38012-v2")))
-    assert(cp4.computedStages === 14)
+      // a changed input fingerprint invalidates everything
+      val cp4 = new CheckpointedPipeline(spark, dir)
+      AppRun.runMulti(spark, inputs()._1, parcels, ads, munOf,
+        checkpoint = Some((cp4, "fixture38012-v2")))
+      assert(cp4.computedStages === 14)
+    }
   }
 
   test("checkpointed run equals the uncheckpointed run") {
-    val dir = Files.createTempDirectory("graft_resume2").toString
-    val (cons, parcels, ads) = inputs()
-    val munOf = (_: String) => "38012"
-    val plain = summarize(AppRun.runMulti(spark, cons, parcels, ads, munOf))
-    val cp = new CheckpointedPipeline(spark, dir)
-    val ck = summarize(AppRun.runMulti(spark, inputs()._1, parcels, ads, munOf,
-      checkpoint = Some((cp, "v1"))))
-    assert(ck === plain)
+    TestSpark.withTempDir("graft_resume2") { tmp =>
+      val dir = tmp.toString
+      val (cons, parcels, ads) = inputs()
+      val munOf = (_: String) => "38012"
+      val plain = summarize(AppRun.runMulti(spark, cons, parcels, ads, munOf))
+      val cp = new CheckpointedPipeline(spark, dir)
+      val ck = summarize(AppRun.runMulti(spark, inputs()._1, parcels, ads, munOf,
+        checkpoint = Some((cp, "v1"))))
+      assert(ck === plain)
+    }
   }
 }

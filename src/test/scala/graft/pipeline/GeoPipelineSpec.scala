@@ -18,53 +18,57 @@ class GeoPipelineSpec extends AnyFunSuite {
   }
 
   test("fresh run: 6 stages, laws hold, report nonempty; rerun: 0 stages, identical") {
-    val dir = Files.createTempDirectory("graft_geo").toString
-    val cp1 = new CheckpointedPipeline(spark, dir)
-    val r1 = GeoPipeline.run(spark, TestSpark.sf001, cp1, "v1")
-    val rep1 = report(r1)
-    assert(cp1.computedStages === 6, s"fresh run computed ${cp1.computedStages}")
-    assert(r1.failedLaws === Seq.empty)
-    assert(rep1.nonEmpty)
-    assert(rep1.map(_._3).sum > 0)
+    TestSpark.withTempDir("graft_geo") { tmp =>
+      val dir = tmp.toString
+      val cp1 = new CheckpointedPipeline(spark, dir)
+      val r1 = GeoPipeline.run(spark, TestSpark.sf001, cp1, "v1")
+      val rep1 = report(r1)
+      assert(cp1.computedStages === 6, s"fresh run computed ${cp1.computedStages}")
+      assert(r1.failedLaws === Seq.empty)
+      assert(rep1.nonEmpty)
+      assert(rep1.map(_._3).sum > 0)
 
-    val cp2 = new CheckpointedPipeline(spark, dir)
-    val r2 = GeoPipeline.run(spark, TestSpark.sf001, cp2, "v1")
-    assert(cp2.computedStages === 0, s"rerun computed ${cp2.computedStages}")
-    assert(r2.failedLaws === Seq.empty)
-    assert(report(r2) === rep1)
+      val cp2 = new CheckpointedPipeline(spark, dir)
+      val r2 = GeoPipeline.run(spark, TestSpark.sf001, cp2, "v1")
+      assert(cp2.computedStages === 0, s"rerun computed ${cp2.computedStages}")
+      assert(r2.failedLaws === Seq.empty)
+      assert(report(r2) === rep1)
 
-    // mid-DAG kill: drop the geotag manifest — resume recomputes exactly it
-    Files.delete(Paths.get(s"$dir/geotag.manifest.json"))
-    val cp3 = new CheckpointedPipeline(spark, dir)
-    val r3 = GeoPipeline.run(spark, TestSpark.sf001, cp3, "v1")
-    assert(cp3.computedStages === 1, s"resume computed ${cp3.computedStages}")
-    assert(r3.failedLaws === Seq.empty)
-    assert(report(r3) === rep1)
+      // mid-DAG kill: drop the geotag manifest — resume recomputes exactly it
+      Files.delete(Paths.get(s"$dir/geotag.manifest.json"))
+      val cp3 = new CheckpointedPipeline(spark, dir)
+      val r3 = GeoPipeline.run(spark, TestSpark.sf001, cp3, "v1")
+      assert(cp3.computedStages === 1, s"resume computed ${cp3.computedStages}")
+      assert(r3.failedLaws === Seq.empty)
+      assert(report(r3) === rep1)
 
-    // version bump invalidates everything downstream of the fingerprint
-    val cp4 = new CheckpointedPipeline(spark, dir)
-    GeoPipeline.run(spark, TestSpark.sf001, cp4, "v2")
-    assert(cp4.computedStages === 6, s"v2 recomputed ${cp4.computedStages}")
+      // version bump invalidates everything downstream of the fingerprint
+      val cp4 = new CheckpointedPipeline(spark, dir)
+      GeoPipeline.run(spark, TestSpark.sf001, cp4, "v2")
+      assert(cp4.computedStages === 6, s"v2 recomputed ${cp4.computedStages}")
+    }
   }
 
   test("canonical collapse does real work: 4 revisions per page, blocked hosts gone") {
-    import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_geo2").toString
-    val cp = new CheckpointedPipeline(spark, dir)
-    GeoPipeline.run(spark, TestSpark.sf001, cp, "v1")
-    val canonical = spark.read.parquet(s"$dir/canonical.parquet")
-    val nDocs = spark.read.parquet(s"${TestSpark.sf001}/documents.parquet").count()
-    // every surviving canonical url collapsed >= 1 and <= 4 revisions,
-    // and the total surviving revisions + blocked ones == corpus
-    val m = cp.metrics()
-    assert(m(("canonical", "rows")) === canonical.count())
-    val revs = canonical.agg(sum("n_revisions")).head().getLong(0)
-    assert(revs < nDocs, "blocklist must drop some revisions")
-    assert(canonical.filter(col("n_revisions") > 4).count() === 0)
-    val hosts = canonical
-      .select(graft.ops.UrlOps.hostOf(col("url_norm")).as("h"))
-      .distinct().collect().map(_.getString(0)).toSet
-    assert(hosts.intersect(graft.ops.UrlOps.BlockedHosts.toSet) === Set.empty)
+    TestSpark.withTempDir("graft_geo2") { tmp =>
+      import org.apache.spark.sql.functions._
+      val dir = tmp.toString
+      val cp = new CheckpointedPipeline(spark, dir)
+      GeoPipeline.run(spark, TestSpark.sf001, cp, "v1")
+      val canonical = spark.read.parquet(s"$dir/canonical.parquet")
+      val nDocs = spark.read.parquet(s"${TestSpark.sf001}/documents.parquet").count()
+      // every surviving canonical url collapsed >= 1 and <= 4 revisions,
+      // and the total surviving revisions + blocked ones == corpus
+      val m = cp.metrics()
+      assert(m(("canonical", "rows")) === canonical.count())
+      val revs = canonical.agg(sum("n_revisions")).head().getLong(0)
+      assert(revs < nDocs, "blocklist must drop some revisions")
+      assert(canonical.filter(col("n_revisions") > 4).count() === 0)
+      val hosts = canonical
+        .select(graft.ops.UrlOps.hostOf(col("url_norm")).as("h"))
+        .distinct().collect().map(_.getString(0)).toSet
+      assert(hosts.intersect(graft.ops.UrlOps.BlockedHosts.toSet) === Set.empty)
+    }
   }
 
   // ---- incremental-merge algebra --------------------------------------
@@ -119,104 +123,108 @@ class GeoPipelineSpec extends AnyFunSuite {
   }
 
   test("versioned seed -> append: checkpointed state folds a crawl batch") {
-    import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_geo_append").toString
-    val pages = pagesOf(TestSpark.sf001)
-    val base = pages.filter(col("doc_id") % 5 =!= 2)
-    val batch = pages.filter(col("doc_id") % 5 === 2)
+    TestSpark.withTempDir("graft_geo_append") { tmp =>
+      import org.apache.spark.sql.functions._
+      val dir = tmp.toString
+      val pages = pagesOf(TestSpark.sf001)
+      val base = pages.filter(col("doc_id") % 5 =!= 2)
+      val batch = pages.filter(col("doc_id") % 5 === 2)
 
-    val cp = new CheckpointedPipeline(spark, dir)
-    val r1 = GeoPipeline.seed(spark, cp, "v1", "crawl1", base)
-    assert(cp.computedStages === 2)
-    assert(r1.failedLaws === Seq.empty)
+      val cp = new CheckpointedPipeline(spark, dir)
+      val r1 = GeoPipeline.seed(spark, cp, "v1", "crawl1", base)
+      assert(cp.computedStages === 2)
+      assert(r1.failedLaws === Seq.empty)
 
-    val r2 = GeoPipeline.append(spark, cp, "v1", "v2", "crawl2", batch)
-    assert(cp.computedStages === 4)
-    assert(r2.failedLaws === Seq.empty)
-    // the appended state equals the full recompute at both tables
-    assert(collectReport(r2.report) ===
-      collectReport(GeoPipeline.reportOf(GeoPipeline.canonPartial(pages))))
-    import spark.implicits._
-    val appended = spark.read.parquet(s"$dir/canon@v2.parquet")
-      .drop("_lineage_partition")
-      .as[(String, Long, String, Long, Long)].collect().sortBy(_._1).toSeq
-    val full = GeoPipeline.canonPartial(pages)
-      .as[(String, Long, String, Long, Long)].collect().sortBy(_._1).toSeq
-    assert(appended === full)
-    graft.CacheBin.drain()
+      val r2 = GeoPipeline.append(spark, cp, "v1", "v2", "crawl2", batch)
+      assert(cp.computedStages === 4)
+      assert(r2.failedLaws === Seq.empty)
+      // the appended state equals the full recompute at both tables
+      assert(collectReport(r2.report) ===
+        collectReport(GeoPipeline.reportOf(GeoPipeline.canonPartial(pages))))
+      import spark.implicits._
+      val appended = spark.read.parquet(s"$dir/canon@v2.parquet")
+        .drop("_lineage_partition")
+        .as[(String, Long, String, Long, Long)].collect().sortBy(_._1).toSeq
+      val full = GeoPipeline.canonPartial(pages)
+        .as[(String, Long, String, Long, Long)].collect().sortBy(_._1).toSeq
+      assert(appended === full)
+      graft.CacheBin.drain()
 
-    // retry with identical args: zero stages recomputed, same report;
-    // v1 state is untouched (time travel to the pre-append rollup)
-    val cp2 = new CheckpointedPipeline(spark, dir)
-    val r3 = GeoPipeline.append(spark, cp2, "v1", "v2", "crawl2", batch)
-    assert(cp2.computedStages === 0)
-    assert(collectReport(r3.report) === collectReport(r2.report))
-    assert(collectReport(spark.read.parquet(s"$dir/rollup@v1.parquet")
-      .drop("_lineage_partition")) === collectReport(r1.report))
-    graft.CacheBin.drain()
+      // retry with identical args: zero stages recomputed, same report;
+      // v1 state is untouched (time travel to the pre-append rollup)
+      val cp2 = new CheckpointedPipeline(spark, dir)
+      val r3 = GeoPipeline.append(spark, cp2, "v1", "v2", "crawl2", batch)
+      assert(cp2.computedStages === 0)
+      assert(collectReport(r3.report) === collectReport(r2.report))
+      assert(collectReport(spark.read.parquet(s"$dir/rollup@v1.parquet")
+        .drop("_lineage_partition")) === collectReport(r1.report))
+      graft.CacheBin.drain()
+    }
   }
 
   test("streaming crawl-append: micro-batches fold exactly-once into versioned state") {
-    import org.apache.spark.sql.functions._
-    val stateDir = Files.createTempDirectory("graft_geo_stream_state").toString
-    val streamCp = Files.createTempDirectory("graft_geo_stream_cp").toString
-    val inDir = Files.createTempDirectory("graft_geo_stream_in")
+    TestSpark.withTempDir("graft_geo_stream") { root =>
+      import org.apache.spark.sql.functions._
+      val stateDir = Files.createDirectories(root.resolve("state")).toString
+      val streamCp = Files.createDirectories(root.resolve("cp")).toString
+      val inDir = Files.createDirectories(root.resolve("in"))
 
-    val pages = pagesOf(TestSpark.sf001)
-    val seedPages = pages.filter(col("doc_id") % 5 === 0)
-    // one parquet FILE per future micro-batch (maxFilesPerTrigger=1)
-    def writeBatchFile(k: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft_geo_stream_tmp").toString
-      pages.filter(col("doc_id") % 5 === k)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.move(part.toPath, inDir.resolve(s"batch$k.parquet"))
+      val pages = pagesOf(TestSpark.sf001)
+      val seedPages = pages.filter(col("doc_id") % 5 === 0)
+      // one parquet FILE per future micro-batch (maxFilesPerTrigger=1)
+      def writeBatchFile(k: Int): Unit = {
+        val tmp = root.resolve(s"tmp$k").toString
+        pages.filter(col("doc_id") % 5 === k)
+          .coalesce(1).write.mode("overwrite").parquet(tmp)
+        val part = new java.io.File(tmp).listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        Files.move(part.toPath, inDir.resolve(s"batch$k.parquet"))
+      }
+      (1 to 3).foreach(writeBatchFile)
+
+      val cp = new CheckpointedPipeline(spark, stateDir)
+      assert(GeoPipeline.seed(spark, cp, "seed", "crawl0", seedPages)
+        .failedLaws === Seq.empty)
+
+      def runStream(): Unit = {
+        val stream = spark.readStream.schema(pages.schema)
+          .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
+        val q = GeoPipeline.appendStream(spark, cp, stream, "seed", streamCp)
+        q.processAllAvailable(); q.stop(); q.awaitTermination()
+      }
+      runStream()
+      // 3 files -> 3 micro-batches -> versions b0..b2, each 2 stages
+      assert(cp.computedStages === 2 + 6,
+        s"stream computed ${cp.computedStages} stages")
+      def stateOf(ver: String) = {
+        import spark.implicits._
+        spark.read.parquet(s"$stateDir/canon@$ver.parquet")
+          .drop("_lineage_partition")
+          .as[(String, Long, String, Long, Long)].collect().sortBy(_._1).toSeq
+      }
+      def fullState(whole: org.apache.spark.sql.DataFrame) = {
+        import spark.implicits._
+        GeoPipeline.canonPartial(whole)
+          .as[(String, Long, String, Long, Long)].collect().sortBy(_._1).toSeq
+      }
+      val after3 = pages.filter(col("doc_id") % 5 <= 3)
+      assert(stateOf("b2") === fullState(after3))
+      assert(collectReport(
+        spark.read.parquet(s"$stateDir/rollup@b2.parquet").drop("_lineage_partition"))
+        === collectReport(GeoPipeline.reportOf(GeoPipeline.canonPartial(after3))))
+
+      // restart against the SAME stream checkpoint with no new files:
+      // nothing replays, zero stages recomputed (exactly-once state)
+      runStream()
+      assert(cp.computedStages === 8, s"idle restart computed ${cp.computedStages}")
+
+      // a late file after restart continues the version chain (b3)
+      writeBatchFile(4)
+      runStream()
+      assert(cp.computedStages === 10)
+      assert(stateOf("b3") === fullState(pages))
+      graft.CacheBin.drain()
     }
-    (1 to 3).foreach(writeBatchFile)
-
-    val cp = new CheckpointedPipeline(spark, stateDir)
-    assert(GeoPipeline.seed(spark, cp, "seed", "crawl0", seedPages)
-      .failedLaws === Seq.empty)
-
-    def runStream(): Unit = {
-      val stream = spark.readStream.schema(pages.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      val q = GeoPipeline.appendStream(spark, cp, stream, "seed", streamCp)
-      q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    runStream()
-    // 3 files -> 3 micro-batches -> versions b0..b2, each 2 stages
-    assert(cp.computedStages === 2 + 6,
-      s"stream computed ${cp.computedStages} stages")
-    def stateOf(ver: String) = {
-      import spark.implicits._
-      spark.read.parquet(s"$stateDir/canon@$ver.parquet")
-        .drop("_lineage_partition")
-        .as[(String, Long, String, Long, Long)].collect().sortBy(_._1).toSeq
-    }
-    def fullState(whole: org.apache.spark.sql.DataFrame) = {
-      import spark.implicits._
-      GeoPipeline.canonPartial(whole)
-        .as[(String, Long, String, Long, Long)].collect().sortBy(_._1).toSeq
-    }
-    val after3 = pages.filter(col("doc_id") % 5 <= 3)
-    assert(stateOf("b2") === fullState(after3))
-    assert(collectReport(
-      spark.read.parquet(s"$stateDir/rollup@b2.parquet").drop("_lineage_partition"))
-      === collectReport(GeoPipeline.reportOf(GeoPipeline.canonPartial(after3))))
-
-    // restart against the SAME stream checkpoint with no new files:
-    // nothing replays, zero stages recomputed (exactly-once state)
-    runStream()
-    assert(cp.computedStages === 8, s"idle restart computed ${cp.computedStages}")
-
-    // a late file after restart continues the version chain (b3)
-    writeBatchFile(4)
-    runStream()
-    assert(cp.computedStages === 10)
-    assert(stateOf("b3") === fullState(pages))
-    graft.CacheBin.drain()
   }
 
   test("incremental fold of an EMPTY batch is the identity") {

@@ -9,10 +9,12 @@ class CsvGeoJsonSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("tab-delimited dict round-trips (csvtools semantics)") {
-    val dir = Files.createTempDirectory("graft-csv").toString + "/dict"
-    val dict = Map("CL MAYOR" -> "Calle Mayor", "AV DEL SOL" -> "Avenida del Sol")
-    CsvGeoJson.writeDict(spark, dict, dir)
-    assert(CsvGeoJson.readDict(spark, dir) === dict)
+    TestSpark.withTempDir("graft-csv") { tmp =>
+      val dir = tmp.toString + "/dict"
+      val dict = Map("CL MAYOR" -> "Calle Mayor", "AV DEL SOL" -> "Avenida del Sol")
+      CsvGeoJson.writeDict(spark, dict, dir)
+      assert(CsvGeoJson.readDict(spark, dir) === dict)
+    }
   }
 
   test("zones export as parseable GeoJSON features with closed rings") {

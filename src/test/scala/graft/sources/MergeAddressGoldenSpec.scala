@@ -88,19 +88,21 @@ class GetTranslationsSpec extends AnyFunSuite {
   lazy val spark = graft.TestSpark.spark
 
   test("first run writes get_names output; later runs read it; values strip") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_names").toString
-    val path = s"$dir/highway_names.csv"
-    var computed = 0
-    val first = CsvGeoJson.getTranslations(spark, path, isNew = true) {
-      computed += 1; Map("TAZ" -> " taz ", "RAZ" -> " raz ")
+    graft.TestSpark.withTempDir("graft_names") { tmp =>
+      val dir = tmp.toString
+      val path = s"$dir/highway_names.csv"
+      var computed = 0
+      val first = CsvGeoJson.getTranslations(spark, path, isNew = true) {
+        computed += 1; Map("TAZ" -> " taz ", "RAZ" -> " raz ")
+      }
+      assert(first === Map("TAZ" -> "taz", "RAZ" -> "raz"))
+      assert(computed === 1)
+      val second = CsvGeoJson.getTranslations(spark, path, isNew = false) {
+        computed += 1; fail("must not recompute on resume")
+      }
+      assert(second === Map("TAZ" -> "taz", "RAZ" -> "raz"))
+      assert(computed === 1)
     }
-    assert(first === Map("TAZ" -> "taz", "RAZ" -> "raz"))
-    assert(computed === 1)
-    val second = CsvGeoJson.getTranslations(spark, path, isNew = false) {
-      computed += 1; fail("must not recompute on resume")
-    }
-    assert(second === Map("TAZ" -> "taz", "RAZ" -> "raz"))
-    assert(computed === 1)
   }
 }
 
@@ -161,32 +163,36 @@ class WriteOsmSpec extends AnyFunSuite {
   lazy val spark = graft.TestSpark.spark
 
   test("write_osm drops ref tags, merges duplicates, gzips; reads back") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_osm").toString
-    val doc = OsmDoc(
-      Seq(RawNode(-1, 0, 0, Map("ref" -> "X", "entrance" -> "yes")),
-        RawNode(-2, 0, 0, Map.empty), // duplicate coordinate -> merges
-        RawNode(-3, 1, 0, Map.empty)),
-      Seq(RawWay(-10, Seq(-1L, -3L), Map("ref" -> "Y", "building" -> "yes"))),
-      Seq.empty)
-    val merged = OsmOut.writeOsmDoc(doc, s"$dir/a.osm.gz")
-    assert(merged.nodes.forall(n => !n.tags.contains("ref")))
-    assert(merged.ways.head.tags === Map("building" -> "yes"))
-    assert(merged.nodes.length === 2) // -2 sank into the tagged -1
-    val (ns, ws, _) = OsmOut.readOsmFile(s"$dir/a.osm.gz")
-    assert(ns.map(n => (n.lon, n.lat, n.tags)).toSet ===
-      merged.nodes.map(n => (n.lon, n.lat, n.tags)).toSet)
-    assert(ws.head.tags === Map("building" -> "yes"))
+    graft.TestSpark.withTempDir("graft_osm") { tmp =>
+      val dir = tmp.toString
+      val doc = OsmDoc(
+        Seq(RawNode(-1, 0, 0, Map("ref" -> "X", "entrance" -> "yes")),
+          RawNode(-2, 0, 0, Map.empty), // duplicate coordinate -> merges
+          RawNode(-3, 1, 0, Map.empty)),
+        Seq(RawWay(-10, Seq(-1L, -3L), Map("ref" -> "Y", "building" -> "yes"))),
+        Seq.empty)
+      val merged = OsmOut.writeOsmDoc(doc, s"$dir/a.osm.gz")
+      assert(merged.nodes.forall(n => !n.tags.contains("ref")))
+      assert(merged.ways.head.tags === Map("building" -> "yes"))
+      assert(merged.nodes.length === 2) // -2 sank into the tagged -1
+      val (ns, ws, _) = OsmOut.readOsmFile(s"$dir/a.osm.gz")
+      assert(ns.map(n => (n.lon, n.lat, n.tags)).toSet ===
+        merged.nodes.map(n => (n.lon, n.lat, n.tags)).toSet)
+      assert(ws.head.tags === Map("building" -> "yes"))
+    }
   }
 
   test("distributed task-file sink writes one .osm.gz per label") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_tasks").toString
-    val docs = spark.createDataset(Seq(
-      ("T1", OsmOut.osmToXml(OsmDoc(Seq(RawNode(-1, 0, 0, Map("a" -> "1"))), Seq.empty, Seq.empty))),
-      ("T2", OsmOut.osmToXml(OsmDoc(Seq(RawNode(-1, 2, 2, Map("b" -> "2"))), Seq.empty, Seq.empty)))))
-      .repartition(2)
-    assert(OsmOut.writeTaskFiles(docs, dir) === 2L)
-    val (ns, _, _) = OsmOut.readOsmFile(s"$dir/T2.osm.gz")
-    assert(ns.head.tags === Map("b" -> "2"))
+    graft.TestSpark.withTempDir("graft_tasks") { tmp =>
+      import spark.implicits._
+      val dir = tmp.toString
+      val docs = spark.createDataset(Seq(
+        ("T1", OsmOut.osmToXml(OsmDoc(Seq(RawNode(-1, 0, 0, Map("a" -> "1"))), Seq.empty, Seq.empty))),
+        ("T2", OsmOut.osmToXml(OsmDoc(Seq(RawNode(-1, 2, 2, Map("b" -> "2"))), Seq.empty, Seq.empty)))))
+        .repartition(2)
+      assert(OsmOut.writeTaskFiles(docs, dir) === 2L)
+      val (ns, _, _) = OsmOut.readOsmFile(s"$dir/T2.osm.gz")
+      assert(ns.head.tags === Map("b" -> "2"))
+    }
   }
 }

@@ -74,59 +74,61 @@ class ZRangeSpec extends AnyFunSuite {
   }
 
   test("clustered storage: ranges push down, prune dirs and rows, lose nothing") {
-    val bits = 10 // 1024x1024 grid
-    val dir = java.nio.file.Files.createTempDirectory("zrange").toString + "/t"
-    val pts = spark.range(60000).select(
-      col("id"),
-      (col("id") * 7919 % 1024).as("ix"),
-      (col("id") * 104729 % 1024).as("iy"))
-      .withColumn("m", Morton.mortonCol(col("ix"), col("iy")))
-      .withColumn("pq", shiftright(col("m"), 2 * (bits - 1))) // 4 top quads
-    Layout.writeClustered(pts, "m", "pq", dir, n = 8)
+    TestSpark.withTempDir("zrange") { tmp =>
+      val bits = 10 // 1024x1024 grid
+      val dir = tmp.toString + "/t"
+      val pts = spark.range(60000).select(
+        col("id"),
+        (col("id") * 7919 % 1024).as("ix"),
+        (col("id") * 104729 % 1024).as("iy"))
+        .withColumn("m", Morton.mortonCol(col("ix"), col("iy")))
+        .withColumn("pq", shiftright(col("m"), 2 * (bits - 1))) // 4 top quads
+      Layout.writeClustered(pts, "m", "pq", dir, n = 8)
 
-    val (x0, x1, y0, y1) = (100L, 350L, 80L, 300L) // upper-left region
-    val ranges = ZRange.bboxRanges(x0, x1, y0, y1, bits, maxRanges = 64)
-    val quads = ZRange.coarseQuads(ranges, bits, quadBits = 1)
-    val scan = Layout.readClustered(spark, dir)
-      .where(col("pq").isin(quads: _*))
-      .where(ZRange.rangesPredicate(col("m"), ranges))
-      .where(col("ix").between(x0, x1) && col("iy").between(y0, y1))
+      val (x0, x1, y0, y1) = (100L, 350L, 80L, 300L) // upper-left region
+      val ranges = ZRange.bboxRanges(x0, x1, y0, y1, bits, maxRanges = 64)
+      val quads = ZRange.coarseQuads(ranges, bits, quadBits = 1)
+      val scan = Layout.readClustered(spark, dir)
+        .where(col("pq").isin(quads: _*))
+        .where(ZRange.rangesPredicate(col("m"), ranges))
+        .where(col("ix").between(x0, x1) && col("iy").between(y0, y1))
 
-    val plan = scan.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("pq"),
-      s"no partition filter in:\n$plan")
-    // the PushedFilters display truncates the long Or tree, so assert the
-    // pushed prefix plus the interval comparisons on the key column
-    assert(plan.contains("Or(And(GreaterThan") || plan.contains("GreaterThanOrEqual(m,"),
-      s"morton intervals not pushed to parquet in:\n$plan")
-    assert("m#\\d+L >= ".r.findFirstIn(plan).isDefined,
-      s"no interval comparison on the morton column in:\n$plan")
+      val plan = scan.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") && plan.contains("pq"),
+        s"no partition filter in:\n$plan")
+      // the PushedFilters display truncates the long Or tree, so assert the
+      // pushed prefix plus the interval comparisons on the key column
+      assert(plan.contains("Or(And(GreaterThan") || plan.contains("GreaterThanOrEqual(m,"),
+        s"morton intervals not pushed to parquet in:\n$plan")
+      assert("m#\\d+L >= ".r.findFirstIn(plan).isDefined,
+        s"no interval comparison on the morton column in:\n$plan")
 
-    val got = scan.select("id").as[Long].collect().sorted
-    val want = spark.range(60000).select(col("id"),
-      (col("id") * 7919 % 1024).as("ix"), (col("id") * 104729 % 1024).as("iy"))
-      .where(col("ix").between(x0, x1) && col("iy").between(y0, y1))
-      .select("id").as[Long].collect().sorted
-    assert(got.nonEmpty && got.sameElements(want))
+      val got = scan.select("id").as[Long].collect().sorted
+      val want = spark.range(60000).select(col("id"),
+        (col("id") * 7919 % 1024).as("ix"), (col("id") * 104729 % 1024).as("iy"))
+        .where(col("ix").between(x0, x1) && col("iy").between(y0, y1))
+        .select("id").as[Long].collect().sorted
+      assert(got.nonEmpty && got.sameElements(want))
 
-    // directory pruning: the bbox sits in one top-level quad
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    def leaves(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
-      case _ => p.collectLeaves().flatMap {
+      // directory pruning: the bbox sits in one top-level quad
+      import org.apache.spark.sql.execution.SparkPlan
+      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+      def leaves(p: SparkPlan): Seq[SparkPlan] = p match {
         case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
-        case l => Seq(l)
+        case _ => p.collectLeaves().flatMap {
+          case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
+          case l => Seq(l)
+        }
       }
+      def filesRead(df: org.apache.spark.sql.DataFrame): Long = {
+        df.collect()
+        leaves(df.queryExecution.executedPlan)
+          .flatMap(_.metrics.get("numFiles").map(_.value)).sum
+      }
+      val nAll = filesRead(Layout.readClustered(spark, dir))
+      val nPruned = filesRead(scan)
+      assert(nPruned > 0 && nPruned < nAll,
+        s"expected directory pruning: $nPruned of $nAll files")
     }
-    def filesRead(df: org.apache.spark.sql.DataFrame): Long = {
-      df.collect()
-      leaves(df.queryExecution.executedPlan)
-        .flatMap(_.metrics.get("numFiles").map(_.value)).sum
-    }
-    val nAll = filesRead(Layout.readClustered(spark, dir))
-    val nPruned = filesRead(scan)
-    assert(nPruned > 0 && nPruned < nAll,
-      s"expected directory pruning: $nPruned of $nAll files")
   }
 }

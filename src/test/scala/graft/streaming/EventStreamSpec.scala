@@ -18,42 +18,43 @@ class EventStreamSpec extends AnyFunSuite {
   }
 
   test("streaming dedup RESUMES from checkpoint: state survives restart, file sink stays exactly-once") {
-    // the north rule's resumability on the streaming side: kill the query,
-    // restart against the same checkpoint — the flatMapGroupsWithState
-    // state store is restored (a key seen before the kill is NOT
-    // re-emitted) and the file sink commits each batch exactly once
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("graft_resume")
-    val inDir = base.resolve("in"); val ckDir = base.resolve("ck")
-    val outDir = base.resolve("out")
-    java.nio.file.Files.createDirectories(inDir)
-    def writeBatch(name: String, rows: Seq[(String, Long)]): Unit =
-      rows.toDF("k", "id").coalesce(1).write.parquet(s"$inDir/$name")
-    def runRound(): Unit = {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("k",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType)))
-      val stream = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet").parquet(s"$inDir/*")
-      val q = EventStream.streamingDedup(stream.as[(String, Long)])
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", outDir.toString)
-        .option("checkpointLocation", ckDir.toString)
-        .start()
-      q.processAllAvailable()
-      q.stop() // the kill
+    TestSpark.withTempDir("graft_resume") { base =>
+      // the north rule's resumability on the streaming side: kill the query,
+      // restart against the same checkpoint — the flatMapGroupsWithState
+      // state store is restored (a key seen before the kill is NOT
+      // re-emitted) and the file sink commits each batch exactly once
+      import spark.implicits._
+      import org.apache.spark.sql.functions._
+      val inDir = base.resolve("in"); val ckDir = base.resolve("ck")
+      val outDir = base.resolve("out")
+      java.nio.file.Files.createDirectories(inDir)
+      def writeBatch(name: String, rows: Seq[(String, Long)]): Unit =
+        rows.toDF("k", "id").coalesce(1).write.parquet(s"$inDir/$name")
+      def runRound(): Unit = {
+        val schema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("k",
+            org.apache.spark.sql.types.StringType),
+          org.apache.spark.sql.types.StructField("id",
+            org.apache.spark.sql.types.LongType)))
+        val stream = spark.readStream.schema(schema)
+          .option("pathGlobFilter", "*.parquet").parquet(s"$inDir/*")
+        val q = EventStream.streamingDedup(stream.as[(String, Long)])
+          .writeStream.outputMode("append").format("parquet")
+          .option("path", outDir.toString)
+          .option("checkpointLocation", ckDir.toString)
+          .start()
+        q.processAllAvailable()
+        q.stop() // the kill
+      }
+      writeBatch("b1", Seq(("A", 1L), ("B", 2L)))
+      runRound()
+      writeBatch("b2", Seq(("B", 3L), ("C", 4L))) // B is a replay across the kill
+      runRound()
+      val out = spark.read.parquet(outDir.toString)
+        .as[(String, Long)].collect().sorted.toSeq
+      // B emitted ONCE with its pre-kill keep_id; C picked up post-restart
+      assert(out === Seq(("A", 1L), ("B", 2L), ("C", 4L)), out.toString)
     }
-    writeBatch("b1", Seq(("A", 1L), ("B", 2L)))
-    runRound()
-    writeBatch("b2", Seq(("B", 3L), ("C", 4L))) // B is a replay across the kill
-    runRound()
-    val out = spark.read.parquet(outDir.toString)
-      .as[(String, Long)].collect().sorted.toSeq
-    // B emitted ONCE with its pre-kill keep_id; C picked up post-restart
-    assert(out === Seq(("A", 1L), ("B", 2L), ("C", 4L)), out.toString)
   }
 
   test("a run-once query with a sentinel flush leaves no scratch directory behind") {

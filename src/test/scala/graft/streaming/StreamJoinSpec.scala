@@ -57,32 +57,33 @@ class StreamJoinSpec extends AnyFunSuite {
   }
 
   test("pairs split across micro-batches still join (state carries the open side)") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_sjoin")
-    def write(name: String, rows: Seq[(Long, String, Long)]): Unit =
-      rows.toDF("event_id", "event_type", "sec")
-        .select(col("event_id"), col("event_type"),
-          timestamp_seconds(col("sec")).as("ts"))
-        .coalesce(1).write.parquet(s"$base/in/$name")
-    // batch 1: impressions only; batch 2: their clicks (in horizon) plus
-    // one click 700s out (beyond the 600s bound — must NOT join)
-    write("b1", Seq((0L, "a", 100L), (2L, "b", 100L)))
-    val schema = spark.read.parquet(s"$base/in/b1").schema
-    def src() = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "*.parquet").parquet(s"$base/in/*")
-    val q = EventStream.intervalJoin(
-        src().filter(col("event_id") % 2 === 0),
-        src().filter(col("event_id") % 2 === 1),
-        "event_type", 600L).writeStream
-      .outputMode("append").format("memory").queryName("sjoin_batches").start()
-    q.processAllAvailable()
-    write("b2", Seq((1L, "a", 400L), (3L, "b", 800L)))
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("sjoin_batches")
-      .select("imp_id", "clk_id", "delay_us")
-      .as[(Long, Long, Long)].collect().toSet
-    assert(out === Set((0L, 1L, 300000000L)))
+    TestSpark.withTempDir("graft_sjoin") { base =>
+      import org.apache.spark.sql.functions._
+      import spark.implicits._
+      def write(name: String, rows: Seq[(Long, String, Long)]): Unit =
+        rows.toDF("event_id", "event_type", "sec")
+          .select(col("event_id"), col("event_type"),
+            timestamp_seconds(col("sec")).as("ts"))
+          .coalesce(1).write.parquet(s"$base/in/$name")
+      // batch 1: impressions only; batch 2: their clicks (in horizon) plus
+      // one click 700s out (beyond the 600s bound — must NOT join)
+      write("b1", Seq((0L, "a", 100L), (2L, "b", 100L)))
+      val schema = spark.read.parquet(s"$base/in/b1").schema
+      def src() = spark.readStream.schema(schema)
+        .option("pathGlobFilter", "*.parquet").parquet(s"$base/in/*")
+      val q = EventStream.intervalJoin(
+          src().filter(col("event_id") % 2 === 0),
+          src().filter(col("event_id") % 2 === 1),
+          "event_type", 600L).writeStream
+        .outputMode("append").format("memory").queryName("sjoin_batches").start()
+      q.processAllAvailable()
+      write("b2", Seq((1L, "a", 400L), (3L, "b", 800L)))
+      q.processAllAvailable()
+      q.stop()
+      val out = spark.table("sjoin_batches")
+        .select("imp_id", "clk_id", "delay_us")
+        .as[(Long, Long, Long)].collect().toSet
+      assert(out === Set((0L, 1L, 300000000L)))
+    }
   }
 }

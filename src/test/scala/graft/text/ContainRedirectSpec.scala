@@ -34,7 +34,7 @@ class ContainmentSpec extends AnyFunSuite {
       (5L, "alpha beta gamma delta epsilon eta"),     // high-Jaccard near-dup
       (6L, "totally unrelated text about nothing at all"))
     val got = Dedup.containmentPairs(docs.toDF("doc_id", "text"),
-        "doc_id", "text", shingleN = 3, threshold = 0.7)
+        "doc_id", "text", threshold = 0.7)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     graft.CacheBin.drain()
     val brute = bruteContainment(docs, 3, 0.7)
@@ -58,7 +58,7 @@ class ContainmentSpec extends AnyFunSuite {
     val A = ((0 until 9).map(i => s"s$i") ++ Seq("x1", "x2", "x3")).mkString(" ")
     val B = ((0 until 9).map(i => s"s$i") ++ (0 until 30).map(i => s"y$i")).mkString(" ")
     val docs = Seq((1L, A), (2L, B)).toDF("doc_id", "text")
-    val got = Dedup.containmentPairs(docs, "doc_id", "text", 3, 0.7)
+    val got = Dedup.containmentPairs(docs, "doc_id", "text", 0.7)
       .as[(Long, Long, Double)].collect()
     graft.CacheBin.drain()
     assert(got.map(p => (p._1, p._2)).toSeq === Seq((1L, 2L)),
