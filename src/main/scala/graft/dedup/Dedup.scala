@@ -1,7 +1,9 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
+import scala.collection.mutable
 
 /** Deduplication operators for the documents/pages table.
   *
@@ -191,10 +193,7 @@ object Dedup {
     * candidate join. */
   private def shingleBandRows(docs: DataFrame, idCol: String, textCol: String)
       : (DataFrame, DataFrame) = {
-    val sets = graft.CacheBin.persist(docs.select(
-      col(idCol).as("id"),
-      graft.functions.ShingleHash64Expr.shingleHash64(split(col(textCol), " "), ShingleN)
-        .as("shs")))
+    val sets = graft.CacheBin.persist(shingleSets(docs, idCol, textCol, ShingleN))
     val bandRows = graft.CacheBin.persist(
       sets.select(explode(minhashBandKeys(col("shs"))).as("bk"), col("id")))
     (sets, underCap(bandRows, "bk", MaxBucket))
@@ -302,43 +301,131 @@ object Dedup {
   /** EXACT n-gram Jaccard pair join with PPJoin-style prefix filtering
     * (Vernica et al., VLDB'10): shingles are globally ordered rarest-first
     * (document frequency asc, shingle hash asc — a total order), and a
-    * record of size sz only emits its first `sz - ceil(t*sz) + 1` shingles
-    * into the candidate join. Any pair with Jaccard >= t must share a
-    * prefix shingle under that order, so recall is 1.0 — while a
-    * boilerplate shingle shared by k documents sits at the END of the order
-    * and stays out of the prefixes, killing the k² hot-bucket blowup of the
-    * naive inverted-index self-join. Exact Jaccard is then verified per
+    * record of size sz only emits its first [[prefixLen]] shingles into the
+    * candidate join. Any pair with Jaccard >= t must share a prefix
+    * shingle under that order, so recall is 1.0 — while a boilerplate
+    * shingle shared by k documents sits at the END of the order and stays
+    * out of the prefixes, killing the k² hot-bucket blowup of the naive
+    * inverted-index self-join. Exact Jaccard is then verified per
     * candidate pair.
     *
-    * Every intermediate is computed once ([[shinglePrefixes]]): ONE
-    * persisted shingle-hash table feeds the df aggregate, the prefix and
-    * both verify joins, and both sides of the candidate self-join read the
-    * same prefix. Requires threshold <= 1 (a Jaccard never exceeds 1). */
+    * Two arms give the same rows and schema; the size of the shingle-hash
+    * table picks one:
+    *  - ONE TASK, when the optimizer's estimate of the (id, shs) table is
+    *    at most `spark.sql.autoBroadcastJoinThreshold` — Spark's own bound
+    *    on a table every task may hold whole, so one task holding it once
+    *    keeps the same memory promise. The table is coalesced to one
+    *    partition and [[localOverlaps]] runs the same PPJoin in memory: no
+    *    shuffle, no persist, one job. Set the threshold to -1 to force the
+    *    distributed arm.
+    *  - DISTRIBUTED otherwise: every intermediate is computed once
+    *    ([[shinglePrefixes]]): ONE persisted shingle-hash table feeds the df
+    *    aggregate, the prefix and both verify joins, and both sides of the
+    *    candidate self-join read the same prefix.
+    * Requires threshold <= 1 (a Jaccard never exceeds 1). */
   def jaccardPairsExact(
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, threshold: Double = 0.6): DataFrame = {
-    val (sets, ranked) = shinglePrefixes(docs, idCol, textCol, shingleN, threshold,
-      sz => sz - ceil(lit(threshold) * sz) + 1)
-    // persisted: both sides of the self-join read it, and Spark does not
-    // reuse the second copy of its plan (it plans two ranking shuffles),
-    // so without the cache the ranking would run twice
-    val prefix = graft.CacheBin.persist(ranked)
-    // length filter (PPJoin's size bound): J(A,B) >= t forces
-    // |A| >= t·|B| and |B| >= t·|A| — incompatible sizes prune in the
-    // candidate join itself, before the dedup/verify stages see the pair.
-    // The comparison subtracts an epsilon instead of using ceil(): the fp
-    // product t·|B| can land 1 ulp ABOVE its real value (e.g. double 0.55
-    // > 11/20), and ceil would then overshoot the tight integer bound and
-    // drop a valid boundary pair — the epsilon only ever ADMITS extra
-    // candidates, which the exact verify stage discards, so recall stays
-    // 1.0 for every threshold, not just ones that round down.
-    val cand = prefix.as("a").join(prefix.as("b"),
-        col("a.sh") === col("b.sh") && col("a.id") < col("b.id") &&
-          col("a.sz") >= lit(threshold) * col("b.sz") - lit(1e-9) &&
-          col("b.sz") >= lit(threshold) * col("a.sz") - lit(1e-9))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    jaccardAtLeast(withOverlap(cand, sets, sets), threshold)
+    require(threshold <= 1.0, s"pair threshold must be at most 1, got $threshold")
+    val sets = shingleSets(docs, idCol, textCol, shingleN)
+    val budget = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
+    if (budget >= 0 && sets.queryExecution.optimizedPlan.stats.sizeInBytes <= budget)
+      jaccardAtLeast(localOverlaps(sets, threshold), threshold, col("sz_a"), col("sz_b"))
+    else {
+      val held = graft.CacheBin.persist(sets)
+      // persisted: both sides of the self-join read it, and Spark does not
+      // reuse the second copy of its plan (it plans two ranking shuffles),
+      // so without the cache the ranking would run twice
+      val prefix = graft.CacheBin.persist(shinglePrefixes(held, threshold))
+      // the size bound prunes in the candidate join itself, before the
+      // dedup/verify stages see the pair
+      val cand = prefix.as("a").join(prefix.as("b"),
+          col("a.sh") === col("b.sh") && col("a.id") < col("b.id") &&
+            sizesMeet(threshold, col("a.sz"), col("b.sz")))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+        .distinct()
+      jaccardAtLeast(withOverlap(cand, held, held), threshold)
+    }
+  }
+
+  // The fp guard of the prefix and size bounds: t·sz can land 1 ulp ABOVE
+  // its real value (0.55 · 100 = 55.00000000000001), and a ceil()-tight
+  // bound would then drop a valid boundary pair. Subtracting it only ever
+  // ADMITS extra candidates, which the exact verify discards, so recall
+  // stays 1.0 for every threshold, not just ones that round down.
+  private val Eps = 1e-9
+
+  /** PPJoin's prefix length of a set of `sz` shingles at threshold t:
+    * sz - ceil(t·sz) + 1, with the ceil taken [[Eps]] below t·sz. One
+    * definition, as a column for the distributed joins and as an Int for
+    * [[localOverlaps]]. */
+  private def prefixLen(threshold: Double, sz: Column): Column =
+    sz - ceil(lit(threshold) * sz - lit(Eps)) + 1
+  private def prefixLen(threshold: Double, sz: Int): Int =
+    sz - math.ceil(threshold * sz - Eps).toInt + 1
+
+  /** PPJoin's size bound: J(A,B) >= t forces |A| >= t·|B| and
+    * |B| >= t·|A| ([[Eps]]-guarded), as a column and as a Boolean. */
+  private def sizesMeet(threshold: Double, a: Column, b: Column): Column =
+    a >= lit(threshold) * b - lit(Eps) && b >= lit(threshold) * a - lit(Eps)
+  private def sizesMeet(threshold: Double, a: Int, b: Int): Boolean =
+    a >= threshold * b - Eps && b >= threshold * a - Eps
+
+  /** The one-task arm of [[jaccardPairsExact]]: the same PPJoin over
+    * `sets` (id, shs), in memory in one task. Rows are read in id order;
+    * the rows of one id merge into one list that is ranked and sized (as
+    * the distributed arm's groupBy(id)), and every row pair of a candidate
+    * id pair is verified by a merge over the sorted hash sets, so
+    * duplicate ids give the same rows in both arms. Null sets never pair
+    * and null ids only count towards document frequency, as there.
+    * Emits (id_a, id_b, sz_a, sz_b, inter), one row per row pair of each
+    * candidate (id_a < id_b). */
+  private def localOverlaps(sets: DataFrame, threshold: Double): DataFrame = {
+    val id = sets.schema("id")
+    val out = StructType(Seq(id.copy(name = "id_a"), id.copy(name = "id_b"),
+      StructField("sz_a", IntegerType, false), StructField("sz_b", IntegerType, false),
+      StructField("inter", DoubleType, false)))
+    sets.coalesce(1).sortWithinPartitions("id").mapPartitions { it =>
+      val rows = it.filter(!_.isNullAt(1))
+        .map { r => val h = r.getSeq[Long](1).toArray; java.util.Arrays.sort(h); r.get(0) -> h }
+        .toArray
+      // document frequency over every row, then each shingle's place in
+      // the global (df asc, hash asc) order
+      val rank = mutable.HashMap.empty[Long, Int]
+      rows.foreach(_._2.foreach(h => rank(h) = rank.getOrElse(h, 0) + 1))
+      rank.toArray.sortBy { case (h, df) => (df, h) }.iterator.zipWithIndex
+        .foreach { case ((h, _), r) => rank(h) = r }
+      val groups = mutable.ArrayBuffer.empty[(Any, mutable.ArrayBuffer[Array[Long]])]
+      rows.foreach { case (k, h) => if (k != null) {
+        if (groups.isEmpty || groups.last._1 != k) groups += k -> mutable.ArrayBuffer.empty
+        groups.last._2 += h
+      } }
+      // inverted index of the prefixes seen so far: rank -> groups, so
+      // every candidate of group j is an earlier (smaller) id
+      val index = Array.fill(rank.size)(List.empty[Int])
+      val sz = new Array[Int](groups.length)
+      groups.indices.iterator.flatMap { j =>
+        val ranked = groups(j)._2.flatMap(_.map(rank)).toArray
+        java.util.Arrays.sort(ranked)
+        sz(j) = ranked.length
+        val prefix = ranked.take(prefixLen(threshold, sz(j)))
+        val cands = prefix.flatMap(index(_)).distinct.sorted
+          .filter(i => sizesMeet(threshold, sz(i), sz(j)))
+        prefix.foreach(r => index(r) = j :: index(r))
+        for (i <- cands.iterator; a <- groups(i)._2; b <- groups(j)._2)
+          yield Row(groups(i)._1, groups(j)._1, a.length, b.length, sortedOverlap(a, b).toDouble)
+      }
+    }(Encoders.row(out))
+  }
+
+  /** |A∩B| of two ascending arrays of distinct hashes. */
+  private def sortedOverlap(a: Array[Long], b: Array[Long]): Int = {
+    var i = 0; var j = 0; var n = 0
+    while (i < a.length && j < b.length)
+      if (a(i) < b(j)) i += 1
+      else if (a(i) > b(j)) j += 1
+      else { n += 1; i += 1; j += 1 }
+    n
   }
 
   /** Exact n-gram CONTAINMENT pairs: C(A,B) = |A∩B| / min(|A|,|B|) ≥ t.
@@ -371,14 +458,17 @@ object Dedup {
     * per pair, no corpus-wide state). Boilerplate hot shingles are the
     * skew risk → AQE skew-split on the candidate exchange; the fp-epsilon
     * on the prefix bound only ADMITS candidates (verify discards), recall
-    * stays 1.0. Requires threshold <= 1. */
+    * stays 1.0. Requires threshold <= 1.
+    *
+    * Unlike [[jaccardPairsExact]], this join has no one-task arm yet: it
+    * always takes the distributed plan. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        threshold: Double = 0.8): DataFrame = {
-    // prefix of the prospective MIN side: first |S| - ceil(t·|S|) + 1
-    // shingles in (df, hash) order (ceil via the epsilon-guarded fp bound,
-    // as in jaccardPairsExact — admits, never drops)
-    val (sets, prefix) = shinglePrefixes(docs, idCol, textCol, ShingleN, threshold,
-      sz => sz - ceil(lit(threshold) * sz - lit(1e-9)) + 1)
+    require(threshold <= 1.0, s"pair threshold must be at most 1, got $threshold")
+    val sets = graft.CacheBin.persist(shingleSets(docs, idCol, textCol, ShingleN))
+    // prefix of the prospective MIN side: its first [[prefixLen]] shingles
+    // in (df, hash) order
+    val prefix = shinglePrefixes(sets, threshold)
     val full = sets.select(col("id"), explode(col("shs")).as("sh"), size(col("shs")).as("sz"))
     // a = the smaller set (strictly, sz_a <= sz_b; ties broken by id so
     // each unordered pair is generated exactly once from one direction)
@@ -396,36 +486,36 @@ object Dedup {
       .select("id_a", "id_b", "containment")
   }
 
-  /** Front half of the exact prefix-filter pair joins. Returns
-    *  - `sets` (id, shs): each document's DISTINCT shingle hashes, from ONE
-    *    codegen'd generation, persisted (CacheBin — caller drains) because
-    *    the df aggregate, the prefix and both verify joins read it;
-    *  - `prefix` (id, sh, sz): the first `prefixLen(sz)` shingles of each
-    *    document in the global (df asc, hash asc) order, sz = |shs|.
+  /** Each document's DISTINCT shingle hashes (id, shs), from ONE codegen'd
+    * generation (ShingleHash64Expr), unpersisted: the distributed pair
+    * joins persist it (CacheBin — caller drains) because the df aggregate,
+    * the prefix and both verify joins read it. */
+  private def shingleSets(docs: DataFrame, idCol: String, textCol: String,
+                          shingleN: Int): DataFrame =
+    docs.select(col(idCol).as("id"),
+      graft.functions.ShingleHash64Expr.shingleHash64(split(col(textCol), " "), shingleN)
+        .as("shs"))
+
+  /** Front half of the distributed prefix-filter pair joins: (id, sh, sz),
+    * the first [[prefixLen]] shingles of each document of `sets` in the
+    * global (df asc, hash asc) order, sz = |shs| (the merged list's size
+    * when an id has several rows).
     * Candidate generation shuffles 8-byte shingle HASHES, not strings —
     * the prefix-filter theorem holds for any consistent global total order
     * and (df, hash) is one. A 64-bit collision could only add a candidate
     * pair; exactness comes from the verify stage either way. The ranking
     * is one groupBy(id) over (df, sh) structs, sorted and sliced in the
     * row — no window, no second sort. */
-  private def shinglePrefixes(
-      docs: DataFrame, idCol: String, textCol: String, shingleN: Int,
-      threshold: Double, prefixLen: Column => Column): (DataFrame, DataFrame) = {
-    require(threshold <= 1.0, s"pair threshold must be at most 1, got $threshold")
-    val sets = graft.CacheBin.persist(docs.select(
-      col(idCol).as("id"),
-      graft.functions.ShingleHash64Expr.shingleHash64(split(col(textCol), " "), shingleN)
-        .as("shs")))
+  private def shinglePrefixes(sets: DataFrame, threshold: Double): DataFrame = {
     val sh = sets.select(col("id"), explode(col("shs")).as("sh"))
     val dfreq = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-    val prefix = sh.join(dfreq, "sh")
+    sh.join(dfreq, "sh")
       .groupBy("id")
       .agg(array_sort(collect_list(struct(col("df"), col("sh")))).as("ranked"))
       .select(col("id"), size(col("ranked")).as("sz"), col("ranked"))
       .select(col("id"), col("sz"),
-        explode(slice(col("ranked"), lit(1), prefixLen(col("sz")).cast("int"))).as("p"))
+        explode(slice(col("ranked"), lit(1), prefixLen(threshold, col("sz")).cast("int"))).as("p"))
       .select(col("id"), col("p.sh").as("sh"), col("sz"))
-    (sets, prefix)
   }
 
   /** Verify side of the pair joins: attach the (id, shs) hashed shingle
@@ -442,15 +532,18 @@ object Dedup {
   /** |A∩B| of two distinct hash-set columns, as a double. */
   private[graft] def overlap(a: Column, b: Column): Column = size(array_intersect(a, b)).cast("double")
 
-  /** Exact Jaccard of two distinct hash-set columns with overlap `inter`
-    * ([[overlap]]), rounded to 6 places: |A∪B| = |A| + |B| − |A∩B|. */
-  private[graft] def jaccard(a: Column, b: Column, inter: Column): Column =
-    round(inter / (size(a) + size(b) - inter), 6)
+  /** Exact Jaccard of two distinct hash sets of sizes `szA`, `szB` with
+    * overlap `inter` ([[overlap]]), rounded to 6 places:
+    * |A∪B| = |A| + |B| − |A∩B|. */
+  private[graft] def jaccard(szA: Column, szB: Column, inter: Column): Column =
+    round(inter / (szA + szB - inter), 6)
 
-  /** Exact Jaccard of [[withOverlap]]'s rows, kept at >= threshold. */
-  private def jaccardAtLeast(overlapped: DataFrame, threshold: Double): DataFrame =
+  /** Exact Jaccard of overlapped rows, kept at >= threshold: the set sizes
+    * are those of [[withOverlap]]'s `shs_a`/`shs_b` unless given. */
+  private def jaccardAtLeast(overlapped: DataFrame, threshold: Double,
+      szA: Column = size(col("shs_a")), szB: Column = size(col("shs_b"))): DataFrame =
     overlapped
-      .withColumn("jaccard", jaccard(col("shs_a"), col("shs_b"), col("inter")))
+      .withColumn("jaccard", jaccard(szA, szB, col("inter")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
 

@@ -217,7 +217,7 @@ object EventStream {
       .withColumn("inter", Dedup.overlap(col("sh"), col("c_sh")))
       .withColumn("verified",
         col("c_id").isNotNull &&
-          Dedup.jaccard(col("sh"), col("c_sh"), col("inter")) >= threshold)
+          Dedup.jaccard(size(col("sh")), size(col("c_sh")), col("inter")) >= threshold)
       .select(col("doc_id"), col("text"), col("verified"))
       .as[(Long, String, Boolean)]
       .groupByKey(_._1)

@@ -38,12 +38,25 @@ class PairJobBudgetSpec extends AnyFunSuite {
     finally CacheBin.drain(blocking = true)
   }
 
+  private def jaccardPairs(t: Double) = brute((a, b) => (a & b).size.toDouble / (a | b).size, t)
+
   test("jaccardPairsExact at sf0.001: job budget") {
-    val (pairs, jobs) = measured(Dedup.jaccardPairsExact(_, "doc_id", "text", 3, 0.6))
-    val want = brute((a, b) => (a & b).size.toDouble / (a | b).size, 0.6)
+    // sf0.001's shingle table fits the one-task arm; a -1 broadcast
+    // threshold forces the distributed plan this budget pins
+    val (pairs, jobs) = TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(
+      measured(Dedup.jaccardPairsExact(_, "doc_id", "text", 3, 0.6)))
+    val want = jaccardPairs(0.6)
     assert(want.nonEmpty)
     assert(pairs == want)
-    assert(jobs == 11, s"jaccardPairsExact ran $jobs jobs")
+    assert(jobs == 15, s"jaccardPairsExact ran $jobs jobs")
+  }
+
+  test("jaccardPairsExact at sf0.001, one-task arm: job budget") {
+    val (pairs, jobs) = measured(Dedup.jaccardPairsExact(_, "doc_id", "text", 3, 0.6))
+    assert(pairs == jaccardPairs(0.6))
+    // one job: the coalesced scan, the in-memory join and the verify
+    // filter run as one task
+    assert(jobs == 1, s"jaccardPairsExact ran $jobs jobs")
   }
 
   test("containmentPairs at sf0.001: job budget") {

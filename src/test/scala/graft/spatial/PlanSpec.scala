@@ -45,20 +45,38 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("jaccard prefix candidate join is an equi-join with partial aggregation") {
+    // sf0.001's shingle table is small enough for the one-task arm; a -1
+    // broadcast threshold forces the distributed plan this test pins
+    TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val docs = spark.read.parquet(s"${TestSpark.sf001}/documents.parquet")
+      val q = graft.dedup.Dedup.jaccardPairsExact(docs, "doc_id", "text", 3, 0.6)
+      q.collect()
+      val plan = q.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastNestedLoop") && !plan.contains("Cartesian"),
+        s"prefix join must stay an equi-join:\n$plan")
+      assert(plan.contains("HashAggregate"), s"expected partial aggregation:\n$plan")
+      // ONE shingle-hash generation feeds the df aggregate, the prefix and
+      // both verify joins (a reused exchange or a re-read cache is not a
+      // second evaluation)
+      val sites = evaluationSites(q.queryExecution.executedPlan, "shingle_hash64")
+      assert(sites.size == 1, s"shingle_hash64 evaluated at ${sites.size} plan nodes:\n" +
+        sites.map(_.simpleString(400)).mkString("\n"))
+      graft.CacheBin.drain()
+    }
+  }
+
+  test("jaccard one-task arm: one shingle_hash64 node, no exchange, no cache") {
     val docs = spark.read.parquet(s"${TestSpark.sf001}/documents.parquet")
     val q = graft.dedup.Dedup.jaccardPairsExact(docs, "doc_id", "text", 3, 0.6)
+    assert(graft.CacheBin.size == 0, "the one-task arm persists nothing")
     q.collect()
-    val plan = q.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoop") && !plan.contains("Cartesian"),
-      s"prefix join must stay an equi-join:\n$plan")
-    assert(plan.contains("HashAggregate"), s"expected partial aggregation:\n$plan")
-    // ONE shingle-hash generation feeds the df aggregate, the prefix and
-    // both verify joins (a reused exchange or a re-read cache is not a
-    // second evaluation)
-    val sites = evaluationSites(q.queryExecution.executedPlan, "shingle_hash64")
-    assert(sites.size == 1, s"shingle_hash64 evaluated at ${sites.size} plan nodes:\n" +
-      sites.map(_.simpleString(400)).mkString("\n"))
-    graft.CacheBin.drain()
+    val plan = finalPlan(q.queryExecution.executedPlan)
+    val text = plan.toString
+    assert(plan.collect { case e: org.apache.spark.sql.execution.exchange.Exchange => e }.isEmpty,
+      s"unexpected exchange:\n$text")
+    assert(text.contains("Coalesce 1") && text.contains("MapPartitions"), text)
+    val sites = evaluationSites(plan, "shingle_hash64")
+    assert(sites.size == 1, s"shingle_hash64 evaluated at ${sites.size} plan nodes:\n$text")
   }
 
   /** Physical nodes whose own expressions call the function `name` —

@@ -423,20 +423,43 @@ class SimilaritySpec extends AnyFunSuite {
     assert(recall >= 0.35, s"recall $recall should beat the ~0.31 scan fraction")
   }
 
-  test("length filter keeps exact-boundary pairs at thresholds that round UP") {
+  /** jaccardPairsExact's (id_a, id_b, jaccard) rows for two documents, in
+    * each arm: as is (two rows take the one-task arm) and with a -1
+    * broadcast threshold (the distributed arm). */
+  private def boundaryPairs(a: String, b: String, t: Double): Seq[Seq[(Long, Long, Double)]] = {
     import spark.implicits._
+    Seq(Seq.empty, Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")).map { conf =>
+      TestSpark.withConf(conf: _*) {
+        val docs = Seq((1L, a), (2L, b)).toDF("doc_id", "text")
+        try Dedup.jaccardPairsExact(docs, "doc_id", "text", threshold = t)
+          .as[(Long, Long, Double)].collect().toSeq
+        finally graft.CacheBin.drain()
+      }
+    }
+  }
+
+  test("length filter keeps exact-boundary pairs at thresholds that round UP") {
     // |A|=11 ⊂ |B|=20 distinct shingles -> exact Jaccard 11/20 = 0.55, but
     // double 0.55 > 11/20, so a ceil()-based size bound would prune the
     // pair before verification (the recall-1.0 contract would break)
     val a = (0 until 13).map(i => s"w$i").mkString(" ")      // 11 3-shingles
     val b = (0 until 22).map(i => s"w$i").mkString(" ")      // 20 3-shingles
-    val docs = Seq((1L, a), (2L, b)).toDF("doc_id", "text")
-    val pairs = Dedup.jaccardPairsExact(docs, "doc_id", "text", threshold = 0.55)
-      .as[(Long, Long, Double)].collect()
-    graft.CacheBin.drain()
-    assert(pairs.map(p => (p._1, p._2)).toSeq === Seq((1L, 2L)),
-      s"boundary pair must survive the length filter: ${pairs.toSeq}")
-    assert(math.abs(pairs.head._3 - 0.55) < 1e-9)
+    for (pairs <- boundaryPairs(a, b, 0.55)) {
+      assert(pairs.map(p => (p._1, p._2)) === Seq((1L, 2L)),
+        s"boundary pair must survive the length filter: $pairs")
+      assert(math.abs(pairs.head._3 - 0.55) < 1e-9)
+    }
+  }
+
+  test("prefix length keeps exact-boundary pairs at thresholds that round UP") {
+    // |A|=100 ⊃ |B|=55 distinct shingles -> exact Jaccard 0.55, but
+    // double 0.55 * 100 = 55.00000000000001, so a ceil()-based prefix
+    // length is 45, not 46: A's prefix then holds only its 45 df-1
+    // shingles and never meets B's
+    val a = (0 until 102).map(i => s"w$i").mkString(" ")    // 100 3-shingles
+    val b = (45 until 102).map(i => s"w$i").mkString(" ")   // 55 3-shingles
+    for (pairs <- boundaryPairs(a, b, 0.55))
+      assert(pairs === Seq((1L, 2L, 0.55)), s"boundary pair must survive the prefix: $pairs")
   }
 
   test("embedNearDups = brute-force threshold pairs restricted to probed buckets") {
