@@ -309,33 +309,45 @@ object Dedup {
     * inverted-index self-join. Exact Jaccard is then verified per
     * candidate pair.
     *
-    * Two arms give the same rows and schema; the size of the shingle-hash
-    * table picks one:
-    *  - ONE TASK, when the optimizer's estimate of the (id, shs) table is
-    *    at most `spark.sql.autoBroadcastJoinThreshold` — Spark's own bound
-    *    on a table every task may hold whole, so one task holding it once
-    *    keeps the same memory promise. The table is coalesced to one
-    *    partition and [[localOverlaps]] runs the same PPJoin in memory: no
-    *    shuffle, no persist, one job. Set the threshold to -1 to force the
-    *    distributed arm.
-    *  - DISTRIBUTED otherwise: every intermediate is computed once
-    *    ([[shinglePrefixes]]): ONE persisted shingle-hash table feeds the df
-    *    aggregate, the prefix and both verify joins, and both sides of the
-    *    candidate self-join read the same prefix.
+    * Two arms give the same rows and schema. The shingle-hash table
+    * (id, shs) is persisted either way. Unless
+    * `spark.sql.autoBroadcastJoinThreshold` is -1, one job builds that
+    * cache in parallel, and the bytes it holds pick the arm:
+    *  - ONE TASK, when those bytes are at most the threshold. The cache is
+    *    coalesced to one partition and [[localOverlaps]] runs the same
+    *    PPJoin in memory on primitive arrays: no shuffle, two jobs. Near
+    *    the threshold the task held about three times the cached bytes.
+    *    The bytes are measured, not the optimizer's guess from file sizes
+    *    and default column widths, which came out 3 to 5 times smaller on
+    *    the parquet corpora measured (BENCH.md).
+    *  - DISTRIBUTED otherwise, and always at a threshold of -1, which is
+    *    the way to force this arm: every intermediate is computed once
+    *    ([[shinglePrefixes]]): the ONE persisted shingle-hash table feeds
+    *    the df aggregate, the prefix and both verify joins, and both sides
+    *    of the candidate self-join read the same prefix.
+    * On 4 cores the one-task arm beat the distributed one at every size
+    * measured, up to four times the default 10 MB threshold (BENCH.md);
+    * on many more cores a table near the threshold may run faster
+    * distributed, which is not measured.
     * Requires threshold <= 1 (a Jaccard never exceeds 1). */
   def jaccardPairsExact(
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, threshold: Double = 0.6): DataFrame = {
     require(threshold <= 1.0, s"pair threshold must be at most 1, got $threshold")
-    val sets = shingleSets(docs, idCol, textCol, shingleN)
+    // persisted: its cached bytes choose the arm, and the distributed
+    // arm's self-join reads it on both sides, where Spark does not reuse
+    // the second copy of its plan (it plans two ranking shuffles)
+    val held = graft.CacheBin.persist(shingleSets(docs, idCol, textCol, shingleN))
     val budget = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
-    if (budget >= 0 && sets.queryExecution.optimizedPlan.stats.sizeInBytes <= budget)
-      jaccardAtLeast(localOverlaps(sets, threshold), threshold, col("sz_a"), col("sz_b"))
+    val fits = budget >= 0 && {
+      held.queryExecution.toRdd.count() // one job builds the cache
+      // a fresh plan over the built cache: its stats are the bytes the
+      // cache holds, not a guess from file sizes and column widths
+      held.select("*").queryExecution.optimizedPlan.stats.sizeInBytes <= budget
+    }
+    if (fits)
+      jaccardAtLeast(localOverlaps(held, threshold), threshold, col("sz_a"), col("sz_b"))
     else {
-      val held = graft.CacheBin.persist(sets)
-      // persisted: both sides of the self-join read it, and Spark does not
-      // reuse the second copy of its plan (it plans two ranking shuffles),
-      // so without the cache the ranking would run twice
       val prefix = graft.CacheBin.persist(shinglePrefixes(held, threshold))
       // the size bound prunes in the candidate join itself, before the
       // dedup/verify stages see the pair
@@ -372,10 +384,12 @@ object Dedup {
     a >= threshold * b - Eps && b >= threshold * a - Eps
 
   /** The one-task arm of [[jaccardPairsExact]]: the same PPJoin over
-    * `sets` (id, shs), in memory in one task. Rows are read in id order;
-    * the rows of one id merge into one list that is ranked and sized (as
-    * the distributed arm's groupBy(id)), and every row pair of a candidate
-    * id pair is verified by a merge over the sorted hash sets, so
+    * `sets` (id, shs), in memory in one task, on primitive arrays. Each
+    * distinct hash is replaced by its rank in the global (df asc, hash
+    * asc) order (a bijection, so overlaps are unchanged). Rows are read in
+    * id order; the rows of one id merge into one list that is ranked and
+    * sized (as the distributed arm's groupBy(id)), and every row pair of a
+    * candidate id pair is verified by a merge over the sorted ranks, so
     * duplicate ids give the same rows in both arms. Null sets never pair
     * and null ids only count towards document frequency, as there.
     * Emits (id_a, id_b, sz_a, sz_b, inter), one row per row pair of each
@@ -385,41 +399,55 @@ object Dedup {
     val out = StructType(Seq(id.copy(name = "id_a"), id.copy(name = "id_b"),
       StructField("sz_a", IntegerType, false), StructField("sz_b", IntegerType, false),
       StructField("inter", DoubleType, false)))
+    def sorted(a: Array[Int]): Array[Int] = { java.util.Arrays.sort(a); a }
     sets.coalesce(1).sortWithinPartitions("id").mapPartitions { it =>
-      val rows = it.filter(!_.isNullAt(1))
-        .map { r => val h = r.getSeq[Long](1).toArray; java.util.Arrays.sort(h); r.get(0) -> h }
-        .toArray
-      // document frequency over every row, then each shingle's place in
-      // the global (df asc, hash asc) order
-      val rank = mutable.HashMap.empty[Long, Int]
-      rows.foreach(_._2.foreach(h => rank(h) = rank.getOrElse(h, 0) + 1))
-      rank.toArray.sortBy { case (h, df) => (df, h) }.iterator.zipWithIndex
-        .foreach { case ((h, _), r) => rank(h) = r }
-      val groups = mutable.ArrayBuffer.empty[(Any, mutable.ArrayBuffer[Array[Long]])]
-      rows.foreach { case (k, h) => if (k != null) {
-        if (groups.isEmpty || groups.last._1 != k) groups += k -> mutable.ArrayBuffer.empty
-        groups.last._2 += h
-      } }
-      // inverted index of the prefixes seen so far: rank -> groups, so
-      // every candidate of group j is an earlier (smaller) id
-      val index = Array.fill(rank.size)(List.empty[Int])
-      val sz = new Array[Int](groups.length)
-      groups.indices.iterator.flatMap { j =>
-        val ranked = groups(j)._2.flatMap(_.map(rank)).toArray
-        java.util.Arrays.sort(ranked)
-        sz(j) = ranked.length
-        val prefix = ranked.take(prefixLen(threshold, sz(j)))
-        val cands = prefix.flatMap(index(_)).distinct.sorted
-          .filter(i => sizesMeet(threshold, sz(i), sz(j)))
-        prefix.foreach(r => index(r) = j :: index(r))
-        for (i <- cands.iterator; a <- groups(i)._2; b <- groups(j)._2)
-          yield Row(groups(i)._1, groups(j)._1, a.length, b.length, sortedOverlap(a, b).toDouble)
+      val rows = it.filter(!_.isNullAt(1)).map(r => r.get(0) -> r.getSeq[Long](1).toArray).toArray
+      // the distinct hashes in ascending order with their document
+      // frequency over every row, then each one's rank
+      val all = rows.flatMap(_._2)
+      java.util.Arrays.sort(all)
+      val nd = all.indices.count(i => i == 0 || all(i) != all(i - 1))
+      val hs = new Array[Long](nd); val df = new Array[Int](nd); var d = -1
+      for (i <- all.indices) {
+        if (i == 0 || all(i) != all(i - 1)) { d += 1; hs(d) = all(i) }
+        df(d) += 1
+      }
+      val order = Array.tabulate(nd)(k => df(k).toLong << 32 | k)
+      java.util.Arrays.sort(order)
+      val rankOf = new Array[Int](nd)
+      order.indices.foreach(r => rankOf(order(r).toInt) = r)
+      val byId = rows.collect { case (k, h) if k != null =>
+        k -> sorted(h.map(x => rankOf(java.util.Arrays.binarySearch(hs, 0, nd, x)))) }
+      val starts = byId.indices.filter(i => i == 0 || byId(i)._1 != byId(i - 1)._1) :+ byId.length
+      // inverted index of the prefixes seen so far, as linked lists in
+      // arrays: rank -> earlier groups (smaller ids)
+      val head = Array.fill(nd)(-1); val next = new Array[Int](all.length)
+      val post = new Array[Int](all.length); var np = 0
+      val sz = new Array[Int](starts.length - 1); val mark = Array.fill(sz.length)(-1)
+      sz.indices.iterator.flatMap { j =>
+        val mine = starts(j) until starts(j + 1)
+        val merged = sorted(Array.concat(mine.map(byId(_)._2): _*))
+        sz(j) = merged.length
+        mark(j) = j // mark(i) == j: i is j or already a candidate of j
+        val cands = mutable.ArrayBuilder.make[Int]
+        merged.take(prefixLen(threshold, sz(j))).foreach { r =>
+          var p = head(r)
+          while (p >= 0) {
+            val i = post(p)
+            if (mark(i) != j && sizesMeet(threshold, sz(i), sz(j))) { mark(i) = j; cands += i }
+            p = next(p)
+          }
+          post(np) = j; next(np) = head(r); head(r) = np; np += 1
+        }
+        for (i <- sorted(cands.result()).iterator; a <- starts(i) until starts(i + 1); b <- mine)
+          yield Row(byId(a)._1, byId(b)._1, byId(a)._2.length, byId(b)._2.length,
+            sortedOverlap(byId(a)._2, byId(b)._2).toDouble)
       }
     }(Encoders.row(out))
   }
 
-  /** |A∩B| of two ascending arrays of distinct hashes. */
-  private def sortedOverlap(a: Array[Long], b: Array[Long]): Int = {
+  /** |A∩B| of two ascending arrays of distinct ranks. */
+  private def sortedOverlap(a: Array[Int], b: Array[Int]): Int = {
     var i = 0; var j = 0; var n = 0
     while (i < a.length && j < b.length)
       if (a(i) < b(j)) i += 1
@@ -529,8 +557,11 @@ object Dedup {
       .join(setsB.withColumnRenamed("id", "id_b").withColumnRenamed("shs", "shs_b"), "id_b")
       .withColumn("inter", overlap(col("shs_a"), col("shs_b")))
 
-  /** |A∩B| of two distinct hash-set columns, as a double. */
-  private[graft] def overlap(a: Column, b: Column): Column = size(array_intersect(a, b)).cast("double")
+  /** |A∩B| of two distinct hash-set columns, as a double; null when either
+    * set is null (`size` would give -1 there, and -1 / (-1 + -1 + 1) is a
+    * Jaccard of 1.0 for two null sets). */
+  private[graft] def overlap(a: Column, b: Column): Column =
+    array_size(array_intersect(a, b)).cast("double")
 
   /** Exact Jaccard of two distinct hash sets of sizes `szA`, `szB` with
     * overlap `inter` ([[overlap]]), rounded to 6 places:

@@ -3,7 +3,7 @@ package graft.dedup
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, split}
 import org.apache.spark.sql.types.{IntegerType, StructType}
 import graft.{CacheBin, TestSpark}
 
@@ -11,8 +11,8 @@ import graft.{CacheBin, TestSpark}
   * broadcast threshold) and a distributed arm. Each input here runs twice,
   * as is and with a -1 broadcast threshold, and the two runs must give the
   * same rows (as a multiset) and the same schema. Each run also shows
-  * which arm it took: the one-task arm persists nothing, the distributed
-  * arm persists its shingle table and its prefix. */
+  * which arm it took: the one-task arm persists its shingle table only,
+  * the distributed arm its shingle table and its prefix. */
 class JaccardArmsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -30,7 +30,7 @@ class JaccardArmsSpec extends AnyFunSuite {
     val (local, localSchema, localHeld) = run(docs, t)
     val (dist, distSchema, distHeld) =
       TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(run(docs, t))
-    assert(localHeld == 0, "the one-task arm must persist nothing")
+    assert(localHeld == 1, "the one-task arm persists its shingle table only")
     assert(distHeld == 2, "the distributed arm persists its shingle table and prefix")
     assert(localSchema == distSchema)
     assert(local == dist)
@@ -38,6 +38,25 @@ class JaccardArmsSpec extends AnyFunSuite {
   }
 
   private def words(from: Int, until: Int) = (from until until).map(i => s"w$i").mkString(" ")
+
+  test("the arm is chosen by the bytes of the materialized shingle table") {
+    val docs = spark.read.parquet(s"${TestSpark.sf001}/documents.parquet")
+    val sets = docs.select(col("doc_id").as("id"), graft.functions.ShingleHash64Expr
+      .shingleHash64(split(col("text"), " "), 3).as("shs"))
+    // the optimizer's guess from the file size and default column widths,
+    // then the bytes the cached table holds
+    val guess = sets.queryExecution.optimizedPlan.stats.sizeInBytes
+    val held = sets.persist()
+    held.count()
+    val bytes = held.select("*").queryExecution.optimizedPlan.stats.sizeInBytes
+    held.unpersist(blocking = true)
+    assert(guess < bytes - 1, s"estimate $guess, cached $bytes")
+    def persisted(budget: BigInt) =
+      TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold" -> budget.toString)(
+        run(docs, 0.6)._3)
+    assert(persisted(bytes) == 1, "a table within the budget takes the one-task arm")
+    assert(persisted(bytes - 1) == 2, "a table over the budget takes the distributed arm")
+  }
 
   test("sf0.001 and sf0.01 documents") {
     for (sf <- Seq(TestSpark.sf001, TestSpark.sf01))
@@ -67,8 +86,13 @@ class JaccardArmsSpec extends AnyFunSuite {
     val docs = Seq[(Long, String)](
       (1L, words(0, 20)), (1L, words(0, 19) + " x"), (2L, words(0, 20)),
       (3L, words(1, 21)), (3L, null), (3L, words(0, 20)), (4L, words(40, 60)),
-      (4L, words(40, 60))).toDF("doc_id", "text")
-    assert(bothArms(docs).nonEmpty)
+      (4L, words(40, 60)), (5L, null), (5L, words(70, 90)), (6L, null),
+      (6L, words(70, 90))).toDF("doc_id", "text")
+    val rows = bothArms(docs)
+    // ids 5 and 6 pair once, through their shared text: their two null
+    // rows are no pair (size(null) = -1 once gave them a Jaccard of 1.0)
+    assert(rows.count(r => r.getLong(0) == 5L && r.getLong(1) == 6L) == 1)
+    assert(rows.exists(_.getLong(0) < 5L))
   }
 
   test("an int id column keeps its type") {

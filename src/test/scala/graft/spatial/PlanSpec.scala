@@ -65,10 +65,11 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("jaccard one-task arm: one shingle_hash64 node, no exchange, no cache") {
+  test("jaccard one-task arm: one shingle_hash64 node, no exchange, one cache") {
     val docs = spark.read.parquet(s"${TestSpark.sf001}/documents.parquet")
+    graft.CacheBin.drain(blocking = true)
     val q = graft.dedup.Dedup.jaccardPairsExact(docs, "doc_id", "text", 3, 0.6)
-    assert(graft.CacheBin.size == 0, "the one-task arm persists nothing")
+    assert(graft.CacheBin.size == 1, "the one-task arm persists its shingle table only")
     q.collect()
     val plan = finalPlan(q.queryExecution.executedPlan)
     val text = plan.toString
@@ -77,6 +78,7 @@ class PlanSpec extends AnyFunSuite {
     assert(text.contains("Coalesce 1") && text.contains("MapPartitions"), text)
     val sites = evaluationSites(plan, "shingle_hash64")
     assert(sites.size == 1, s"shingle_hash64 evaluated at ${sites.size} plan nodes:\n$text")
+    graft.CacheBin.drain()
   }
 
   /** Physical nodes whose own expressions call the function `name` —
